@@ -305,13 +305,18 @@ def test_assignment_quality_values(spark):
     assert math.isnan(assignment_quality(empty, cents))
 
 
-def test_quantizer_tables_cache_hits_and_invalidates(spark, dirs):
+def test_quantizer_tables_cache_hits_and_invalidates(
+    spark, dirs, tmp_path
+):
     """The per-generation quantizer-table cache (r12): repeated calls
     within one generation return the SAME DataFrame objects (so the
     driver-side centroid memo also hits); a committed rebuild bumps
     the _UPTO marker and the next call serves the NEW generation's
-    rows, never the stale cache."""
+    rows, never the stale cache; a full cache evicts least recently
+    used first."""
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        _GENERATION_CACHE_MAX,
+        _Generation,
         _quantizer_tables,
         rebuild_semantic_quantizer,
     )
@@ -321,15 +326,41 @@ def test_quantizer_tables_cache_hits_and_invalidates(spark, dirs):
     materialize_semantic_quantizer(
         corpus, cells, centroids=_axis_centroids(spark)
     )
-    c1, b1 = _quantizer_tables(spark, cells)
-    c2, b2 = _quantizer_tables(spark, cells)
-    assert c1 is c2 and b1 is b2  # generation cache hit
+    c1, b1, q1 = _quantizer_tables(spark, cells)
+    c2, b2, q2 = _quantizer_tables(spark, cells)
+    assert c1 is c2 and b1 is b2 and q1 is q2  # generation cache hit
     ids_gen0 = {r.vec_id for r in b1.collect()}
 
     # accept a batch, then rebuild over corpus + accepted (gen 1)
     screen_semantic_micro_batch(_z_fan(spark), 0, corpus, acc, cells)
     rebuild_semantic_quantizer(corpus, acc, cells, upto_batch=1)
-    c3, b3 = _quantizer_tables(spark, cells)
+    c3, b3, _ = _quantizer_tables(spark, cells)
     assert b3 is not b1  # generation bump missed the cache
     ids_gen1 = {r.vec_id for r in b3.collect()}
     assert ids_gen1 > ids_gen0  # new generation covers the batch rows
+
+    # eviction order: past its bound the cache drops the entry used
+    # longest ago, never the newest.  Plain marker files stand in for
+    # committed generations, so no Spark job runs.
+    gens = []
+    for i in range(_GENERATION_CACHE_MAX + 1):
+        live = tmp_path / f"gen{i}"
+        live.mkdir()
+        (live / "_UPTO=0").touch()
+        gens.append(_Generation(spark, f"{live}_rebuild", str(live)))
+    loads = []
+
+    def loader(live):
+        loads.append(live)
+        return (live,)
+
+    for g in gens[:-1]:
+        g.load(loader)
+    gens[0].load(loader)  # the oldest entry becomes the newest
+    gens[-1].load(loader)  # one past the bound: evicts gens[1]
+    loads.clear()
+    for g in gens[:1] + gens[2:]:
+        g.load(loader)
+    assert loads == []  # all still cached
+    gens[1].load(loader)
+    assert loads == [gens[1].live]

@@ -152,6 +152,62 @@ def test_materialize_rebuilds_partial_base_without_success_marker(
     assert still == {0, 1}  # untouched: marker gated the skip
 
 
+def test_pipeline_rebuilds_signatures_of_another_format(spark, dirs):
+    """Stored banded keys of another format (no ``_FORMAT`` marker,
+    as in every signature dir written before the keys were
+    versioned) never equal a live batch's keys, so the screen would
+    admit duplicates of every stored doc.  Pipeline start must drop
+    the dir and rebuild base from the corpus and incr from the
+    accepted lake, so copies of a corpus doc AND of an
+    already-accepted doc are both rejected."""
+    import glob
+    import os
+
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        _list_batch_ids,
+        materialize_corpus_signatures,
+        screen_micro_batch,
+    )
+
+    src, acc, ckpt = dirs
+    sig = tempfile.mkdtemp(prefix="sig_")
+    schema = "doc_id long, text string"
+    try:
+        corpus = spark.createDataFrame([(0, T["c0"])], schema)
+        materialize_corpus_signatures(corpus, sig)
+        # an earlier deployment accepted doc 1 (partition -1: strictly
+        # before the stream's first batch)
+        screen_micro_batch(
+            spark.createDataFrame([(1, T["u1"])], schema), -1, corpus,
+            acc, signature_dir=sig,
+        )
+        for part in ("base", "incr/batch_id=-1"):
+            rows = spark.read.parquet(f"{sig}/{part}").collect()
+            spark.createDataFrame(
+                [(r.doc_id, r.bs + 1) for r in rows], "doc_id long, bs long"
+            ).write.mode("overwrite").parquet(f"{sig}/{part}")
+        for marker in glob.glob(f"{sig}/_FORMAT=*"):
+            os.remove(marker)
+
+        stream = spark.readStream.schema(schema).json(src)
+        q = run_dedup_ingest_pipeline(
+            stream, corpus, acc, ckpt, signature_dir=sig
+        )
+        try:
+            spark.createDataFrame(
+                [(10, T["c0"]), (11, T["u1"]), (12, T["u2"])], schema
+            ).coalesce(1).write.mode("append").json(src)
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        accepted = {r.doc_id for r in spark.read.parquet(acc).collect()}
+        assert accepted == {1, 12}
+        assert glob.glob(f"{sig}/_FORMAT=*")
+        assert _list_batch_ids(spark, f"{sig}/incr") == [-1, 0]
+    finally:
+        shutil.rmtree(sig, ignore_errors=True)
+
+
 def test_streaming_ingest_with_materialized_signatures(spark, dirs):
     """The signature_dir path must produce the SAME accept/reject
     decisions as the self-contained screen while maintaining the
@@ -788,8 +844,8 @@ def test_bloom_saturation_rebuild_swaps_generation(spark, dirs):
 
 def test_bloom_rebuild_crash_recovery_both_phases(spark, dirs):
     """The staged-generation protocol for the bloom rebuild: a
-    staging dir WITHOUT its _UPTO marker rolls back (old base
-    intact); one WITH the marker rolls forward (swap + covered-incr
+    staging dir WITHOUT its _SUCCESS commit record rolls back (old
+    base intact); one WITH it rolls forward (swap + covered-incr
     deletes completed by recovery)."""
     import os
     import tempfile
