@@ -23,6 +23,21 @@ Design for the micro-batch engine:
   the batch's own near-dup pairs, so two copies arriving in one
   trigger can't both slip in.
 
+One trigger body (``_Lake.trigger``) serves all three drivers.  It
+checkpoints and counts the incoming batch ONCE, then runs the gates
+and screens reject-cheapest-first, each on the survivors of the last:
+
+    drift -> quality -> exact -> span -> near_dup -> semantic
+          -> write -> increments
+
+(profile scan, broadcast-join score, hash screen, window excision,
+shingle bucket-join, in-cell vector scan).  A stage runs only when its
+model or artifact dir is configured; the text stages need a text
+corpus, the semantic stage ``cells_dir``.  ``write`` is the one
+accepted-partition overwrite, and ``increments`` derive every artifact
+increment from the same materialized ``kept`` frame, so no artifact
+asserts a row the lake doesn't hold.
+
 Scale shape: per-trigger cost is |batch| x local-neighborhood (the
 incremental screen's contract — bucket-join vs corpus signatures,
 candidate-only corpus re-shingle), never corpus x corpus.  With
@@ -803,8 +818,8 @@ def screen_micro_batch(
     span_dir: str | None = None,
     span_window_tokens: int = 16,
 ) -> tuple[int, int]:
-    """One micro-batch of the ingest screen (the foreachBatch body,
-    exposed for direct testing of the replay contract): screen
+    """One micro-batch of the ingest screen (the trigger's screen
+    body, exposed for direct testing of the replay contract): screen
     ``batch_df`` against the static corpus + accepted partitions
     STRICTLY before ``batch_id``, write survivors idempotently to
     ``accepted_dir/batch_id=N``.  Returns (n_batch, n_accepted) —
@@ -843,26 +858,9 @@ def screen_micro_batch(
     hashes as ``span_dir/incr/batch_id=N`` (the signature-table
     contract: strict-cutoff reads, idempotent per-partition
     overwrites, compaction-foldable)."""
-    spark = batch_df.sparkSession
-    cutoff = batch_id if corpus_upto is None else corpus_upto
-    n_in, accepted = _screen_text_core(
-        batch_df, cutoff, corpus_docs, accepted_dir,
-        threshold, shingle_n, n_bands, signature_dir, exact_dir,
-        span_dir, span_window_tokens,
-    )
-    # idempotent per-batch write: replaying batch N overwrites its
-    # own partition, never touches earlier ones
-    accepted_path = f"{accepted_dir}/batch_id={batch_id}"
-    accepted.write.mode("overwrite").parquet(accepted_path)
-    _write_text_increments(
-        spark, accepted_path, batch_id, shingle_n, n_bands,
-        signature_dir, exact_dir, span_dir, span_window_tokens,
-    )
-    # count the PARTITION JUST WRITTEN, not `accepted` — a second
-    # action on the lazy screen plan would re-run the whole bucket
-    # join + verify, doubling every trigger's cost; the parquet count
-    # resolves from footer metadata
-    return n_in, spark.read.parquet(accepted_path).count()
+    lake = _Lake.of(batch_df.sparkSession, locals())
+    batch, n_in = lake.checkpoint(batch_df)
+    return n_in, lake.screen(batch, batch_id, corpus_upto)
 
 
 def _screen_text_core(
@@ -878,11 +876,11 @@ def _screen_text_core(
     span_dir: str | None = None,
     span_window_tokens: int = 16,
     stage_sec: dict | None = None,
-) -> tuple[int, DataFrame]:
-    """The textual screen WITHOUT the lake write — (n_in, accepted
-    rows as a lazy frame over the checkpointed batch).  Split out so
-    the unified multimodal pipeline can interpose the semantic stage
-    between the screen and the single accepted-partition write.
+) -> DataFrame:
+    """The text leg of the one screen body (:meth:`_Lake.screen`):
+    the accepted (doc_id, text) rows of a MATERIALIZED batch as a lazy
+    frame.  The batch feeds three consumers (corpus screen, self-pair
+    screen, final anti-join), so it must not replay its source.
     ``stage_sec`` (optional) accumulates per-stage wall seconds at
     the eager stages (exact / span); the near-dup plan returned here
     is lazy, so its cost lands wherever the caller materializes."""
@@ -902,11 +900,6 @@ def _screen_text_core(
             spark.read.parquet(f"{signature_dir}/base"),
             f"{signature_dir}/incr", cutoff,
         )
-    # the batch feeds three consumers (corpus screen, self-pair
-    # screen, final anti-join); micro-batches are small by
-    # construction, so materialize once
-    batch_df = batch_df.localCheckpoint(eager=True)
-    n_in = batch_df.count()
     if exact_dir is not None:
         # exact copies die here (cheap); survivors re-materialize so
         # the three near-dup consumers don't replay the hash screen
@@ -973,35 +966,25 @@ def _screen_text_core(
         "doc_id",
         "left_anti",
     )
-    return n_in, accepted
+    return accepted
 
 
 def _write_text_increments(
     spark,
-    accepted_path: str,
+    accepted_rows: DataFrame,
     batch_id: int,
     shingle_n: int,
     n_bands: int,
     signature_dir: str | None,
     exact_dir: str | None,
-    span_dir: str | None = None,
-    span_window_tokens: int = 16,
-    accepted_rows: DataFrame | None = None,
+    span_dir: str | None,
+    span_window_tokens: int,
 ) -> None:
     """Signature/exact-screen maintenance for one ACCEPTED partition,
     same idempotent per-partition layout as the rows.
-
-    ``accepted_rows`` (optional) is a MATERIALIZED, few-partition
-    frame holding the (doc_id, text) of exactly the rows at
-    ``accepted_path`` — a caller that just wrote the partition from a
-    checkpointed frame passes it so maintenance never touches the
-    parquet.  Without it the partition is read from disk — ONCE, and
-    checkpointed only when more than one build will consume it (at
-    micro-batch sizes the per-job fixed cost of independent rebuilds
-    dominated the multimodal ingest wall — 55-60% measured, VERDICT
-    r10 #1 — but for a SINGLE consumer the checkpoint is pure added
-    wall: the signature-only text probe measured ~30% slower with an
-    unconditional materialize, r11).
+    ``accepted_rows`` is the MATERIALIZED, few-partition frame the
+    partition was written from, so maintenance never touches the
+    parquet and describes exactly the written rows.
 
     When two or more of the signature, exact-hash and window-hash
     builds are active, their plans are UNIONED and materialized in
@@ -1022,21 +1005,7 @@ def _write_text_increments(
     )
     if n_fused == 0:
         return
-    # the bloom tree-reduce is a second consumer of the exact rows
-    n_consumers = n_fused + (1 if exact_dir is not None else 0)
-    if accepted_rows is not None:
-        rows = accepted_rows.select("doc_id", "text")
-    else:
-        # the batch is micro by contract — the shingle/minhash/window
-        # stages' per-partition overhead dominates at 32 partitions
-        # for a few thousand rows, hence 4
-        rows = (
-            spark.read.parquet(accepted_path)
-            .select("doc_id", "text")
-            .coalesce(4)
-        )
-        if n_consumers > 1:
-            rows = rows.localCheckpoint(eager=True)
+    rows = accepted_rows.select("doc_id", "text")
     null = F.lit(None)
     null_id = null.cast(rows.schema["doc_id"].dataType).alias("doc_id")
     # (incr dir, derivation in the shared (doc_id, bs, wh) shape,
@@ -1079,9 +1048,8 @@ def _write_text_increments(
     if len(builds) > 1:
         # ONE job computes every derivation; the writes below are
         # cheap filters over the materialized union.  With a single
-        # build the fused machinery (rows checkpoint + union
-        # checkpoint + filter-write) would turn one Spark job into
-        # three.
+        # build the fused machinery (union checkpoint + filter-write)
+        # would turn one Spark job into two.
         fused = frames[0].withColumn("kind", F.lit(0))
         for i, frame in enumerate(frames[1:], 1):
             fused = fused.unionByName(frame.withColumn("kind", F.lit(i)))
@@ -1097,21 +1065,22 @@ def _write_text_increments(
 
 @dataclass
 class _Lake:
-    """The artifact lifecycle the three drivers and
-    :func:`release_held_batches` share, built from the configured dirs
-    (None = that stage is off).  :meth:`open` recovers and
-    materializes every artifact at pipeline start; :meth:`start` runs
-    each trigger as :meth:`maintain` (pending quantizer rebuild, the
-    ``compact_every`` fold, the bloom density probe) followed by the
-    driver's screen; :meth:`hold` is the drift HOLD."""
+    """The artifact lifecycle and the one trigger body that the three
+    drivers, the three direct screens and :func:`release_held_batches`
+    share, built from their own arguments (None = that stage is off).
+    :meth:`open` recovers and materializes every artifact at pipeline
+    start; :meth:`start` runs :meth:`trigger` per micro-batch."""
 
     spark: object
     accepted_dir: str
+    corpus_docs: DataFrame | None = None
+    corpus_emb: DataFrame | None = None
     signature_dir: str | None = None
     exact_dir: str | None = None
     span_dir: str | None = None
     cells_dir: str | None = None
     drift_dir: str | None = None
+    threshold: float = 0.5
     shingle_n: int = 3
     n_bands: int = 8
     bloom_expected_items: int = 1_000_000
@@ -1122,25 +1091,46 @@ class _Lake:
     bloom_rebuild_growth: float = 4.0
     on_bloom_density: Callable[[int, float], None] | None = None
     span_window_tokens: int = 16
+    semantic_threshold: float = 0.9
+    method: str = "sql"
+    max_cell_size: int | None = None
     centroids: DataFrame | None = None
     n_cells: int | None = None
     vec_col: str = "embedding"
+    #: the semantic stage's row key; ``doc_id`` whenever the text
+    #: stages run too
     id_col: str = "vec_id"
     seed: int = 42
+    #: semantic drift probe: None = off
+    drift_threshold: float | None = None
+    on_drift: Callable[[int, float], None] | None = None
+    quality_model: DataFrame | None = None
+    quality_threshold: float = 0.0
+    quality_n_buckets: int = 1024
+    quality_seed: int = 7
+    quality_dir: str | None = None
+    quality_negatives: DataFrame | None = None
+    quality_drift_nats: float = 2.0
+    on_quality_drift: Callable[[int, float], None] | None = None
     drift_cols: tuple[str, ...] = ("text",)
     drift_null_jump: float = 0.02
     drift_distinct_drop: float = 0.5
     on_hold: Callable[[int, list[str]], None] | None = None
+    on_batch: Callable[[int, int, int], None] | None = None
+    stage_sec: dict | None = None
     compact_every: int | None = None
     target_file_bytes: int = 128 * 1024 * 1024
-    #: set by the semantic drift probe: re-cluster the quantizer at
-    #: the START of the next trigger
+    #: set by the drift probes: rebuild the quantizer / retrain the
+    #: quality model at the START of the next trigger.  Driver-side
+    #: only: a crash loses the flag, but the drift persists in the
+    #: data and the next drifted batch sets it again.
     quantizer_stale: bool = False
+    quality_stale: bool = False
 
     @classmethod
     def of(cls, spark, args: dict) -> _Lake:
-        """The lake a driver configures: its fields are named after the
-        drivers' parameters, so a driver hands over ``locals()`` (taken
+        """The lake a caller configures: its fields are named after the
+        callers' parameters, so a caller hands over ``locals()`` (taken
         before it binds any other name) and each field it lacks keeps
         its default."""
         names = {f.name for f in fields(cls)} & set(args) - {"spark"}
@@ -1160,13 +1150,8 @@ class _Lake:
                 dirs.append(f"{self.exact_dir}/bloom/incr")
         return dirs
 
-    def open(
-        self,
-        corpus_docs: DataFrame | None = None,
-        corpus_emb: DataFrame | None = None,
-    ) -> _Lake:
-        spark = self.spark
-        self.corpus_docs, self.corpus_emb = corpus_docs, corpus_emb
+    def open(self) -> _Lake:
+        spark, corpus_docs = self.spark, self.corpus_docs
         # finish any compaction or rebuild a crash interrupted BEFORE
         # the first screen reads the lake (the write-ahead recovery
         # contract)
@@ -1176,6 +1161,8 @@ class _Lake:
             recover_exact_screen(spark, self.exact_dir)
         if self.cells_dir is not None:
             recover_semantic_quantizer(spark, self.cells_dir)
+        if self.quality_dir is not None:
+            recover_quality_model(spark, self.quality_dir)
         if self.signature_dir is not None:
             _materialize_signatures(
                 corpus_docs, self.signature_dir, self.shingle_n,
@@ -1192,8 +1179,23 @@ class _Lake:
             )
         if self.cells_dir is not None:
             materialize_semantic_quantizer(
-                corpus_emb, self.cells_dir, self.centroids, self.n_cells,
-                self.vec_col, self.id_col, self.seed,
+                self.corpus_emb, self.cells_dir, self.centroids,
+                self.n_cells, self.vec_col, self.id_col, self.seed,
+            )
+        if self.quality_dir is not None:
+            materialize_quality_model(
+                corpus_docs, self.quality_dir, self.quality_model,
+                self.quality_n_buckets, self.quality_seed,
+            )
+            # pin the generation now, not inside the first trigger
+            _load_quality_generation(spark, self.quality_dir)
+            self.quality_negatives = self.quality_negatives.localCheckpoint(
+                eager=True
+            )
+        elif self.quality_model is not None:
+            # the model is read on every trigger: pin the tiny frame once
+            self.quality_model = self.quality_model.localCheckpoint(
+                eager=True
             )
         self.baseline = None
         if self.drift_dir is not None:
@@ -1254,10 +1256,7 @@ class _Lake:
                 growth=self.bloom_rebuild_growth,
             )
 
-    def hold(
-        self, batch_df: DataFrame, batch_id: int,
-        stage_sec: dict | None = None,
-    ) -> bool:
+    def hold(self, batch_df: DataFrame, batch_id: int) -> bool:
         """Drift HOLD: a MATERIALIZED batch raising a schema /
         null-jump / distinct-collapse alarm against the baseline is
         dead-lettered WHOLE to ``drift_dir/held/batch_id=N`` (same
@@ -1267,7 +1266,7 @@ class _Lake:
         is untouched.  True when held."""
         if self.baseline is None:
             return False
-        with _staged(stage_sec, "drift"):
+        with _staged(self.stage_sec, "drift"):
             alarms = _batch_drift_alarms(
                 self.baseline, batch_df, self.drift_cols,
                 self.drift_null_jump, self.drift_distinct_drop,
@@ -1285,18 +1284,187 @@ class _Lake:
         for d in self.batch_dirs():
             _delete_batch_partition(self.spark, d, batch_id)
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_location: str,
-        screen: Callable[[DataFrame, int], None],
-    ) -> StreamingQuery:
-        def trigger(batch_df: DataFrame, batch_id: int) -> None:
-            self.maintain(batch_id)
-            screen(batch_df, batch_id)
+    def checkpoint(self, batch_df: DataFrame) -> tuple[DataFrame, int]:
+        """The ONE materialization of an incoming batch, and its row
+        count: every gate and screen after it reads these blocks, so
+        no stage replays the batch's source."""
+        with _staged(self.stage_sec, "batch_ckpt"):
+            batch = batch_df.localCheckpoint(eager=True)
+            return batch, batch.count()
 
+    def quality_kept(self, batch: DataFrame, batch_id: int) -> DataFrame:
+        """The quality gate: the FULL rows of ``batch`` the model
+        keeps, materialized — a semi-join on the verdict, so columns
+        beyond (doc_id, text), such as a held row's embedding, stay
+        aligned with their text.  With ``quality_dir`` the model is
+        the lake generation: a pending retrain runs first, and the
+        mean score of the whole batch is probed against the
+        generation's baseline."""
+        if self.quality_model is None:
+            return batch
+        from kafka_sparkstreaming_sbt_spark.operators.classify import (
+            nb_score,
+        )
+        from kafka_sparkstreaming_sbt_spark.operators.dsir import _MICRO
+
+        spark, qdir = self.spark, self.quality_dir
+        with _staged(self.stage_sec, "quality"):
+            model = self.quality_model
+            if qdir is not None:
+                if self.quality_stale:
+                    # staleness response at the START of the trigger:
+                    # only checkpoint-committed batches feed the retrain
+                    rebuild_quality_model(
+                        spark, self.corpus_docs, self.accepted_dir,
+                        self.quality_negatives, qdir, batch_id,
+                        n_buckets=self.quality_n_buckets,
+                        seed=self.quality_seed,
+                    )
+                    self.quality_stale = False
+                model, baseline = _load_quality_generation(spark, qdir)
+            scored = nb_score(
+                batch, model,
+                n_buckets=self.quality_n_buckets, seed=self.quality_seed,
+            )
+            if qdir is not None:
+                # score ONCE: the kept-slice semi-join and the drift
+                # probe both read the pinned integer scores
+                scored = scored.localCheckpoint(eager=True)
+                # drift probe on the FULL scored batch, not the kept
+                # slice: a model aged enough to wrongly reject the new
+                # register would keep its own blind spot out of a
+                # kept-only probe and never trigger its cure
+                mean = scored.agg(F.avg("score_micro")).collect()[0][0]
+                if mean is not None:
+                    gap = abs(float(mean) - baseline) / _MICRO
+                    if gap > self.quality_drift_nats:
+                        self.quality_stale = True
+                        if self.on_quality_drift is not None:
+                            self.on_quality_drift(batch_id, round(gap, 6))
+            kept = scored.filter(
+                F.col("score_micro")
+                > F.lit(int(self.quality_threshold * _MICRO))
+            )
+            return batch.join(
+                kept.select("doc_id"), "doc_id", "left_semi"
+            ).localCheckpoint(eager=True)
+
+    def screen(
+        self, batch: DataFrame, batch_id: int,
+        corpus_upto: int | None = None,
+    ) -> int:
+        """The one screen body: screen a MATERIALIZED batch against
+        the corpus as of ``corpus_upto`` (default ``batch_id``), write
+        the survivors to ``accepted_dir/batch_id=N`` and their
+        artifact increments.  Returns n_accepted.  The text leg runs
+        when there is a text corpus, the semantic leg when
+        ``cells_dir`` is set; with both, the semantic leg sees only
+        the text leg's survivors, and the accepted rows carry the text
+        leg's (possibly span-cleaned) text with the batch's vectors."""
+        stage_sec, id_col = self.stage_sec, self.id_col
+        cutoff = batch_id if corpus_upto is None else corpus_upto
+        kept = None
+        if self.corpus_docs is not None:
+            text_ok = _screen_text_core(
+                batch, cutoff, self.corpus_docs, self.accepted_dir,
+                self.threshold, self.shingle_n, self.n_bands,
+                self.signature_dir, self.exact_dir, self.span_dir,
+                self.span_window_tokens, stage_sec,
+            )
+            # the near-dup plan runs HERE, once; its survivors feed
+            # the semantic prune, the write and every increment.  The
+            # batch is micro by contract — the shingle/minhash/window
+            # stages' per-partition overhead dominates at 32
+            # partitions for a few thousand rows, hence 4
+            with _staged(stage_sec, "near_dup"):
+                kept = text_ok.coalesce(4).localCheckpoint(eager=True)
+        if self.cells_dir is not None:
+            with _staged(stage_sec, "semantic"):
+                vecs = batch.select(id_col, self.vec_col)
+                if kept is not None:
+                    vecs = vecs.join(
+                        kept.select(id_col), id_col, "left_semi"
+                    ).localCheckpoint(eager=True)
+                verdicts = _screen_semantic_core(
+                    vecs, cutoff, self.corpus_emb, self.accepted_dir,
+                    self.cells_dir, self.semantic_threshold,
+                    self.vec_col, id_col, self.method, self.max_cell_size,
+                )
+        with _staged(stage_sec, "write_accept"):
+            if kept is None:
+                kept = verdicts
+            elif self.cells_dir is not None:
+                # (doc_id, text, cell_id): batch ids are unique, so
+                # the joins below drop nothing
+                kept = (
+                    kept.join(verdicts, id_col)
+                    .coalesce(4)
+                    .localCheckpoint(eager=True)
+                )
+            n_accepted = kept.count()
+            rows = kept.drop("cell_id")
+            if self.cells_dir is not None:
+                rows = rows.join(batch.select(id_col, self.vec_col), id_col)
+            # idempotent per-batch write: replaying batch N overwrites
+            # its own partition, never touches earlier ones
+            rows.write.mode("overwrite").parquet(
+                f"{self.accepted_dir}/batch_id={batch_id}"
+            )
+        with _staged(stage_sec, "increments"):
+            if self.corpus_docs is not None:
+                _write_text_increments(
+                    self.spark, kept, batch_id, self.shingle_n,
+                    self.n_bands, self.signature_dir, self.exact_dir,
+                    self.span_dir, self.span_window_tokens,
+                )
+            if self.cells_dir is not None:
+                kept.select(id_col, "cell_id").write.mode(
+                    "overwrite"
+                ).parquet(f"{self.cells_dir}/incr/batch_id={batch_id}")
+        return n_accepted
+
+    def trigger(self, batch_df: DataFrame, batch_id: int) -> None:
+        """One micro-batch, in the module docstring's order.  The
+        maintenance runs before the drift HOLD, so a held trigger
+        can't skip a fold milestone; ``on_batch(batch_id, n_raw,
+        n_accepted)`` prices every gate and screen together."""
+        self.maintain(batch_id)
+        batch, n_raw = self.checkpoint(batch_df)
+        n_accepted = 0
+        if not self.hold(batch, batch_id):
+            n_accepted = self.screen(
+                self.quality_kept(batch, batch_id), batch_id
+            )
+            if self.drift_threshold is not None and n_raw > 0:
+                self.probe_quantizer(batch, batch_id)
+        if self.on_batch is not None:
+            self.on_batch(batch_id, n_raw, n_accepted)
+
+    def probe_quantizer(self, batch: DataFrame, batch_id: int) -> None:
+        """Semantic drift probe: ``assignment_quality`` of the
+        materialized batch against the baseline recorded at quantizer
+        build; past ``drift_threshold`` the quantizer is re-clustered
+        at the START of the next trigger (:meth:`maintain`)."""
+        from kafka_sparkstreaming_sbt_spark.operators.similarity import (
+            assignment_quality,
+        )
+
+        # the generation the screen just used — no lake re-read
+        cents, _, baseline = _quantizer_tables(self.spark, self.cells_dir)
+        drift = baseline() - assignment_quality(
+            batch.select(self.id_col, self.vec_col), cents,
+            self.vec_col, self.id_col,
+        )
+        if self.on_drift is not None:
+            self.on_drift(batch_id, drift)
+        if drift > self.drift_threshold:
+            self.quantizer_stale = True
+
+    def start(
+        self, stream: DataFrame, checkpoint_location: str
+    ) -> StreamingQuery:
         return (
-            stream.writeStream.foreachBatch(trigger)
+            stream.writeStream.foreachBatch(self.trigger)
             .outputMode("append")
             .option("checkpointLocation", checkpoint_location)
             .start()
@@ -1362,9 +1530,7 @@ def run_dedup_ingest_pipeline(
     hook (counts only, no data).
     ``quality_model`` (optional): a trained :func:`classify.nb_train`
     frame — each micro-batch is quality-screened BEFORE the dedup
-    screen (reject-cheapest-first: the model is a broadcast-bounded
-    join, the dedup screen shingles + bucket-joins, so filtering
-    first shrinks the expensive stage's input; the CCNet ordering).
+    screen (the CCNet ordering).
     ``quality_n_buckets``/``quality_seed`` must match training.
     ``n_batch`` reported to ``on_batch`` stays the RAW batch size, so
     ``n_accepted / n_batch`` prices both screens together.
@@ -1422,110 +1588,16 @@ def run_dedup_ingest_pipeline(
     screens this stage REWRITES text: accepted rows carry the
     cleaned text, and all downstream artifacts (signatures, content
     hashes, window incrs) derive from it."""
-    lake = _Lake.of(corpus_docs.sparkSession, locals()).open(corpus_docs)
-    spark = lake.spark
-    retrain_pending = False
-    if quality_dir is not None:
-        if quality_model is None or quality_negatives is None:
-            raise ValueError(
-                "quality_dir requires quality_model (the initial "
-                "generation) and quality_negatives (retrain labels)"
-            )
-        recover_quality_model(spark, quality_dir)
-        materialize_quality_model(
-            corpus_docs, quality_dir, quality_model,
-            quality_n_buckets, quality_seed,
+    if quality_dir is not None and (
+        quality_model is None or quality_negatives is None
+    ):
+        raise ValueError(
+            "quality_dir requires quality_model (the initial "
+            "generation) and quality_negatives (retrain labels)"
         )
-        # pin the generation now, not inside the first trigger
-        _load_quality_generation(spark, quality_dir)
-        quality_negatives = quality_negatives.localCheckpoint(eager=True)
-    elif quality_model is not None:
-        # the model is read on every trigger: pin the tiny frame once
-        quality_model = quality_model.localCheckpoint(eager=True)
-
-    def screen(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal retrain_pending
-        if lake.baseline is not None:
-            # the batch feeds the profile AND (if clean) the screens:
-            # materialize once.  Runs AFTER the compaction step so a
-            # held trigger can't skip a fold milestone.
-            batch_df = batch_df.localCheckpoint(eager=True)
-            if lake.hold(batch_df, batch_id):
-                if on_batch is not None:
-                    on_batch(batch_id, batch_df.count(), 0)
-                return
-        n_raw = None
-        if quality_dir is not None:
-            from kafka_sparkstreaming_sbt_spark.operators.classify import (
-                nb_score,
-            )
-            from kafka_sparkstreaming_sbt_spark.operators.dsir import (
-                _MICRO,
-            )
-
-            if retrain_pending:
-                # staleness response at the START of the trigger:
-                # only checkpoint-committed batches feed the retrain
-                rebuild_quality_model(
-                    spark, corpus_docs, accepted_dir,
-                    quality_negatives, quality_dir, batch_id,
-                    n_buckets=quality_n_buckets, seed=quality_seed,
-                )
-                retrain_pending = False
-            model, baseline = _load_quality_generation(spark, quality_dir)
-            n_raw = batch_df.count()
-            # score ONCE: the kept-slice semi-join and the drift
-            # probe both read the pinned integer scores
-            scored = nb_score(
-                batch_df, model,
-                n_buckets=quality_n_buckets, seed=quality_seed,
-            ).localCheckpoint(eager=True)
-            kept = scored.filter(
-                F.col("score_micro")
-                > F.lit(int(quality_threshold * _MICRO))
-            )
-            # drift probe on the FULL scored batch, not the kept
-            # slice: a model aged enough to wrongly reject the new
-            # register would keep its own blind spot out of a
-            # kept-only probe and never trigger its cure
-            mean = scored.agg(F.avg("score_micro")).collect()[0][0]
-            if mean is not None:
-                gap = abs(float(mean) - baseline) / _MICRO
-                if gap > quality_drift_nats:
-                    retrain_pending = True
-                    if on_quality_drift is not None:
-                        on_quality_drift(batch_id, round(gap, 6))
-            batch_df = batch_df.join(
-                kept.select("doc_id"), "doc_id", "left_semi"
-            )
-        elif quality_model is not None:
-            from kafka_sparkstreaming_sbt_spark.operators.classify import (
-                quality_filter,
-            )
-
-            # count the raw batch before filtering (one cheap action
-            # on the file-source batch) so the hook prices the
-            # quality screen too
-            n_raw = batch_df.count()
-            batch_df = quality_filter(
-                batch_df,
-                quality_model,
-                threshold_nats=quality_threshold,
-                n_buckets=quality_n_buckets,
-                seed=quality_seed,
-            )
-        n, a = screen_micro_batch(
-            batch_df, batch_id, corpus_docs, accepted_dir,
-            threshold, shingle_n, n_bands,
-            signature_dir=signature_dir,
-            exact_dir=exact_dir,
-            span_dir=span_dir,
-            span_window_tokens=span_window_tokens,
-        )
-        if on_batch is not None:
-            on_batch(batch_id, n_raw if n_raw is not None else n, a)
-
-    return lake.start(stream_docs, checkpoint_location, screen)
+    return _Lake.of(corpus_docs.sparkSession, locals()).open().start(
+        stream_docs, checkpoint_location
+    )
 
 
 # ------------------------------------------------ held-batch release --
@@ -1596,24 +1668,6 @@ def rebuild_drift_baseline(
     baseline.write.mode("overwrite").parquet(f"{drift_dir}/baseline")
 
 
-def _quality_kept(
-    batch: DataFrame, model: DataFrame, threshold: float,
-    n_buckets: int, seed: int,
-) -> DataFrame:
-    """The FULL rows of ``batch`` the quality model keeps — a
-    semi-join on the verdict, so columns beyond (doc_id, text), such
-    as a held row's embedding, stay aligned with their text."""
-    from kafka_sparkstreaming_sbt_spark.operators.classify import (
-        quality_filter,
-    )
-
-    kept = quality_filter(
-        batch.select("doc_id", "text"), model, threshold_nats=threshold,
-        n_buckets=n_buckets, seed=seed,
-    )
-    return batch.join(kept.select("doc_id"), "doc_id", "left_semi")
-
-
 def _delete_batch_partition(spark, path: str, batch_id: int) -> None:
     fs, P = _hadoop_fs(spark, path)
     fs.delete(P(f"{path}/batch_id={batch_id}"), True)
@@ -1645,18 +1699,17 @@ def release_held_batches(
     span_window_tokens: int = 16,
 ) -> dict[int, tuple[int, int] | None]:
     """Re-screen every batch in ``drift_dir/held`` through the FULL
-    screen stack (drift gate vs the CURRENT baseline -> quality ->
-    exact -> near-dup) and land survivors in the lake — the release
-    path the drift HOLD needs after :func:`rebuild_drift_baseline`.
+    gate and screen stack, drift gate against the CURRENT baseline
+    first, and land survivors in the lake — the release path the
+    drift HOLD needs after :func:`rebuild_drift_baseline`.
 
     For a MULTIMODAL lake (held rows carry embeddings, accepted
     partitions hold full rows) pass ``corpus_emb`` AND ``cells_dir``:
-    the release then runs :func:`screen_multimodal_micro_batch` —
-    semantic stage included — and writes full (doc_id, text,
-    embedding) rows, keeping every accepted partition's schema
-    identical.  Releasing a multimodal lake through the text-only
-    path would write embedding-less partitions that poison later
-    reads.
+    the release then runs the semantic stage too and writes full
+    (doc_id, text, embedding) rows, keeping every accepted
+    partition's schema identical.  Releasing a multimodal lake
+    through the text-only path would write embedding-less partitions
+    that poison later reads.
 
     Per held batch N: (1) re-check drift against the current
     baseline — a batch that still alarms STAYS held (mapped to None
@@ -1680,7 +1733,8 @@ def release_held_batches(
         raise ValueError(
             "multimodal release needs BOTH corpus_emb and cells_dir"
         )
-    lake = _Lake.of(spark, locals())
+    # the text stages key the semantic stage on doc_id
+    lake = _Lake.of(spark, {**locals(), "id_col": "doc_id"})
     held_root = f"{drift_dir}/held"
     results: dict[int, tuple[int, int] | None] = {}
     held_ids = _list_batch_ids(spark, held_root)
@@ -1688,14 +1742,6 @@ def release_held_batches(
         return results
     baseline = spark.read.parquet(f"{drift_dir}/baseline").localCheckpoint(
         eager=True
-    )
-    # cutoff +inf: the batch sees the static corpus, every stream
-    # partition, AND every earlier release
-    screen_args = dict(
-        threshold=threshold, shingle_n=shingle_n, n_bands=n_bands,
-        signature_dir=signature_dir, exact_dir=exact_dir,
-        corpus_upto=1 << 62, span_dir=span_dir,
-        span_window_tokens=span_window_tokens,
     )
     for held_id in held_ids:
         batch = spark.read.parquet(
@@ -1710,21 +1756,12 @@ def release_held_batches(
             continue
         release_id = _RELEASE_BASE + held_id
         lake.delete_partition(release_id)
-        if quality_model is not None:
-            batch = _quality_kept(
-                batch, quality_model, quality_threshold,
-                quality_n_buckets, quality_seed,
-            )
-        if corpus_emb is not None:
-            results[held_id] = screen_multimodal_micro_batch(
-                batch, release_id, corpus_docs, corpus_emb, accepted_dir,
-                cells_dir, semantic_threshold=semantic_threshold,
-                method=method, max_cell_size=max_cell_size, **screen_args,
-            )
-        else:
-            results[held_id] = screen_micro_batch(
-                batch, release_id, corpus_docs, accepted_dir, **screen_args
-            )
+        batch = lake.quality_kept(batch, release_id)
+        # cutoff +inf: the batch sees the static corpus, every stream
+        # partition, AND every earlier release
+        results[held_id] = (
+            batch.count(), lake.screen(batch, release_id, 1 << 62)
+        )
         _delete_batch_partition(spark, held_root, held_id)
     return results
 
@@ -2067,13 +2104,11 @@ def _screen_semantic_core(
     method: str,
     max_cell_size: int | None,
 ) -> DataFrame:
-    """The semantic screen's verdict computation WITHOUT the lake
-    writes — (id, cell_id) of the KEPT batch rows, materialized.
-    Corpus side = static ``corpus_emb`` + accepted partitions
-    < ``cutoff`` (rows from ``accepted_dir``, assignments from
-    ``quantizer/base`` + ``incr/batch_id<cutoff``).  Split out so the
-    unified multimodal pipeline can run it over the textual
-    survivors against a shared accepted lake."""
+    """The semantic leg of the one screen body (:meth:`_Lake.screen`):
+    (id, cell_id) of the KEPT batch rows, materialized.  Corpus side
+    = static ``corpus_emb`` + accepted partitions < ``cutoff`` (rows
+    from ``accepted_dir``, assignments from ``quantizer/base`` +
+    ``incr/batch_id<cutoff``)."""
     from kafka_sparkstreaming_sbt_spark.operators.similarity import (
         incremental_semantic_dedup,
     )
@@ -2117,8 +2152,8 @@ def screen_semantic_micro_batch(
     method: str = "sql",
     max_cell_size: int | None = None,
 ) -> tuple[int, int]:
-    """One micro-batch of the semantic screen (the foreachBatch body,
-    exposed for direct replay-contract testing): screen ``batch_df``
+    """One micro-batch of the semantic screen (the trigger's screen
+    body, exposed for direct replay-contract testing): screen ``batch_df``
     against the static corpus + accepted partitions STRICTLY before
     ``batch_id`` using the materialized quantizer, write survivors
     (and their cell assignments) idempotently under ``batch_id=N``.
@@ -2129,22 +2164,11 @@ def screen_semantic_micro_batch(
     assignments read from the lake (``quantizer/base`` +
     ``incr/batch_id<N``), so no trigger re-assigns or re-scans the
     corpus beyond the cells the batch occupies."""
-    spark = batch_df.sparkSession
-    batch_df = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-    verdicts = _screen_semantic_core(
-        batch_df, batch_id, corpus_emb, accepted_dir, cells_dir,
-        threshold, vec_col, id_col, method, max_cell_size,
+    lake = _Lake.of(
+        batch_df.sparkSession, {**locals(), "semantic_threshold": threshold}
     )
-    accepted_path = f"{accepted_dir}/batch_id={batch_id}"
-    batch_df.join(verdicts.select(id_col), id_col).write.mode(
-        "overwrite"
-    ).parquet(accepted_path)
-    verdicts.write.mode("overwrite").parquet(
-        f"{cells_dir}/incr/batch_id={batch_id}"
-    )
-    # parquet-footer counts — no screen re-execution (same note as
-    # the textual screen)
-    return batch_df.count(), spark.read.parquet(accepted_path).count()
+    batch, n_in = lake.checkpoint(batch_df)
+    return n_in, lake.screen(batch, batch_id)
 
 
 def run_semantic_ingest_pipeline(
@@ -2186,58 +2210,22 @@ def run_semantic_ingest_pipeline(
     ``compact_every``: same bounded-partition maintenance as the
     textual screen, applied to both the accepted lake and ``incr``.
     """
-    lake = _Lake.of(corpus_emb.sparkSession, locals()).open(
-        corpus_emb=corpus_emb
-    )
-
-    def screen(batch_df: DataFrame, batch_id: int) -> None:
-        n, a = screen_semantic_micro_batch(
-            batch_df, batch_id, corpus_emb, accepted_dir, cells_dir,
-            threshold, vec_col, id_col, method, max_cell_size,
-        )
-        if drift_threshold is not None and n > 0:
-            from kafka_sparkstreaming_sbt_spark.operators.similarity import (
-                assignment_quality,
-            )
-
-            # the generation the screen just used — no lake re-read
-            cents, _, baseline = _quantizer_tables(
-                lake.spark, cells_dir
-            )
-            batch_q = assignment_quality(
-                batch_df.select(id_col, vec_col), cents, vec_col, id_col
-            )
-            drift = baseline() - batch_q
-            if on_drift is not None:
-                on_drift(batch_id, drift)
-            if drift > drift_threshold:
-                lake.quantizer_stale = True
-        if on_batch is not None:
-            on_batch(batch_id, n, a)
-
-    return lake.start(stream_emb, checkpoint_location, screen)
+    return _Lake.of(
+        corpus_emb.sparkSession, {**locals(), "semantic_threshold": threshold}
+    ).open().start(stream_emb, checkpoint_location)
 
 
 # ------------------------------------------------ unified multimodal --
 #
 # A real pretraining pipeline ingests documents WITH their embeddings
 # and wants ONE verdict per document and ONE accepted partition
-# (VERDICT r7 next-5).  This composes the textual and semantic screens
-# in a single foreachBatch over a stream carrying
-# (doc_id, text, embedding):
-#
-#   drift gate -> quality -> exact -> near-dup -> semantic
-#
-# in reject-cheapest-first order (profile scan, broadcast-join score,
-# hash screen, shingle bucket-join, in-cell vector scan), sharing ONE
-# batch-id sequence and ONE replay contract: the accepted lake holds
-# (doc_id, text, embedding) under batch_id=N; the textual screens read
-# its (doc_id, text) projection, the semantic screen its
-# (doc_id, embedding) projection — column pruning makes each read only
-# what it screens on.  All maintenance artifacts (signatures, exact
-# bloom/hashes, cell assignments) key on the same batch ids, written
-# only for FINAL survivors, so no artifact ever asserts a row the lake
-# doesn't hold.
+# (VERDICT r7 next-5).  The unified driver runs the textual AND the
+# semantic screens in the one trigger body over a stream carrying
+# (doc_id, text, embedding), sharing ONE batch-id sequence and ONE
+# replay contract: the accepted lake holds (doc_id, text, embedding)
+# under batch_id=N; the textual screens read its (doc_id, text)
+# projection, the semantic screen its (doc_id, embedding) projection —
+# column pruning makes each read only what it screens on.
 
 
 def run_multimodal_ingest_pipeline(
@@ -2287,12 +2275,6 @@ def run_multimodal_ingest_pipeline(
     ``accepted_dir/batch_id=N``; the quantizer lake under
     ``cells_dir`` follows the standalone semantic pipeline's layout.
 
-    Screen order is reject-cheapest-first: a document rejected by the
-    hash screen never pays shingling; one rejected by near-dup never
-    pays the in-cell vector scan.  The semantic stage sees only
-    textual survivors — batch × in-cell cost shrinks with every
-    upstream rejection.
-
     Replay contract: identical to the component pipelines — every
     corpus-side read is strict-inequality on the batch id, every
     write is an idempotent per-partition overwrite, and a replayed
@@ -2308,45 +2290,9 @@ def run_multimodal_ingest_pipeline(
     ``quality`` — so a throughput number can be attributed to the
     stage that spends it (VERDICT r9 next-2)."""
     # the quantizer keys on doc_id here (vec_id on the semantic driver)
-    lake = _Lake.of(
+    return _Lake.of(
         corpus_docs.sparkSession, {**locals(), "id_col": "doc_id"}
-    ).open(corpus_docs, corpus_emb)
-    if quality_model is not None:
-        quality_model = quality_model.localCheckpoint(eager=True)
-
-    def screen(batch_df: DataFrame, batch_id: int) -> None:
-        # one materialization feeds the drift profile, both screens,
-        # and the final write-back join
-        batch_df = batch_df.localCheckpoint(eager=True)
-        n_raw = batch_df.count()
-        if lake.hold(batch_df, batch_id, stage_sec):
-            if on_batch is not None:
-                on_batch(batch_id, n_raw, 0)
-            return
-        if quality_model is not None:
-            # the join is lazy; when profiling, its cost lands in the
-            # micro-batch's batch_ckpt stage (the next
-            # materialization point)
-            with _staged(stage_sec, "quality"):
-                batch_df = _quality_kept(
-                    batch_df, quality_model, quality_threshold,
-                    quality_n_buckets, quality_seed,
-                )
-        _, a = screen_multimodal_micro_batch(
-            batch_df, batch_id, corpus_docs, corpus_emb,
-            accepted_dir, cells_dir,
-            threshold=threshold, shingle_n=shingle_n, n_bands=n_bands,
-            semantic_threshold=semantic_threshold, method=method,
-            max_cell_size=max_cell_size,
-            signature_dir=signature_dir, exact_dir=exact_dir,
-            span_dir=span_dir,
-            span_window_tokens=span_window_tokens,
-            stage_sec=stage_sec,
-        )
-        if on_batch is not None:
-            on_batch(batch_id, n_raw, a)
-
-    return lake.start(stream_docs, checkpoint_location, screen)
+    ).open().start(stream_docs, checkpoint_location)
 
 
 def screen_multimodal_micro_batch(
@@ -2369,11 +2315,10 @@ def screen_multimodal_micro_batch(
     span_window_tokens: int = 16,
     stage_sec: dict | None = None,
 ) -> tuple[int, int]:
-    """One micro-batch of the unified screen (the foreachBatch body
-    past the drift/quality gates, exposed for direct replay-contract
-    testing): exact -> near-dup over (doc_id, text), then semantic
-    over the survivors' (doc_id, embedding), ONE full-row accepted
-    write, maintenance increments for exactly the written rows.
+    """One micro-batch of the unified screen past the drift/quality
+    gates (exposed for direct replay-contract testing): the text
+    stages over (doc_id, text), then semantic over the survivors'
+    (doc_id, embedding), ONE full-row accepted write.
     Returns (n_in, n_accepted).  ``corpus_upto`` decouples the corpus
     cutoff from the partition id exactly as on
     :func:`screen_micro_batch` (the held-batch release path).
@@ -2391,66 +2336,8 @@ def screen_multimodal_micro_batch(
     REWRITES text, the accepted full rows carry the textual leg's
     (possibly cleaned) text joined back to the batch's embeddings,
     never the raw batch text."""
-    spark = batch_df.sparkSession
-    cutoff = batch_id if corpus_upto is None else corpus_upto
-    with _staged(stage_sec, "batch_ckpt"):
-        batch_df = batch_df.select(
-            "doc_id", "text", "embedding"
-        ).localCheckpoint(eager=True)
-        n_in = batch_df.count()
-    _, text_ok = _screen_text_core(
-        batch_df.select("doc_id", "text"), cutoff, corpus_docs,
-        accepted_dir, threshold, shingle_n, n_bands, signature_dir,
-        exact_dir, span_dir, span_window_tokens, stage_sec,
+    lake = _Lake.of(
+        batch_df.sparkSession, {**locals(), "id_col": "doc_id"}
     )
-    # the survivors' (possibly span-cleaned) text feeds BOTH the
-    # semantic-stage prune and the accepted write: materialize once
-    # instead of re-running the screen plan per consumer
-    with _staged(stage_sec, "near_dup"):
-        text_ok = text_ok.localCheckpoint(eager=True)
-    with _staged(stage_sec, "semantic"):
-        # semantic stage over the textual survivors' vectors only
-        vec_batch = (
-            batch_df.select("doc_id", "embedding")
-            .join(text_ok.select("doc_id"), "doc_id", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        verdicts = _screen_semantic_core(
-            vec_batch, cutoff, corpus_emb, accepted_dir, cells_dir,
-            semantic_threshold, "embedding", "doc_id", method,
-            max_cell_size,
-        )
-    # ONE accepted write: full rows for the kept ids — text from the
-    # textual leg (cleaned when the span stage ran), embeddings from
-    # the checkpointed batch
-    accepted_path = f"{accepted_dir}/batch_id={batch_id}"
-    with _staged(stage_sec, "write_accept"):
-        # materialize the kept (doc_id, text) once: the parquet
-        # write joins it to the batch embeddings, and the SAME frame
-        # feeds the maintenance increments below — "describes
-        # exactly the written rows" holds by construction (batch ids
-        # are unique, so the embedding inner join drops nothing)
-        kept = (
-            text_ok.join(
-                verdicts.select("doc_id"), "doc_id", "left_semi"
-            )
-            .coalesce(4)
-            .localCheckpoint(eager=True)
-        )
-        (
-            kept.join(batch_df.select("doc_id", "embedding"), "doc_id")
-            .select("doc_id", "text", "embedding")
-            .write.mode("overwrite")
-            .parquet(accepted_path)
-        )
-    with _staged(stage_sec, "increments"):
-        # maintenance increments describe exactly the written rows
-        _write_text_increments(
-            spark, accepted_path, batch_id, shingle_n, n_bands,
-            signature_dir, exact_dir, span_dir, span_window_tokens,
-            accepted_rows=kept,
-        )
-        verdicts.write.mode("overwrite").parquet(
-            f"{cells_dir}/incr/batch_id={batch_id}"
-        )
-    return n_in, spark.read.parquet(accepted_path).count()
+    batch, n_in = lake.checkpoint(batch_df)
+    return n_in, lake.screen(batch, batch_id, corpus_upto)

@@ -109,6 +109,34 @@ def test_replay_of_a_batch_is_idempotent_and_self_blind(spark, dirs):
     assert {r.doc_id for r in spark.read.parquet(acc).collect()} == {11}
 
 
+def test_screen_micro_batch_job_count(spark, dirs):
+    """Fixed-cost guard: a trigger on a few rows costs what its Spark
+    jobs cost, so one direct screen of the replay test's input must
+    not grow past the jobs the one screen body runs (the batch is
+    checkpointed and counted once, the accepted rows are materialized
+    once, and nothing is read back from the lake)."""
+    import uuid
+
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        screen_micro_batch,
+    )
+    from perfbench.tracing import JobGroups
+
+    _, acc, _ = dirs
+    corpus = spark.createDataFrame(
+        [(0, T["c0"])], "doc_id long, text string"
+    )
+    batch = spark.createDataFrame(
+        [(10, T["c0"]), (11, T["u1"])], "doc_id long, text string"
+    )
+    jobs, gid = JobGroups(spark), f"screen-{uuid.uuid4()}"
+    with jobs.group(gid):
+        assert screen_micro_batch(batch, 0, corpus, acc) == (2, 1)
+    # measured 40-42 over 15 calls (4 cores, Spark 4.1.2): AQE runs
+    # its query stages as a varying number of jobs
+    assert len(jobs.job_ids(gid)) <= 42
+
+
 def test_materialize_rebuilds_partial_base_without_success_marker(
     spark, dirs
 ):
