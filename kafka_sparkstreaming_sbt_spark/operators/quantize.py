@@ -42,6 +42,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_sparkstreaming_sbt_spark.operators.similarity import (
+    _collect_queries,
+    _cosine,
+    _id_field,
+    _local_topk,
+    _norm,
+    _ranked_topk_per_query,
     with_unit_vectors,
 )
 
@@ -220,7 +226,7 @@ def _quantize_numpy(
     SQL tier."""
     schema = T.StructType(
         [
-            _id_field_of(df, id_col),
+            _id_field(df, id_col),
             T.StructField("codes", T.ArrayType(T.IntegerType())),
             T.StructField("int_norm", T.LongType()),
         ]
@@ -262,21 +268,6 @@ def _int_dot(a: F.Column, b: F.Column) -> F.Column:
         F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
-    )
-
-
-def _ranked(scored: DataFrame, k: int, score_col: str, asc: bool) -> DataFrame:
-    """Per-query top-k with the exact total order (score, id) — the
-    ``rank <= k`` filter over a partitioned row_number is rewritten by
-    Catalyst into a MAP-SIDE partial WindowGroupLimit (same plan shape
-    ``tests/test_plans.py`` pins for the float tiers), so the shuffle
-    carries ≤ Q×k rows per map partition."""
-    oc = F.col(score_col).asc() if asc else F.col(score_col).desc()
-    w = Window.partitionBy("query_id").orderBy(oc, F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", score_col, "rank")
     )
 
 
@@ -339,76 +330,49 @@ def quantized_topk(
         "neighbor_id",
         _int_dot(F.col("q_codes"), F.col("c_codes")).alias("int_dot"),
     )
-    return _ranked(scored, k, "int_dot", asc=False)
+    return _ranked_topk_per_query(scored, k, "int_dot")
 
 
 def _quantized_topk_numpy(cq: DataFrame, qq: DataFrame, k: int) -> DataFrame:
     """BLAS tier of :func:`quantized_topk`: query codes collected
     driver-side (Q×dim ints — the broadcast fits-in-memory contract),
-    one int64 matmul per corpus batch, per-batch local top-k with
-    id-ascending stable tie-break, shared rank merge.  Integer math —
-    bit-identical to the SQL tier."""
-    qrows = sorted(qq.collect(), key=lambda r: r["query_id"])
-    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    qmat = (
-        np.array([list(r["q_codes"]) for r in qrows], dtype=np.int64)
-        if qrows
-        else np.zeros((0, 0), dtype=np.int64)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("int_dot", T.LongType()),
-        ]
-    )
+    one int64 matmul per corpus batch, per-batch local top-k
+    (:func:`similarity._local_topk`), then the rank stage.  Integer
+    math — bit-identical to the SQL tier."""
+    _, qids, qmat = _collect_queries(qq, "query_id", "q_codes", np.int64)
+    schema = "query_id long, neighbor_id long, int_dot long"
+
+    def int_dot(rows: pd.DataFrame) -> np.ndarray:
+        v = np.stack(rows["c_codes"].to_numpy()).astype(np.int64)
+        # integer matmul never hits BLAS; every partial sum is an
+        # integer bounded by dim·max|v|·max|q|, so route through
+        # sgemm/dgemm when that bound is exactly representable
+        # (2^24 / 2^53) — bit-identical, ~4× faster (same
+        # discipline as _pq_encode_numpy)
+        m_v = int(np.abs(v).max()) if v.size else 0
+        m_q = int(np.abs(qmat).max()) if qmat.size else 0
+        bound = v.shape[1] * max(m_v, 1) * max(m_q, 1)
+        if bound < (1 << 24):
+            dot = v.astype(np.float32) @ qmat.T.astype(np.float32)
+        elif bound < (1 << 53):
+            dot = v.astype(np.float64) @ qmat.T.astype(np.float64)
+        else:
+            dot = v @ qmat.T  # (B, Q) exact int64
+        # floats only to host -inf sentinels; values stay integral
+        return dot.astype(np.float64)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf) or not len(qids):
-                continue
-            pdf = pdf.sort_values("neighbor_id", kind="mergesort")
-            nid = pdf["neighbor_id"].to_numpy()
-            v = np.stack(pdf["c_codes"].to_numpy()).astype(np.int64)
-            # integer matmul never hits BLAS; every partial sum is an
-            # integer bounded by dim·max|v|·max|q|, so route through
-            # sgemm/dgemm when that bound is exactly representable
-            # (2^24 / 2^53) — bit-identical, ~4× faster (same
-            # discipline as _pq_encode_numpy)
-            m_v = int(np.abs(v).max()) if v.size else 0
-            m_q = int(np.abs(qmat).max()) if qmat.size else 0
-            bound = v.shape[1] * max(m_v, 1) * max(m_q, 1)
-            if bound < (1 << 24):
-                dot = (
-                    v.astype(np.float32) @ qmat.T.astype(np.float32)
-                ).astype(np.int64)
-            elif bound < (1 << 53):
-                dot = (
-                    v.astype(np.float64) @ qmat.T.astype(np.float64)
-                ).astype(np.int64)
-            else:
-                dot = v @ qmat.T  # (B, Q) exact int64
-            mask = nid[:, None] == qids[None, :]
-            kk = min(k, dot.shape[0])
-            # floats only to host -inf sentinels; values stay integral
-            dotf = np.where(mask, -np.inf, dot.astype(np.float64))
-            order = np.argsort(-dotf, axis=0, kind="stable")[:kk]
-            flat_q = np.tile(qids, kk)
-            flat_n = nid[order].reshape(-1)
-            flat_d = np.take_along_axis(dotf, order, axis=0).reshape(-1)
-            keep = flat_d > -np.inf
-            yield pd.DataFrame(
-                {
-                    "query_id": flat_q[keep],
-                    "neighbor_id": flat_n[keep],
-                    "int_dot": flat_d[keep].astype(np.int64),
-                }
-            )
+            if len(pdf) and len(qids):
+                out = _local_topk(
+                    pdf, "neighbor_id", qids, k, int_dot, "int_dot"
+                )
+                yield out.astype({"int_dot": np.int64})
 
     from kafka_sparkstreaming_sbt_spark.plans import parallelize_for_compute
 
     scored = parallelize_for_compute(cq).mapInPandas(score, schema)
-    return _ranked(scored, k, "int_dot", asc=False)
+    return _ranked_topk_per_query(scored, k, "int_dot")
 
 
 # --------------------------------------------------------------------------
@@ -728,7 +692,7 @@ def _pq_encode_numpy(
     bnorm = (books * books).sum(axis=2)  # (M, K)
     schema = T.StructType(
         [
-            _id_field_of(codes, id_col),
+            _id_field(codes, id_col),
             T.StructField("pq_codes", T.ArrayType(T.IntegerType())),
         ]
     )
@@ -836,7 +800,7 @@ def _assign_encode_numpy(
     s = _scale_value(scale)
     schema = T.StructType(
         [
-            _id_field_of(corpus, id_col),
+            _id_field(corpus, id_col),
             T.StructField("cell_id", T.LongType()),
             T.StructField("pq_codes", T.ArrayType(T.IntegerType())),
         ]
@@ -865,13 +829,6 @@ def _assign_encode_numpy(
             )
 
     return corpus.select(id_col, vec_col).mapInPandas(run, schema)
-
-
-def _id_field_of(df: DataFrame, id_col: str) -> T.StructField:
-    for f in df.schema.fields:
-        if f.name == id_col:
-            return f
-    raise ValueError(f"missing id column {id_col!r}")
 
 
 def _adc_lut(
@@ -962,7 +919,7 @@ def pq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").alias("pq_dist"))
     )
-    return _ranked(scored, k, "pq_dist", asc=True)
+    return _ranked_topk_per_query(scored, k, "pq_dist", asc=True)
 
 
 def _adc_lut_arrays(
@@ -1041,13 +998,7 @@ def _pq_score_candidates_numpy(
     one bulk fancy-index into the (Q, M, K) lut.  Integer math —
     bit-identical to the SQL explode+join+SUM, minus its N×M fan-out
     exchange and interpreted aggregates."""
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("pq_dist", T.LongType()),
-        ]
-    )
+    schema = "query_id long, neighbor_id long, pq_dist long"
     collected = _collect_lut(lut, n_sub)
     if collected is None:
         return cand_codes.sparkSession.createDataFrame([], schema)
@@ -1082,7 +1033,8 @@ def _pq_topk_numpy(
     (Q, M, K) int64 array (Q×M×K×8 bytes — the same fits-in-memory
     contract its broadcast imposes), each corpus batch's (B, M) code
     matrix scores all queries at once via fancy indexing, local
-    top-k per batch, shared rank merge.  Bit-identical to SQL."""
+    top-k per batch (:func:`similarity._local_topk`), then the rank
+    stage.  Bit-identical to SQL."""
     collected = _collect_lut(lut, n_sub)
     if collected is None:
         return corpus_pq.sparkSession.createDataFrame(
@@ -1090,44 +1042,28 @@ def _pq_topk_numpy(
             "query_id long, neighbor_id long, pq_dist long, rank int",
         )
     qarr, table = collected
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("pq_dist", T.LongType()),
-        ]
-    )
+    schema = "query_id long, neighbor_id long, pq_dist long"
+    m_idx = np.arange(n_sub)
+
+    def neg_dist(rows: pd.DataFrame) -> np.ndarray:
+        codes = np.stack(rows["pq_codes"].to_numpy()).astype(np.int64)
+        # (Q, B): for each query, sum of lut[q, m, codes[b, m]]
+        d = table[:, m_idx[None, :], codes].sum(axis=2)
+        # (B, Q), negated so the kernel's descending rank is distance
+        # ascending — negation is exact, so the stable order is too
+        return -d.T.astype(np.float64)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m_idx = np.arange(n_sub)
         for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(id_col, kind="mergesort")
-            nid = pdf[id_col].to_numpy()
-            codes = np.stack(pdf["pq_codes"].to_numpy()).astype(np.int64)
-            # (Q, B): for each query, sum of lut[q, m, codes[b, m]]
-            d = table[:, m_idx[None, :], codes].sum(axis=2)
-            dist = d.T.astype(np.float64)  # (B, Q); float only for inf
-            dist[nid[:, None] == qarr[None, :]] = np.inf
-            kk = min(k, dist.shape[0])
-            order = np.argsort(dist, axis=0, kind="stable")[:kk]
-            flat_q = np.tile(qarr, kk)
-            flat_n = nid[order].reshape(-1)
-            flat_d = np.take_along_axis(dist, order, axis=0).reshape(-1)
-            keep = flat_d < np.inf
-            yield pd.DataFrame(
-                {
-                    "query_id": flat_q[keep],
-                    "neighbor_id": flat_n[keep],
-                    "pq_dist": flat_d[keep].astype(np.int64),
-                }
-            )
+            if len(pdf):
+                out = _local_topk(pdf, id_col, qarr, k, neg_dist, "pq_dist")
+                out["pq_dist"] = (-out["pq_dist"]).astype(np.int64)
+                yield out
 
     from kafka_sparkstreaming_sbt_spark.plans import parallelize_for_compute
 
     scored = parallelize_for_compute(corpus_pq).mapInPandas(score, schema)
-    return _ranked(scored, k, "pq_dist", asc=True)
+    return _ranked_topk_per_query(scored, k, "pq_dist", asc=True)
 
 
 def pq_rerank(
@@ -1156,11 +1092,6 @@ def pq_rerank(
     smaller neighbor id; arithmetic is the same sequential-double
     path as :func:`similarity.cosine_topk`, so the pipeline stays
     oracle-replicable end to end when fed deterministic codebooks."""
-    from kafka_sparkstreaming_sbt_spark.operators.similarity import (
-        _dot,
-        _norm,
-    )
-
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
@@ -1178,14 +1109,10 @@ def pq_rerank(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                _dot(F.col("_qv"), F.col("_cv"))
-                / (F.col("_qn") * F.col("_cn")),
-                6,
-            ).alias("cosine"),
+            _cosine("_qv", "_cv", "_qn", "_cn").alias("cosine"),
         )
     )
-    return _ranked(scored, k, "cosine", asc=False)
+    return _ranked_topk_per_query(scored, k)
 
 
 def ivf_pq_topk(
@@ -1253,9 +1180,7 @@ def ivf_pq_topk(
         probe_pairs = [
             (r[0], int(c)) for r, row in zip(qrows, ki) for c in row
         ]
-    qid_type = next(
-        f.dataType for f in queries.schema.fields if f.name == id_col
-    )
+    qid_type = _id_field(queries, id_col).dataType
     probes = corpus.sparkSession.createDataFrame(
         probe_pairs,
         T.StructType(
@@ -1302,4 +1227,4 @@ def ivf_pq_topk(
         )
     )
     scored = _pq_score_candidates_numpy(cand_codes, lut, n_sub)
-    return _ranked(scored, k, "pq_dist", asc=True)
+    return _ranked_topk_per_query(scored, k, "pq_dist", asc=True)

@@ -19,7 +19,11 @@ or broadcast as sizes dictate.
 Determinism: all arithmetic is double precision, left-to-right over
 the list order (``aggregate``/``zip_with``), ranking ties broken by
 neighbor id, cosine rounded to 6 dp — byte-identical with the DuckDB
-oracle's ``list_dot_product`` on double lists.
+oracle's ``list_dot_product`` on double lists.  That result-order rule
+(self-matches excluded, score, ties toward the smaller neighbor id)
+lives in two places shared with :mod:`quantize`: ``_local_topk``, the
+per-batch cut of every BLAS tier, and ``_ranked_topk_per_query``, the
+one rank stage.
 
 Two execution tiers (``method=`` / ``assign_method=`` / ``search_method=``)
 ---------------------------------------------------------------------------
@@ -64,6 +68,15 @@ def _norm(a: F.Column) -> F.Column:
     return F.sqrt(_dot(a, a))
 
 
+def _cosine(a: str, b: str, norm_a: str, norm_b: str) -> F.Column:
+    """Cosine of two float-array columns from their precomputed norm
+    columns, rounded to 6 dp — the one score every SQL-tier verdict
+    and rank in this module compares."""
+    return F.round(
+        _dot(F.col(a), F.col(b)) / (F.col(norm_a) * F.col(norm_b)), 6
+    )
+
+
 def with_unit_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Pre-normalize embeddings so cosine becomes a plain dot product
     (do this once, write it back to parquet at scale).
@@ -86,37 +99,113 @@ def with_unit_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     ).drop("_unit_norm")
 
 
-def _ranked_topk_per_query(scored: DataFrame, k: int) -> DataFrame:
+def _ranked_topk_per_query(
+    scored: DataFrame, k: int, score_col: str = "cosine", asc: bool = False
+) -> DataFrame:
     """Per-query top-k rank-then-filter over (query_id, neighbor_id,
-    cosine) rows.
+    ``score_col``) rows — the one rank stage of every top-k tier here
+    and in :mod:`quantize`.  Order: ``score_col`` descending (``asc``
+    for distances), ties on the smaller ``neighbor_id``.
 
     The ``rank <= k`` filter over a partitioned ``row_number`` window
     is rewritten by Catalyst (``InferWindowGroupLimit``, Spark >= 3.5)
     into a MAP-SIDE partial group-limit: the physical plan runs
     ``WindowGroupLimit [query_id] ... Partial`` *below* the exchange —
     each input partition keeps only its k best rows per query under
-    the rank's exact total order (cosine DESC, neighbor_id ASC) — so
-    the one shuffle carries at most Q x k rows per map partition,
-    never the full Q x N scored set.  ``tests/test_plans.py``
-    asserts this plan shape; a hand-rolled pre-prune (e.g. an Arrow
+    the rank's exact total order (score, neighbor_id ASC) — so the
+    one shuffle carries at most Q x k rows per map partition, never
+    the full Q x N scored set.  ``tests/test_plans.py`` asserts this
+    plan shape; a hand-rolled pre-prune (e.g. an Arrow
     ``mapInPandas`` reduction) measured no faster and would put Python
     in the hot path.
     """
+    score = F.col(score_col).asc() if asc else F.col(score_col).desc()
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+        score, F.col("neighbor_id").asc()
     )
     # extra input columns (e.g. labels in hard_negatives) ride along;
     # the canonical three stay first for the long-standing callers.
     carry = [
         c
         for c in scored.columns
-        if c not in ("query_id", "neighbor_id", "cosine")
+        if c not in ("query_id", "neighbor_id", score_col)
     ]
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", *carry, "rank")
+        .select("query_id", "neighbor_id", score_col, *carry, "rank")
     )
+
+
+def _collect_queries(
+    queries: DataFrame, id_col: str, vec_col: str, dtype=np.float64
+) -> tuple[list, np.ndarray, np.ndarray]:
+    """The query side of a BLAS top-k tier, collected driver-side
+    (Q x dim — the same fits-in-memory contract the SQL tier's
+    broadcast imposes) and sorted by id: ``(rows, qids, qmat)``, with
+    a (0, 0) ``qmat`` when there are no queries."""
+    rows = sorted(queries.collect(), key=lambda r: r[id_col])
+    qids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    qmat = np.array([list(r[vec_col]) for r in rows], dtype=dtype)
+    if not rows:
+        qmat = qmat.reshape(0, 0)
+    return rows, qids, qmat
+
+
+def _batch_cosine(rows: pd.DataFrame, vec_col: str, qmat, qn) -> np.ndarray:
+    """(B, Q) 6-dp cosine of a batch's vectors against the collected
+    queries; a zero norm gives NaN, which never ranks."""
+    v = np.stack(rows[vec_col].to_numpy()).astype(np.float64)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.round(
+            v @ qmat.T / np.outer(np.linalg.norm(v, axis=1), qn), 6
+        )
+
+
+def _local_topk(
+    rows: pd.DataFrame,
+    id_col: str,
+    qids: np.ndarray,
+    k: int,
+    score,
+    score_col: str,
+    carry: tuple[str, ...] = (),
+) -> pd.DataFrame:
+    """The per-batch half of every BLAS top-k tier: each query's LOCAL
+    top-k over one Arrow batch (or cogroup cell), which
+    :func:`_ranked_topk_per_query` then merges across batches.
+
+    ``rows`` are sorted by ``id_col`` first, then scored by
+    ``score(rows) -> (B, Q)`` floats, higher first; a pair scored
+    -inf or NaN never ranks (callers use -inf for their masks and
+    negate distances), and self-matches are dropped here.  Because
+    rows are id-ascending, a stable argsort along each query column
+    ranks ties at the smaller neighbor id — exactly the global rank's
+    (score, neighbor_id ASC) order, so the local cut never drops a
+    row the global rank keeps.  Returns ``(query_id, neighbor_id,
+    score_col, *carry)``; ``carry`` columns of ``rows`` ride along
+    with their neighbor."""
+    rows = rows.sort_values(id_col, kind="mergesort")
+    nid = rows[id_col].to_numpy()
+    s = score(rows)
+    # self-match, excluded like the SQL tiers' join condition
+    s[nid[:, None] == qids[None, :]] = -np.inf
+    s = np.where(np.isnan(s), -np.inf, s)
+    kk = min(k, len(nid))
+    order = np.argsort(-s, axis=0, kind="stable")[:kk]
+    best = np.take_along_axis(s, order, axis=0).reshape(-1)
+    keep = best > -np.inf
+    pick = order.reshape(-1)[keep]
+    out = {
+        "query_id": np.tile(qids, kk)[keep],
+        "neighbor_id": nid[pick],
+        score_col: best[keep],
+    }
+    out.update({c: rows[c].to_numpy()[pick] for c in carry})
+    return pd.DataFrame(out)
+
+
+_SCORED = "query_id long, neighbor_id long, cosine double"
 
 
 def _topk_numpy(
@@ -127,65 +216,25 @@ def _topk_numpy(
     id_col: str,
 ) -> DataFrame:
     """BLAS tier of :func:`cosine_topk`: queries are collected
-    driver-side (Q x dim doubles — the same fits-in-memory contract
-    the SQL tier's broadcast imposes) and every corpus batch is
-    scored with one B x Q matmul; each batch emits only its per-query
-    LOCAL top-k (batch rows pre-sorted by id so a stable argsort
-    breaks cosine ties toward the smaller neighbor — exactly the
-    global rank's order), and the shared rank stage merges the
+    driver-side and every corpus batch is scored with one B x Q
+    matmul; each batch emits only its per-query LOCAL top-k
+    (:func:`_local_topk`), and the rank stage merges the
     partitions x Q x k survivors.  Same 6-dp rounding as SQL modulo
     BLAS summation order — the oracle query stays on the SQL tier."""
-    qrows = sorted(
-        queries.select(id_col, vec_col).collect(), key=lambda r: r[id_col]
+    _, qids, qmat = _collect_queries(
+        queries.select(id_col, vec_col), id_col, vec_col
     )
-    qids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    qmat = np.array(
-        [list(r[vec_col]) for r in qrows], dtype=np.float64
-    )
-    if not len(qrows):
-        qmat = qmat.reshape(0, 0)
     qn = np.linalg.norm(qmat, axis=1)
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+
+    def cosine(rows: pd.DataFrame) -> np.ndarray:
+        return _batch_cosine(rows, vec_col, qmat, qn)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf) or not len(qids):
-                continue
-            pdf = pdf.sort_values(id_col, kind="mergesort")
-            nid = pdf[id_col].to_numpy()
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vn = np.linalg.norm(v, axis=1)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = np.round(
-                    v @ qmat.T / np.outer(vn, qn), 6
-                )  # (B, Q); NaN (zero-norm) naturally never ranks
-            # self-match excluded, like the SQL join condition
-            cos[nid[:, None] == qids[None, :]] = -np.inf
-            cos = np.where(np.isnan(cos), -np.inf, cos)
-            kk = min(k, cos.shape[0])
-            # rows are id-ascending, so stable argsort on -cos per
-            # query column ranks ties at the smaller neighbor id —
-            # identical to the global (cosine DESC, id ASC) order
-            order = np.argsort(-cos, axis=0, kind="stable")[:kk]
-            flat_q = np.tile(qids, kk)
-            flat_n = nid[order].reshape(-1)
-            flat_c = np.take_along_axis(cos, order, axis=0).reshape(-1)
-            keep = flat_c > -np.inf
-            yield pd.DataFrame(
-                {
-                    "query_id": flat_q[keep],
-                    "neighbor_id": flat_n[keep],
-                    "cosine": flat_c[keep],
-                }
-            )
+            if len(pdf) and len(qids):
+                yield _local_topk(pdf, id_col, qids, k, cosine, "cosine")
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, schema)
+    scored = corpus.select(id_col, vec_col).mapInPandas(score, _SCORED)
     return _ranked_topk_per_query(scored, k)
 
 
@@ -202,8 +251,8 @@ def cosine_topk(
 
     The query side is broadcast — the corpus is scanned exactly once
     and never shuffled; the Q x N scored rows are pruned MAP-SIDE to
-    the per-partition per-query top-k before the rank exchange (see
-    :func:`_ranked_topk_per_query` — Catalyst's partial
+    the per-partition per-query top-k before the rank exchange (the
+    one rank stage, :func:`_ranked_topk_per_query` — Catalyst's partial
     ``WindowGroupLimit``), so the shuffle carries at most
     Q x k x n_partitions candidate rows, never Q x N.
 
@@ -243,11 +292,10 @@ def cosine_topk(
         _norm(F.col(vec_col)).alias("c_norm"),
     )
     pairs = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-    cos = _dot(F.col("q_vec"), F.col("c_vec")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
     scored = pairs.select(
-        "query_id", "neighbor_id", F.round(cos, 6).alias("cosine")
+        "query_id",
+        "neighbor_id",
+        _cosine("q_vec", "c_vec", "q_norm", "c_norm").alias("cosine"),
     )
     return _ranked_topk_per_query(scored, k)
 
@@ -406,11 +454,10 @@ def lsh_near_pairs(
         "bucket",
     )
     pairs = left.join(right, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    cos = _dot(F.col("vec_a"), F.col("vec_b")) / (
-        F.col("norm_a") * F.col("norm_b")
-    )
     out = pairs.select(
-        "id_a", "id_b", F.round(cos, 6).alias("cosine")
+        "id_a",
+        "id_b",
+        _cosine("vec_a", "vec_b", "norm_a", "norm_b").alias("cosine"),
     ).filter(F.col("cosine") >= threshold)
     return out.distinct() if n_tables > 1 else out
 
@@ -696,13 +743,10 @@ def semantic_dedup(
         F.col("norm").alias("norm_b"),
         "cell_id",
     )
-    cos = _dot(F.col("vec_a"), F.col("vec_b")) / (
-        F.col("norm_a") * F.col("norm_b")
-    )
     dropped = (
         left.join(right, "cell_id")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.round(cos, 6) >= threshold)
+        .filter(_cosine("vec_a", "vec_b", "norm_a", "norm_b") >= threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
         .withColumn("_dropped", F.lit(True))
@@ -876,9 +920,7 @@ def incremental_semantic_dedup(
             F.col("norm").alias("norm_b"),
             "cell_id",
         )
-        cos = _dot(F.col("vec_a"), F.col("vec_b")) / (
-            F.col("norm_a") * F.col("norm_b")
-        )
+        cos = _cosine("vec_a", "vec_b", "norm_a", "norm_b")
         dropped = (
             left.join(right, "cell_id")
             # a senior (corpus) neighbor drops regardless of id; a
@@ -887,7 +929,7 @@ def incremental_semantic_dedup(
                 F.col("senior_a") | (F.col("id_a") < F.col("id_b"))
             )
             .filter(F.col("id_a") != F.col("id_b"))
-            .filter(F.round(cos, 6) >= threshold)
+            .filter(cos >= threshold)
             .select(F.col("id_b").alias(id_col))
             .distinct()
             .withColumn("_dropped", F.lit(True))
@@ -933,11 +975,7 @@ def assignment_quality(
         F.col(vec_col),
         _norm(F.col(vec_col)).alias("v_norm"),
     ).join(F.broadcast(cent))
-    cos = F.round(
-        _dot(F.col(vec_col), F.col("c_vec"))
-        / (F.col("v_norm") * F.col("cent_norm")),
-        6,
-    )
+    cos = _cosine(vec_col, "c_vec", "v_norm", "cent_norm")
     best = scored.groupBy(id_col).agg(F.max(cos).alias("best_cos"))
     row = best.agg(F.avg("best_cos").alias("q")).collect()[0]
     return float("nan") if row.q is None else float(row.q)
@@ -984,7 +1022,10 @@ def diverse_sample(
 
 
 def _id_field(df: DataFrame, id_col: str) -> T.StructField:
-    return next(f for f in df.schema.fields if f.name == id_col)
+    for f in df.schema.fields:
+        if f.name == id_col:
+            return f
+    raise ValueError(f"missing id column {id_col!r}")
 
 
 _PROBE_BROADCAST_MAX_ROWS = 50_000  # max Q x n_probe rows for the
@@ -1365,11 +1406,7 @@ def ivf_assign(
         F.col(vec_col),
         _norm(F.col(vec_col)).alias("v_norm"),
     ).join(F.broadcast(cent))
-    cos = F.round(
-        _dot(F.col(vec_col), F.col("c_vec"))
-        / (F.col("v_norm") * F.col("cent_norm")),
-        6,
-    )
+    cos = _cosine(vec_col, "c_vec", "v_norm", "cent_norm")
     # argmax via a PACKED LONG ordering key, not a struct (r12): a
     # struct-keyed max_by buffer is immutable, which forces
     # SortAggregate — Spark sorted the whole N x C scored stream by id
@@ -1777,17 +1814,18 @@ def _ivf_search_numpy(
     :func:`_assign_topn_numpy` (identical probe sets and tie-breaks
     to the SQL tier's windowed rank), the corpus lives in its
     assigned cells, and a per-cell COGROUP computes each cell's
-    local per-query top-k with one Nc x Qc matmul — so the exchange
-    carries each corpus row once (to its cell) and each query
-    ``n_probe`` times, instead of the SQL tier's Q x N/C x n_probe
-    candidate join rows; the global merge is the shared
-    WindowGroupLimit rank.  Per-task memory is Nc x (dim + Qc)
-    doubles (cell size x probing queries); parallelism is bounded by
-    the cell count, so this tier wants C >= cores.  Measured at
-    Q=513, N=200 K x 64-dim on local[32]: 125.4 s -> 15.2 s (8.2x)
-    at 128 cells / 32 probes; 25.4 s -> 16.0 s at 16 cells / 4
-    probes (16 cogroups underfill 32 cores — the gap widens with C
-    and probe volume).  Exact within the probed cells; results match
+    local per-query top-k (:func:`_local_topk`) with one Nc x Qc
+    matmul — so the exchange carries each corpus row once (to its
+    cell) and each query ``n_probe`` times, instead of the SQL tier's
+    Q x N/C x n_probe candidate join rows; the global merge is the
+    rank stage, :func:`_ranked_topk_per_query`.  Per-task memory is
+    Nc x (dim + Qc) doubles (cell size x probing queries);
+    parallelism is bounded by the cell count, so this tier wants
+    C >= cores.  Measured at Q=513, N=200 K x 64-dim on local[32]:
+    125.4 s -> 15.2 s (8.2x) at 128 cells / 32 probes; 25.4 s ->
+    16.0 s at 16 cells / 4 probes (16 cogroups underfill 32 cores —
+    the gap widens with C and probe volume).  Exact within the
+    probed cells; results match
     the SQL tier modulo BLAS summation order on a 6-dp tie (measured
     0 mismatches of 5,130 ranked rows), so ``ivf_topk``'s oracle
     stays on ``"sql"``."""
@@ -1809,55 +1847,21 @@ def _ivf_search_numpy(
         F.col(vec_col).alias("n_vec"),
         "cell_id",
     )
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
 
     def local_topk(cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": np.array([], dtype=np.int64),
-                "neighbor_id": np.array([], dtype=np.int64),
-                "cosine": np.array([], dtype=np.float64),
-            }
-        )
         if not len(cpdf) or not len(qpdf):
-            return empty
-        cpdf = cpdf.sort_values("neighbor_id", kind="mergesort")
-        nid = cpdf["neighbor_id"].to_numpy()
-        v = np.stack(cpdf["n_vec"].to_numpy()).astype(np.float64)
-        vn = np.linalg.norm(v, axis=1)
-        qid = qpdf["query_id"].to_numpy()
+            return pd.DataFrame(columns=["query_id", "neighbor_id", "cosine"])
         qm = np.stack(qpdf["q_vec"].to_numpy()).astype(np.float64)
         qn = np.linalg.norm(qm, axis=1)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            cos = np.round(v @ qm.T / np.outer(vn, qn), 6)
-        cos[nid[:, None] == qid[None, :]] = -np.inf  # self-match
-        cos = np.where(np.isnan(cos), -np.inf, cos)
-        kk = min(k, cos.shape[0])
-        # rows id-ascending -> stable sort ranks ties at the smaller
-        # neighbor id, the global (cosine DESC, id ASC) order
-        order = np.argsort(-cos, axis=0, kind="stable")[:kk]
-        flat_q = np.tile(qid, kk)
-        flat_n = nid[order].reshape(-1)
-        flat_c = np.take_along_axis(cos, order, axis=0).reshape(-1)
-        keep = flat_c > -np.inf
-        return pd.DataFrame(
-            {
-                "query_id": flat_q[keep],
-                "neighbor_id": flat_n[keep],
-                "cosine": flat_c[keep],
-            }
+        return _local_topk(
+            cpdf, "neighbor_id", qpdf["query_id"].to_numpy(), k,
+            lambda rows: _batch_cosine(rows, "n_vec", qm, qn), "cosine",
         )
 
     scored = (
         cside.groupby("cell_id")
         .cogroup(qside.groupby("cell_id"))
-        .applyInPandas(local_topk, schema)
+        .applyInPandas(local_topk, _SCORED)
     )
     return _ranked_topk_per_query(scored, k)
 
@@ -1921,11 +1925,7 @@ def _ivf_search(
             )
         )
     )
-    q_cos = F.round(
-        _dot(F.col("q_vec"), F.col("c_vec"))
-        / (F.col("q_norm") * F.col("cent_norm")),
-        6,
-    )
+    q_cos = _cosine("q_vec", "c_vec", "q_norm", "cent_norm")
     probe_w = Window.partitionBy("query_id").orderBy(
         q_cos.desc(), F.col("cell_id").asc()
     )
@@ -1949,11 +1949,10 @@ def _ivf_search(
     cand = c.join(probes, "cell_id").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    cos = _dot(F.col("q_vec"), F.col("c_vec2")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
     scored = cand.select(
-        "query_id", "neighbor_id", F.round(cos, 6).alias("cosine")
+        "query_id",
+        "neighbor_id",
+        _cosine("q_vec", "c_vec2", "q_norm", "c_norm").alias("cosine"),
     )
     # same map-side partial WindowGroupLimit prune as brute force: the
     # probed candidate set (n_probe/n_cells of Q x N) is cut to
@@ -2072,15 +2071,12 @@ def hard_negatives(
         (F.col("query_id") != F.col("neighbor_id"))
         & (F.col("query_label") != F.col("neighbor_label")),
     )
-    cos = _dot(F.col("q_vec"), F.col("c_vec")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
     scored = pairs.select(
         "query_id",
         "query_label",
         "neighbor_id",
         "neighbor_label",
-        F.round(cos, 6).alias("cosine"),
+        _cosine("q_vec", "c_vec", "q_norm", "c_norm").alias("cosine"),
     )
     ranked = _ranked_topk_per_query(scored, k)
     return ranked.select(
@@ -2098,58 +2094,33 @@ def _hard_negatives_numpy(
     label_col: str,
 ) -> DataFrame:
     """BLAS tier of :func:`hard_negatives` — :func:`_topk_numpy`'s
-    batch-matmul shape with a same-label mask alongside the self
-    mask, and labels carried through the rank stage."""
-    qrows = sorted(q.collect(), key=lambda r: r.query_id)
-    qids = np.array([r.query_id for r in qrows], dtype=np.int64)
+    batch matmul and :func:`_local_topk` cut with a same-label mask
+    alongside the self mask, and labels carried through the rank
+    stage."""
+    qrows, qids, qmat = _collect_queries(q, "query_id", "q_vec")
     qlab = np.array([r.query_label for r in qrows], dtype=np.int64)
-    qmat = np.array([list(r.q_vec) for r in qrows], dtype=np.float64)
-    if not len(qrows):
-        qmat = qmat.reshape(0, 0)
     qn = np.linalg.norm(qmat, axis=1)
     lab_of = dict(zip(qids.tolist(), qlab.tolist()))
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("query_label", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("neighbor_label", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    schema = (
+        "query_id long, query_label long, neighbor_id long,"
+        " neighbor_label long, cosine double"
     )
+
+    def cosine(rows: pd.DataFrame) -> np.ndarray:
+        cos = _batch_cosine(rows, vec_col, qmat, qn)
+        nlab = rows["neighbor_label"].to_numpy(dtype=np.int64)
+        cos[nlab[:, None] == qlab[None, :]] = -np.inf
+        return cos
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf) or not len(qids):
-                continue
-            pdf = pdf.sort_values(id_col, kind="mergesort")
-            nid = pdf[id_col].to_numpy()
-            nlab = pdf[label_col].to_numpy(dtype=np.int64)
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vn = np.linalg.norm(v, axis=1)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = np.round(v @ qmat.T / np.outer(vn, qn), 6)
-            cos[nid[:, None] == qids[None, :]] = -np.inf
-            cos[nlab[:, None] == qlab[None, :]] = -np.inf
-            cos = np.where(np.isnan(cos), -np.inf, cos)
-            kk = min(k, cos.shape[0])
-            order = np.argsort(-cos, axis=0, kind="stable")[:kk]
-            flat_q = np.tile(qids, kk)
-            flat_n = nid[order].reshape(-1)
-            flat_l = nlab[order].reshape(-1)
-            flat_c = np.take_along_axis(cos, order, axis=0).reshape(-1)
-            keep = flat_c > -np.inf
-            yield pd.DataFrame(
-                {
-                    "query_id": flat_q[keep],
-                    "query_label": [
-                        lab_of[i] for i in flat_q[keep].tolist()
-                    ],
-                    "neighbor_id": flat_n[keep],
-                    "neighbor_label": flat_l[keep],
-                    "cosine": flat_c[keep],
-                }
-            )
+            if len(pdf) and len(qids):
+                out = _local_topk(
+                    pdf, id_col, qids, k, cosine, "cosine",
+                    carry=("neighbor_label",),
+                )
+                out["query_label"] = out["query_id"].map(lab_of)
+                yield out
 
     from kafka_sparkstreaming_sbt_spark.plans import (
         parallelize_for_compute,
@@ -2157,7 +2128,7 @@ def _hard_negatives_numpy(
 
     scored = (
         parallelize_for_compute(corpus)
-        .select(id_col, label_col, vec_col)
+        .select(id_col, F.col(label_col).alias("neighbor_label"), vec_col)
         .mapInPandas(score, schema)
     )
     ranked = _ranked_topk_per_query(scored, k)

@@ -86,7 +86,7 @@ from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, fields
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
@@ -116,6 +116,18 @@ def _one_row_bitmap_df(
     return spark.range(1).coalesce(1).select(*cols)
 
 
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager ``localCheckpoint`` of ``df`` and its row count.  The
+    count is an ``Observation`` on the checkpoint's own job: a
+    ``count()`` of the checkpoint costs two more jobs under AQE (a
+    shuffle-map job and a result job)."""
+    obs = Observation()
+    ckpt = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    return ckpt, obs.get["n"]
+
+
 @contextmanager
 def _staged(stage_sec: dict | None, name: str):
     """Accumulate wall seconds for one screen stage into
@@ -142,7 +154,11 @@ def _prior_partitions(
 ) -> DataFrame | None:
     """Partitions of a ``batch_id=N``-layout parquet dir STRICTLY
     before ``before_batch`` (replay safety), None when nothing exists
-    yet."""
+    yet.  The listing comes first: once the session has used an
+    ``Observation``, Spark's observation listener logs every read
+    that fails analysis at ERROR."""
+    if not _list_batch_ids(spark, path):
+        return None
     try:
         prior = spark.read.parquet(path)
     except AnalysisException:
@@ -1289,8 +1305,7 @@ class _Lake:
         count: every gate and screen after it reads these blocks, so
         no stage replays the batch's source."""
         with _staged(self.stage_sec, "batch_ckpt"):
-            batch = batch_df.localCheckpoint(eager=True)
-            return batch, batch.count()
+            return _checkpoint_counted(batch_df)
 
     def quality_kept(self, batch: DataFrame, batch_id: int) -> DataFrame:
         """The quality gate: the FULL rows of ``batch`` the model
@@ -1377,7 +1392,7 @@ class _Lake:
             # stages' per-partition overhead dominates at 32
             # partitions for a few thousand rows, hence 4
             with _staged(stage_sec, "near_dup"):
-                kept = text_ok.coalesce(4).localCheckpoint(eager=True)
+                kept, n_accepted = _checkpoint_counted(text_ok.coalesce(4))
         if self.cells_dir is not None:
             with _staged(stage_sec, "semantic"):
                 vecs = batch.select(id_col, self.vec_col)
@@ -1385,23 +1400,20 @@ class _Lake:
                     vecs = vecs.join(
                         kept.select(id_col), id_col, "left_semi"
                     ).localCheckpoint(eager=True)
-                verdicts = _screen_semantic_core(
+                verdicts, n_verdicts = _screen_semantic_core(
                     vecs, cutoff, self.corpus_emb, self.accepted_dir,
                     self.cells_dir, self.semantic_threshold,
                     self.vec_col, id_col, self.method, self.max_cell_size,
                 )
         with _staged(stage_sec, "write_accept"):
             if kept is None:
-                kept = verdicts
+                kept, n_accepted = verdicts, n_verdicts
             elif self.cells_dir is not None:
                 # (doc_id, text, cell_id): batch ids are unique, so
                 # the joins below drop nothing
-                kept = (
-                    kept.join(verdicts, id_col)
-                    .coalesce(4)
-                    .localCheckpoint(eager=True)
+                kept, n_accepted = _checkpoint_counted(
+                    kept.join(verdicts, id_col).coalesce(4)
                 )
-            n_accepted = kept.count()
             rows = kept.drop("cell_id")
             if self.cells_dir is not None:
                 rows = rows.join(batch.select(id_col, self.vec_col), id_col)
@@ -2103,9 +2115,10 @@ def _screen_semantic_core(
     id_col: str,
     method: str,
     max_cell_size: int | None,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """The semantic leg of the one screen body (:meth:`_Lake.screen`):
-    (id, cell_id) of the KEPT batch rows, materialized.  Corpus side
+    (id, cell_id) of the KEPT batch rows, materialized, and their
+    count.  Corpus side
     = static ``corpus_emb`` + accepted partitions < ``cutoff`` (rows
     from ``accepted_dir``, assignments from ``quantizer/base`` +
     ``incr/batch_id<cutoff``)."""
@@ -2134,10 +2147,8 @@ def _screen_semantic_core(
         corpus_cells=cells,
     ).filter(F.col("kept"))
     # one screen execution feeds every downstream consumer:
-    # materialize the tiny (id, cell) verdict rows once
-    return verdicts.select(id_col, "cell_id").localCheckpoint(
-        eager=True
-    )
+    # materialize the tiny (id, cell) verdict rows once, and count them
+    return _checkpoint_counted(verdicts.select(id_col, "cell_id"))
 
 
 def screen_semantic_micro_batch(

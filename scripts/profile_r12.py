@@ -22,6 +22,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from kafka_sparkstreaming_sbt_spark.session import get_spark  # noqa: E402
 from kafka_sparkstreaming_sbt_spark.sources.batch import read_table  # noqa: E402
+from perfbench.tracing import JobGroups  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
@@ -47,15 +48,15 @@ def timed(spark, name: str, build) -> float:
 
 
 def job_count(spark, name: str, build) -> int:
-    """Number of Spark jobs one cold execution of `build()` runs."""
+    """Number of Spark jobs one cold execution of `build()` runs,
+    read once the group's jobs have settled in the status store."""
     gid = f"jc-{uuid.uuid4()}"
-    sc = spark.sparkContext
-    sc.setJobGroup(gid, name)
-    t0 = time.perf_counter()
-    _noop(build())
-    dt = time.perf_counter() - t0
-    jobs = sc.statusTracker().getJobIdsForGroup(gid)
-    sc.setJobGroup(None, None)
+    groups = JobGroups(spark)
+    with groups.group(gid):
+        t0 = time.perf_counter()
+        _noop(build())
+        dt = time.perf_counter() - t0
+    jobs = groups.job_ids(gid)
     spark.catalog.clearCache()
     print(f"{name:40s} jobs={len(jobs):3d}  wall={dt:7.3f}s", flush=True)
     return len(jobs)

@@ -2,8 +2,10 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -22,6 +24,64 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL
+
+
+class TiedVectors:
+    """Exact-tie input for the top-k tier parity tests: 40 rows of
+    small-integer 8-dim vectors, where three ids in four hold a copy
+    of ONE vector and the rest point away from it.  Every tier scores
+    the copies against each other with the same exact value, so only
+    the tie-break (the smaller neighbor id) orders them.  Read under
+    :meth:`small_batches`, the copies straddle Arrow batches, and a
+    k=2 search has to cut tied copies inside one batch."""
+
+    TIE = [1, 2, 3, 1, 2, 1, 3, 2]
+    ids = tuple(i for i in range(40) if i % 4 != 1)
+    query_ids = (39, 32)  # tied queries; id 1 is queried too
+
+    def __init__(self, spark):
+        self.spark = spark
+        # label 0 on every eighth id: hard negatives of a label-1
+        # copy are the few label-0 copies, and of a label-0 copy the
+        # many label-1 ones
+        self.label = {i: int(i % 8 != 0) for i in range(40)}
+        rows = []
+        for i in range(40):
+            vec = self.TIE if i in self.ids else [
+                -1 - i % 4, i % 3, -2, 1 - i % 5, -1, i % 2, -3, -(i % 7),
+            ]
+            rows.append((i, [float(x) for x in vec], self.label[i]))
+        self.df = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, label long"
+        )
+        self.queries = self.df.filter(
+            F.col("vec_id").isin(*self.query_ids, 1)
+        )
+
+    def smallest(self, q: int, k: int, other_label: bool = False) -> list:
+        """The k smallest tied ids a tied query ``q`` must get back:
+        self excluded, and same-label copies too for hard negatives."""
+        return [
+            t
+            for t in self.ids
+            if t != q
+            and not (other_label and self.label[t] == self.label[q])
+        ][:k]
+
+    @contextmanager
+    def small_batches(self):
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = self.spark.conf.get(key)
+        self.spark.conf.set(key, "4")
+        try:
+            yield
+        finally:
+            self.spark.conf.set(key, old)
+
+
+@pytest.fixture
+def tied_vectors(spark) -> TiedVectors:
+    return TiedVectors(spark)
 
 
 # ---------------------------------------------------------------------

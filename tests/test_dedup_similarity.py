@@ -4,6 +4,8 @@ properties, LSH bucketing behavior."""
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import functions as F
 
 from kafka_sparkstreaming_sbt_spark.operators.dedup_fuzzy import (
@@ -564,54 +566,76 @@ def test_centroid_block_chunking_is_invisible(spark, sf_small):
     assert whole_n == chunked_n
 
 
-def test_cosine_topk_numpy_matches_sql(spark, sf_small):
+def test_cosine_topk_numpy_matches_sql(spark, sf_small, tied_vectors):
     """The BLAS top-k tier returns the identical ranked result set as
     the SQL tier on the fixture corpus — same neighbors, same ranks,
     6-dp-equal cosines (exactness of the per-batch local top-k with
-    its id-ascending stable tie-break)."""
+    its id-ascending stable tie-break).  A second case runs the
+    exact-tie input at k=2 in 4-row Arrow batches: tied copies come
+    back as the smallest ids on both tiers."""
     emb = read_table(spark, sf_small, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 7)
-    sql_rows = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in cosine_topk(emb, queries, k=10).collect()
-    }
-    np_rows = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in cosine_topk(emb, queries, k=10, method="numpy").collect()
-    }
-    assert set(sql_rows) == set(np_rows)
-    for key, (nid, cos) in sql_rows.items():
-        assert np_rows[key][0] == nid
-        assert abs(np_rows[key][1] - cos) <= 1e-6
+    tied = tied_vectors
+    for corpus, queries, k, batches in (
+        (emb, emb.filter(F.col("vec_id") < 7), 10, nullcontext()),
+        (tied.df, tied.queries, 2, tied.small_batches()),
+    ):
+        with batches:
+            sql_rows = {
+                (r.query_id, r.rank): (r.neighbor_id, r.cosine)
+                for r in cosine_topk(corpus, queries, k=k).collect()
+            }
+            np_rows = {
+                (r.query_id, r.rank): (r.neighbor_id, r.cosine)
+                for r in cosine_topk(
+                    corpus, queries, k=k, method="numpy"
+                ).collect()
+            }
+        assert set(sql_rows) == set(np_rows)
+        for key, (nid, cos) in sql_rows.items():
+            assert np_rows[key][0] == nid
+            assert abs(np_rows[key][1] - cos) <= 1e-6
+    for q in tied.query_ids:
+        got = [sql_rows[(q, r)][0] for r in (1, 2)]
+        assert got == tied.smallest(q, 2)
 
 
-def test_ivf_search_numpy_matches_sql(spark, sf_small):
+def test_ivf_search_numpy_matches_sql(spark, sf_small, tied_vectors):
     """The cogroup BLAS IVF search returns the identical ranked rows
     as the SQL candidate-join search for the same centroids and probe
     count: probe sets share the tie-break contract, per-cell scan is
-    exact, and the global rank stage is shared."""
+    exact, and the global rank stage is shared.  A second case runs
+    the exact-tie input at k=2 in 4-row Arrow batches: tied copies
+    come back as the smallest ids on both tiers."""
     from kafka_sparkstreaming_sbt_spark.operators.similarity import (
         _ivf_search,
         deterministic_centroids,
     )
 
     emb = read_table(spark, sf_small, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 37 == 1)
-    cent = deterministic_centroids(emb, n_cells=16)
-    sql_rows = {
-        (r.query_id, r.rank): (r.neighbor_id, round(r.cosine, 6))
-        for r in _ivf_search(
-            emb, queries, cent, 10, 4, search_method="sql"
-        ).collect()
-    }
-    np_rows = {
-        (r.query_id, r.rank): (r.neighbor_id, round(r.cosine, 6))
-        for r in _ivf_search(
-            emb, queries, cent, 10, 4, search_method="numpy"
-        ).collect()
-    }
-    assert sql_rows == np_rows
-    assert sql_rows  # non-degenerate
+    tied = tied_vectors
+    for corpus, queries, k, batches in (
+        (emb, emb.filter(F.col("vec_id") % 37 == 1), 10, nullcontext()),
+        (tied.df, tied.queries, 2, tied.small_batches()),
+    ):
+        cent = deterministic_centroids(corpus, n_cells=16)
+        with batches:
+            sql_rows = {
+                (r.query_id, r.rank): (r.neighbor_id, round(r.cosine, 6))
+                for r in _ivf_search(
+                    corpus, queries, cent, k, 4, search_method="sql"
+                ).collect()
+            }
+            np_rows = {
+                (r.query_id, r.rank): (r.neighbor_id, round(r.cosine, 6))
+                for r in _ivf_search(
+                    corpus, queries, cent, k, 4, search_method="numpy"
+                ).collect()
+            }
+        assert sql_rows == np_rows
+        assert sql_rows  # non-degenerate
+    for q in tied.query_ids:
+        got = [sql_rows[(q, r)][0] for r in (1, 2)]
+        assert got == tied.smallest(q, 2)
 
 
 def test_incremental_semantic_dedup_parity_with_full_run(spark, sf_small):
@@ -907,10 +931,13 @@ def test_label_centroids_matches_numpy_mean(spark):
         )
 
 
-def test_hard_negatives_excludes_same_label_and_self(spark):
+def test_hard_negatives_excludes_same_label_and_self(spark, tied_vectors):
     """Hard-negative mining: every returned neighbor has a different
     label, ranks are dense per query in (cosine DESC, id ASC) order,
-    and the BLAS tier agrees with the SQL tier exactly."""
+    and the BLAS tier agrees with the SQL tier exactly — on the six
+    rows below and on the exact-tie input read in 4-row Arrow
+    batches, where the other-label copies come back as the smallest
+    ids."""
     from kafka_sparkstreaming_sbt_spark.operators.similarity import (
         hard_negatives,
     )
@@ -944,6 +971,25 @@ def test_hard_negatives_excludes_same_label_and_self(spark):
         map(tuple, hard_negatives(df, df, k=2, method="numpy").collect())
     )
     assert np_rows == sorted(map(tuple, out))
+    tied = tied_vectors
+    with tied.small_batches():
+        out = hard_negatives(tied.df, tied.queries, k=2).collect()
+        np_rows = sorted(
+            map(
+                tuple,
+                hard_negatives(
+                    tied.df, tied.queries, k=2, method="numpy"
+                ).collect(),
+            )
+        )
+    assert np_rows == sorted(map(tuple, out))
+    for q in tied.query_ids:
+        got = [
+            n for _, n in sorted(
+                (r.rank, r.neighbor_id) for r in out if r.query_id == q
+            )
+        ]
+        assert got == tied.smallest(q, 2, other_label=True)
 
 
 def test_hard_negatives_numpy_rejects_non_integer_labels(spark):

@@ -4,6 +4,8 @@ float brute-force tier, and the PQ→re-rank economics."""
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,6 +32,15 @@ def emb(spark):
 @pytest.fixture(scope="module")
 def queries(emb):
     return emb.filter(F.col("vec_id") < 20)
+
+
+def _assert_smallest_tied(rows, tied) -> None:
+    """``rows`` are (query_id, neighbor_id, score, rank) tuples of a
+    k=2 search over ``tied.df``: each tied query's neighbors, in rank
+    order, are the two smallest tied ids."""
+    for q in tied.query_ids:
+        got = [n for _, n in sorted((r[3], r[1]) for r in rows if r[0] == q)]
+        assert got == tied.smallest(q, 2)
 
 
 def _recall(approx_df, exact_df) -> float:
@@ -75,12 +86,31 @@ def test_query_side_clamps_to_corpus_grid(spark, emb):
     assert max(out["codes"]) == 127
 
 
-def test_quantized_topk_sql_numpy_bit_identical(emb, queries):
-    a = sorted(map(tuple, quantized_topk(emb, queries, k=10).collect()))
-    b = sorted(
-        map(tuple, quantized_topk(emb, queries, k=10, method="numpy").collect())
-    )
-    assert a == b  # integer arithmetic: no float-tie caveat
+def test_quantized_topk_sql_numpy_bit_identical(
+    emb, queries, tied_vectors
+):
+    """Both tiers agree bit for bit on the fixture corpus and on the
+    exact-tie input at k=2 in 4-row Arrow batches, where tied copies
+    come back as the smallest ids."""
+    tied = tied_vectors
+    for corpus, qs, k, batches in (
+        (emb, queries, 10, nullcontext()),
+        (tied.df, tied.queries, 2, tied.small_batches()),
+    ):
+        with batches:
+            a = sorted(
+                map(tuple, quantized_topk(corpus, qs, k=k).collect())
+            )
+            b = sorted(
+                map(
+                    tuple,
+                    quantized_topk(
+                        corpus, qs, k=k, method="numpy"
+                    ).collect(),
+                )
+            )
+        assert a == b  # integer arithmetic: no float-tie caveat
+    _assert_smallest_tied(a, tied)
 
 
 def test_quantized_topk_recall_vs_float(emb, queries):
@@ -112,20 +142,34 @@ def test_pq_encode_sql_numpy_bit_identical(emb):
     assert a == b  # int argmin, same smaller-code tie-break
 
 
-def test_pq_topk_sql_numpy_bit_identical(emb, queries):
-    books = pq_codebooks(emb, n_subspaces=4, n_codes=16)
-    scale = quantization_scale(emb)
-    enc = pq_encode(emb, books)
-    a = sorted(
-        map(tuple, pq_topk(enc, queries, books, scale, k=10).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            pq_topk(enc, queries, books, scale, k=10, method="numpy").collect(),
-        )
-    )
-    assert a == b
+def test_pq_topk_sql_numpy_bit_identical(emb, queries, tied_vectors):
+    """Both tiers agree bit for bit on the fixture corpus and on the
+    exact-tie input at k=2 in 4-row Arrow batches, where tied copies
+    come back as the smallest ids."""
+    tied = tied_vectors
+    for corpus, qs, k, batches in (
+        (emb, queries, 10, nullcontext()),
+        (tied.df, tied.queries, 2, tied.small_batches()),
+    ):
+        books = pq_codebooks(corpus, n_subspaces=4, n_codes=16)
+        scale = quantization_scale(corpus)
+        enc = pq_encode(corpus, books)
+        with batches:
+            a = sorted(
+                map(
+                    tuple, pq_topk(enc, qs, books, scale, k=k).collect()
+                )
+            )
+            b = sorted(
+                map(
+                    tuple,
+                    pq_topk(
+                        enc, qs, books, scale, k=k, method="numpy"
+                    ).collect(),
+                )
+            )
+        assert a == b
+    _assert_smallest_tied(a, tied)
 
 
 def test_kmeans_books_beat_deterministic_on_candidate_recall(emb, queries):
