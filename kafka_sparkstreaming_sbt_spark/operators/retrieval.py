@@ -48,6 +48,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..schemas import columns
+from ..sources.batch import read_parquet
 
 from .topk import global_topk_with_rank
 
@@ -229,7 +233,27 @@ def rrf_fuse(
 # replayed append dynamically overwrites the same upto=G+1 dirs
 # (idempotent), and no reader ever sees postings priced with stale
 # df/avgdl.  Single-writer contract, like every lake artifact here.
+# Every read declares its schema below; partition columns come last,
+# typed as partition discovery types them.
 # ---------------------------------------------------------------------
+
+_DFREQ_SCHEMA = columns(
+    ("token", T.StringType()), ("df", T.LongType()),
+    ("bucket", T.IntegerType()),
+)
+_STATS_SCHEMA = columns(
+    ("n_docs", T.LongType()), ("total_dl", T.LongType()),
+    ("n_buckets", T.LongType()),
+)
+
+
+def _postings_schema(id_col: str, id_type: T.DataType) -> T.StructType:
+    """``postings``, in the indexed corpus's id type."""
+    return columns(
+        (id_col, id_type), ("dl", T.IntegerType()), ("token", T.StringType()),
+        ("tf", T.LongType()), ("upto", T.IntegerType()),
+        ("bucket", T.IntegerType()),
+    )
 
 
 def _score_postings(
@@ -392,9 +416,10 @@ def build_inverted_index(
         .option("partitionOverwriteMode", "dynamic")
         .parquet(f"{index_dir}/postings")
     )
-    written = spark.read.parquet(f"{index_dir}/postings").filter(
-        F.col("upto") == 0
-    )
+    written = read_parquet(
+        spark, f"{index_dir}/postings",
+        _postings_schema(id_col, df.schema[id_col].dataType),
+    ).filter(F.col("upto") == 0)
     dfreq = written.groupBy("token", "bucket").agg(
         F.count(F.lit(1)).alias("df")
     )
@@ -406,12 +431,14 @@ def build_inverted_index(
     stats = doclen.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("total_dl"),
-        F.lit(n_buckets).alias("n_buckets"),
+        F.lit(n_buckets).cast("long").alias("n_buckets"),
     )
     stats.write.mode("overwrite").parquet(
         f"{index_dir}/meta/upto=0/stats"
     )
-    row = spark.read.parquet(f"{index_dir}/meta/upto=0/stats").first()
+    row = read_parquet(
+        spark, f"{index_dir}/meta/upto=0/stats", _STATS_SCHEMA
+    ).first()
     return {
         "generation": 0,
         "n_docs": row.n_docs,
@@ -443,8 +470,8 @@ def append_to_index(
         raise ValueError(
             f"no committed index at {index_dir} — build_inverted_index first"
         )
-    stats_old = spark.read.parquet(
-        f"{index_dir}/meta/upto={g}/stats"
+    stats_old = read_parquet(
+        spark, f"{index_dir}/meta/upto={g}/stats", _STATS_SCHEMA
     ).first()
     n_buckets = stats_old.n_buckets
     # Crash recovery: drop orphan postings from a partially-committed
@@ -464,13 +491,16 @@ def append_to_index(
         .option("partitionOverwriteMode", "dynamic")
         .parquet(f"{index_dir}/postings")
     )
-    new_rows = spark.read.parquet(f"{index_dir}/postings").filter(
-        F.col("upto") == g + 1
-    )
+    new_rows = read_parquet(
+        spark, f"{index_dir}/postings",
+        _postings_schema(id_col, df_new.schema[id_col].dataType),
+    ).filter(F.col("upto") == g + 1)
     dfreq_new = new_rows.groupBy("token", "bucket").agg(
         F.count(F.lit(1)).alias("df")
     )
-    dfreq_old = spark.read.parquet(f"{index_dir}/meta/upto={g}/dfreq")
+    dfreq_old = read_parquet(
+        spark, f"{index_dir}/meta/upto={g}/dfreq", _DFREQ_SCHEMA
+    )
     merged = (
         dfreq_old.unionByName(dfreq_new)
         .groupBy("token", "bucket")
@@ -521,7 +551,9 @@ def bm25_topk_from_index(
     g = _committed_generation(spark, index_dir)
     if g < 0:
         raise ValueError(f"no committed index at {index_dir}")
-    stats_df = spark.read.parquet(f"{index_dir}/meta/upto={g}/stats")
+    stats_df = read_parquet(
+        spark, f"{index_dir}/meta/upto={g}/stats", _STATS_SCHEMA
+    )
     n_buckets = stats_df.first().n_buckets
     terms = sorted(set(query_terms))
     # |q|-row collect: the terms' partition buckets (xxhash64 is
@@ -533,8 +565,10 @@ def bm25_topk_from_index(
         F.pmod(F.xxhash64("token"), F.lit(int(n_buckets))).alias("b"),
     )
     buckets = sorted({int(r.b) for r in trows.collect()})
+    # the postings' id type is the indexed corpus's, which a query
+    # call does not know: this one read infers it
     post = (
-        spark.read.parquet(f"{index_dir}/postings")
+        read_parquet(spark, f"{index_dir}/postings", None)
         .filter(
             (F.col("upto") <= g)
             & F.col("bucket").isin(buckets)
@@ -543,7 +577,7 @@ def bm25_topk_from_index(
         .select(id_col, "dl", "token", "tf")
     )
     dfreq = (
-        spark.read.parquet(f"{index_dir}/meta/upto={g}/dfreq")
+        read_parquet(spark, f"{index_dir}/meta/upto={g}/dfreq", _DFREQ_SCHEMA)
         .filter(F.col("bucket").isin(buckets) & F.col("token").isin(terms))
         .select("token", "df")
     )

@@ -54,11 +54,12 @@ def write_jdbc_append(df: DataFrame, cfg: JdbcConfig) -> None:
     Scale notes vs the reference: executors open one connection per
     partition, so we coalesce to ``num_partitions`` before tiny-batch
     writes (SURVEY.md §4 'JDBC write parallelism') and set an explicit
-    ``batchsize``.
+    ``batchsize``.  The coalesce is unconditional: it never raises the
+    partition count, and probing the count first
+    (``df.rdd.getNumPartitions()``) makes AQE run the frame's shuffle
+    stages as a job of their own, which the write then runs again.
     """
-    out = df
-    if cfg.num_partitions and df.rdd.getNumPartitions() > cfg.num_partitions:
-        out = df.coalesce(cfg.num_partitions)
+    out = df.coalesce(cfg.num_partitions) if cfg.num_partitions else df
     (
         out.write.format("jdbc")
         .option("url", cfg.url)

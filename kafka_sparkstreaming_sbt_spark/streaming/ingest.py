@@ -77,6 +77,13 @@ parquet dir cannot hold one, so the bloom base records M in an
 ``upto`` column.  ``_Lake`` runs the whole lifecycle for the drivers:
 recovery and materialization at start, the ``compact_every`` fold,
 the drift HOLD, release-partition deletes and the stream start.
+
+Every artifact read declares its schema (``sources.batch.read_parquet``;
+each ``_*_SCHEMA`` sits next to its writer, with id columns in the
+corpus's id type), and ``batch_id`` partitions are read in their union
+partner's schema, so a trigger runs no schema-inference job.  Only
+reads of rows whose shape is the stream's infer: compaction folds, a
+held batch, and the accepted lake in ``rebuild_drift_baseline``.
 """
 
 from __future__ import annotations
@@ -88,8 +95,14 @@ from dataclasses import dataclass, fields
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
+
+from kafka_sparkstreaming_sbt_spark.schemas import columns
+from kafka_sparkstreaming_sbt_spark.sources.batch import read_parquet
+
+_LONG, _STRING, _DOUBLE = T.LongType(), T.StringType(), T.DoubleType()
 
 
 def _one_row_bitmap_df(
@@ -150,17 +163,22 @@ def _staged(stage_sec: dict | None, name: str):
 
 
 def _prior_partitions(
-    spark, path: str, before_batch: int
+    spark, path: str, before_batch: int, schema: T.StructType | None
 ) -> DataFrame | None:
     """Partitions of a ``batch_id=N``-layout parquet dir STRICTLY
     before ``before_batch`` (replay safety), None when nothing exists
-    yet.  The listing comes first: once the session has used an
-    ``Observation``, Spark's observation listener logs every read
-    that fails analysis at ERROR."""
+    yet.  ``schema`` declares the partitions' data columns (None
+    infers them, one Spark job).  The listing comes first: once the
+    session has used an ``Observation``, Spark's observation listener
+    logs every read that fails analysis at ERROR."""
     if not _list_batch_ids(spark, path):
         return None
+    if schema is not None:
+        schema = columns(
+            *((f.name, f.dataType) for f in schema), ("batch_id", _LONG)
+        )
     try:
-        prior = spark.read.parquet(path)
+        prior = read_parquet(spark, path, schema)
     except AnalysisException:
         return None
     if "batch_id" not in prior.columns:  # empty dir edge
@@ -170,9 +188,10 @@ def _prior_partitions(
 
 def _with_prior(df: DataFrame, path: str, before_batch: int) -> DataFrame:
     """``df`` UNION the partitions of ``path`` strictly before
-    ``before_batch`` (:func:`_prior_partitions`), in ``df``'s columns."""
-    prior = _prior_partitions(df.sparkSession, path, before_batch)
-    return df if prior is None else df.unionByName(prior.select(df.columns))
+    ``before_batch`` (:func:`_prior_partitions`), read with ``df``'s
+    schema: the partitions hold rows of the same shape as ``df``."""
+    prior = _prior_partitions(df.sparkSession, path, before_batch, df.schema)
+    return df if prior is None else df.unionByName(prior)
 
 
 def _hadoop_fs(spark, path: str):
@@ -392,10 +411,10 @@ def compact_batch_partitions(
             for k in covered
         )
         n_files = max(1, math.ceil(total_bytes / target_file_bytes))
+        # any batch_id dir, accepted rows included: its shape is the
+        # caller's, so the one read per fold infers it
         (
-            spark.read.parquet(path)
-            .filter(F.col("batch_id") < upto_batch)
-            .drop("batch_id")
+            _prior_partitions(spark, path, upto_batch, None)
             .repartition(n_files)
             .write.mode("overwrite")
             .parquet(staging)
@@ -452,6 +471,12 @@ def materialize_corpus_signatures(
     _materialize_signatures(corpus_docs, signature_dir, shingle_n, n_bands)
 
 
+def _signature_schema(id_type: T.DataType) -> T.StructType:
+    """``signature_dir/{base,incr}``: ``(doc_id, bs)`` banded keys, in
+    the corpus's doc id type."""
+    return columns(("doc_id", id_type), ("bs", _LONG))
+
+
 #: Version of the banded bucket-key values in ``signature_dir``.  Bump
 #: it whenever ``dedup_fuzzy.banded_bucket_keys`` changes the keys it
 #: emits for the same text: 1 = xxhash64 over the parsed long band
@@ -493,10 +518,10 @@ def _materialize_signatures(
         accepted_ids = (
             _list_batch_ids(spark, accepted_dir) if accepted_dir else []
         )
+        rows = corpus_docs.select("doc_id", "text").schema
         for k in accepted_ids:
             banded_signature_table(
-                spark.read.parquet(f"{accepted_dir}/batch_id={k}")
-                .select("doc_id", "text"),
+                read_parquet(spark, f"{accepted_dir}/batch_id={k}", rows),
                 shingle_n=shingle_n, n_bands=n_bands,
                 compute_partitions=4,
             ).write.mode("overwrite").parquet(
@@ -507,6 +532,10 @@ def _materialize_signatures(
     ).write.mode("overwrite").parquet(base)
     if rekey:
         _touch(spark, f"{signature_dir}/_FORMAT={_SIGNATURE_FORMAT}")
+
+
+#: ``span_dir/{base,incr}``: distinct window hashes
+_WINDOW_HASH_SCHEMA = columns(("wh", _STRING))
 
 
 def materialize_corpus_window_hashes(
@@ -532,6 +561,13 @@ def materialize_corpus_window_hashes(
     window_hash_table(
         corpus_docs, window_tokens=window_tokens
     ).write.mode("overwrite").parquet(base)
+
+
+#: ``drift_dir/baseline``: ``profile_columns`` rows, one per column
+_PROFILE_SCHEMA = columns(
+    ("column", _STRING), ("n_rows", _LONG), ("n_null", _LONG),
+    ("n_distinct", _LONG), ("min_value", _STRING), ("max_value", _STRING),
+)
 
 
 def materialize_drift_baseline(
@@ -616,6 +652,17 @@ def _batch_drift_alarms(
 # text.  Bloom false positives cost one extra hash-join row, nothing
 # else; survivors still flow through the near-dup screen, which is
 # what catches non-exact duplicates.
+
+
+#: ``exact_dir/hashes/{base,incr}``: md5 of each text
+_HASHES_SCHEMA = columns(("h", _STRING))
+#: ``exact_dir/bloom/base``: the one bitmap row and its generation
+_BLOOM_BASE_SCHEMA = columns(
+    ("n_bits", _LONG), ("n_hashes", _LONG), ("bitmap", T.BinaryType()),
+    ("upto", _LONG),
+)
+#: ``exact_dir/bloom/incr/batch_id=N``: one bitmap row per batch
+_BLOOM_INCR_SCHEMA = columns(("bitmap", T.BinaryType()))
 
 
 def materialize_exact_screen(
@@ -728,10 +775,12 @@ def _load_exact_bloom(
     (:func:`fold_bloom_partitions`) keeps the row count bounded."""
     import numpy as np
 
-    base = spark.read.parquet(f"{exact_dir}/bloom/base").collect()[0]
+    base = read_parquet(
+        spark, f"{exact_dir}/bloom/base", _BLOOM_BASE_SCHEMA
+    ).collect()[0]
     bm = np.frombuffer(bytes(base.bitmap), dtype=np.uint8).copy()
     prior = _prior_partitions(
-        spark, f"{exact_dir}/bloom/incr", before_batch
+        spark, f"{exact_dir}/bloom/incr", before_batch, _BLOOM_INCR_SCHEMA
     )
     if prior is not None:
         for r in prior.select("bitmap").collect():
@@ -758,7 +807,7 @@ def exact_screen_batch(
     negatives = flagged.filter(~F.col("bloom_maybe")).drop("bloom_maybe")
     positives = flagged.filter(F.col("bloom_maybe")).drop("bloom_maybe")
     hashes = _with_prior(
-        spark.read.parquet(f"{exact_dir}/hashes/base"),
+        read_parquet(spark, f"{exact_dir}/hashes/base", _HASHES_SCHEMA),
         f"{exact_dir}/hashes/incr", batch_id,
     )
     confirmed = positives.join(
@@ -782,9 +831,9 @@ def _write_exact_incr(
         build_bloom_bitmap,
     )
 
-    base = spark.read.parquet(f"{exact_dir}/bloom/base").select(
-        "n_bits", "n_hashes"
-    ).collect()[0]
+    base = read_parquet(
+        spark, f"{exact_dir}/bloom/base", _BLOOM_BASE_SCHEMA
+    ).select("n_bits", "n_hashes").collect()[0]
     bitmap = build_bloom_bitmap(
         accepted, "text", int(base.n_bits), int(base.n_hashes)
     )
@@ -804,12 +853,9 @@ def fold_bloom_partitions(
     import numpy as np
 
     def stage(covered: list[int], staging: str) -> None:
-        rows = (
-            spark.read.parquet(path)
-            .filter(F.col("batch_id") < upto_batch)
-            .select("bitmap")
-            .collect()
-        )
+        rows = _prior_partitions(
+            spark, path, upto_batch, _BLOOM_INCR_SCHEMA
+        ).collect()
         acc = np.frombuffer(bytes(rows[0].bitmap), dtype=np.uint8).copy()
         for r in rows[1:]:
             acc |= np.frombuffer(bytes(r.bitmap), dtype=np.uint8)
@@ -913,7 +959,10 @@ def _screen_text_core(
     corpus_sigs = None
     if signature_dir is not None:
         corpus_sigs = _with_prior(
-            spark.read.parquet(f"{signature_dir}/base"),
+            read_parquet(
+                spark, f"{signature_dir}/base",
+                _signature_schema(corpus_docs.schema["doc_id"].dataType),
+            ),
             f"{signature_dir}/incr", cutoff,
         )
     if exact_dir is not None:
@@ -938,13 +987,20 @@ def _screen_text_core(
         )
 
         hashes = _with_prior(
-            spark.read.parquet(f"{span_dir}/base"),
+            read_parquet(spark, f"{span_dir}/base", _WINDOW_HASH_SCHEMA),
             f"{span_dir}/incr", cutoff,
         )
         with _staged(stage_sec, "span"):
+            # exact copies within the batch share every window, so the
+            # stage would excise all of them: first keep the smallest
+            # id of each copy set, the survivor the near-dup
+            # self-pair screen keeps
+            first_copies = batch_df.groupBy("text").agg(
+                F.min("doc_id").alias("doc_id")
+            )
             batch_df = (
                 remove_duplicate_spans_incremental(
-                    batch_df,
+                    first_copies,
                     corpus_hashes=hashes,
                     window_tokens=span_window_tokens,
                 )
@@ -1219,8 +1275,8 @@ class _Lake:
                 corpus_docs, self.drift_dir, self.drift_cols
             )
             # |cols| rows — pin once, read on every trigger
-            self.baseline = spark.read.parquet(
-                f"{self.drift_dir}/baseline"
+            self.baseline = read_parquet(
+                spark, f"{self.drift_dir}/baseline", _PROFILE_SCHEMA
             ).localCheckpoint(eager=True)
         return self
 
@@ -1462,7 +1518,10 @@ class _Lake:
         )
 
         # the generation the screen just used — no lake re-read
-        cents, _, baseline = _quantizer_tables(self.spark, self.cells_dir)
+        cents, _, baseline = _quantizer_tables(
+            self.spark, self.cells_dir, self.id_col,
+            self.corpus_emb.schema[self.id_col].dataType,
+        )
         drift = baseline() - assignment_quality(
             batch.select(self.id_col, self.vec_col), cents,
             self.vec_col, self.id_col,
@@ -1650,7 +1709,8 @@ def rebuild_drift_baseline(
 
     spark = corpus_docs.sparkSession
     acc = (
-        _prior_partitions(spark, accepted_dir, 1 << 62)
+        # the accepted rows' shape is the stream's: inferred
+        _prior_partitions(spark, accepted_dir, 1 << 62, None)
         if accepted_dir is not None
         else None
     )
@@ -1752,12 +1812,13 @@ def release_held_batches(
     held_ids = _list_batch_ids(spark, held_root)
     if not held_ids:
         return results
-    baseline = spark.read.parquet(f"{drift_dir}/baseline").localCheckpoint(
-        eager=True
-    )
+    baseline = read_parquet(
+        spark, f"{drift_dir}/baseline", _PROFILE_SCHEMA
+    ).localCheckpoint(eager=True)
     for held_id in held_ids:
-        batch = spark.read.parquet(
-            f"{held_root}/batch_id={held_id}"
+        # a held batch is whatever the stream delivered: inferred
+        batch = read_parquet(
+            spark, f"{held_root}/batch_id={held_id}", None
         ).drop("batch_id").localCheckpoint(eager=True)
         alarms = _batch_drift_alarms(
             baseline, batch, drift_cols, drift_null_jump,
@@ -1803,6 +1864,14 @@ def release_held_batches(
 # slice (``quality_negatives``) — the CCNet recipe's refresh step.
 
 
+#: ``<generation>/model``: the ``nb_train`` frame
+_QUALITY_MODEL_SCHEMA = columns(
+    ("bucket", T.IntegerType()), ("w_micro", _LONG)
+)
+#: ``<generation>/baseline``: the corpus mean score
+_QUALITY_BASELINE_SCHEMA = columns(("mean_score_micro", _DOUBLE))
+
+
 def _write_quality_generation(
     spark,
     model: DataFrame,
@@ -1819,7 +1888,9 @@ def _write_quality_generation(
         nb_score,
     )
 
-    model = model.localCheckpoint(eager=True)
+    model = model.select(
+        *(F.col(f.name).cast(f.dataType) for f in _QUALITY_MODEL_SCHEMA)
+    ).localCheckpoint(eager=True)
     model.write.mode("overwrite").parquet(f"{dest}/model")
     mean = (
         nb_score(score_corpus, model, n_buckets=n_buckets, seed=seed)
@@ -1906,10 +1977,12 @@ def _load_quality_generation(spark, quality_dir: str):
     generation, cached per generation."""
 
     def load(current: str):
-        model = spark.read.parquet(f"{current}/model").localCheckpoint(
-            eager=True
-        )
-        baseline = spark.read.parquet(f"{current}/baseline").collect()
+        model = read_parquet(
+            spark, f"{current}/model", _QUALITY_MODEL_SCHEMA
+        ).localCheckpoint(eager=True)
+        baseline = read_parquet(
+            spark, f"{current}/baseline", _QUALITY_BASELINE_SCHEMA
+        ).collect()
         return model, float(baseline[0][0])
 
     return _quality_generation(spark, quality_dir).load(load)
@@ -1959,7 +2032,24 @@ def _quantizer_generation(spark, cells_dir: str) -> _Generation:
     )
 
 
-def _quantizer_tables(spark, cells_dir: str):
+#: ``quantizer/centroids``: the frozen cells
+_CENTROIDS_SCHEMA = columns(
+    ("cell_id", _LONG), ("c_vec", T.ArrayType(_DOUBLE, True))
+)
+#: ``quantizer/quality``: the assignment-quality baseline
+_ASSIGN_QUALITY_SCHEMA = columns(("q", _DOUBLE))
+
+
+def _cells_schema(id_col: str, id_type: T.DataType) -> T.StructType:
+    """``quantizer/base`` and ``incr``: ``(id, cell_id)`` assignments,
+    in the corpus's id type."""
+    return columns((id_col, id_type), ("cell_id", _LONG))
+
+
+def _quantizer_tables(
+    spark, cells_dir: str, id_col: str = "vec_id",
+    id_type: T.DataType = _LONG,
+):
     """(centroids, base, quality) of the committed quantizer
     generation under ``cells_dir`` — loaded once per generation and
     reused across triggers.  The centroids frame is a stable
@@ -1977,11 +2067,17 @@ def _quantizer_tables(spark, cells_dir: str):
         # stale cached rows; a checkpoint rebases onto an ExistingRDD
         # and leaves path reads untouched (caught by
         # test_quantizer_rebuild_crash_recovery).
-        centroids = spark.read.parquet(f"{dest}/centroids")
-        base = spark.read.parquet(f"{dest}/base")
+        centroids = read_parquet(
+            spark, f"{dest}/centroids", _CENTROIDS_SCHEMA
+        )
+        base = read_parquet(
+            spark, f"{dest}/base", _cells_schema(id_col, id_type)
+        )
         quality = functools.cache(
             lambda: float(
-                spark.read.parquet(f"{dest}/quality").collect()[0].q
+                read_parquet(
+                    spark, f"{dest}/quality", _ASSIGN_QUALITY_SCHEMA
+                ).collect()[0].q
             )
         )
         return (
@@ -2010,7 +2106,9 @@ def _write_quantizer(
         ivf_assign,
     )
 
-    centroids = centroids.localCheckpoint(eager=True)  # 3 consumers
+    centroids = centroids.select(
+        *(F.col(f.name).cast(f.dataType) for f in _CENTROIDS_SCHEMA)
+    ).localCheckpoint(eager=True)  # 3 consumers
     centroids.write.mode("overwrite").parquet(f"{dest}/centroids")
     ivf_assign(
         quantizer_corpus, centroids, vec_col, id_col
@@ -2133,7 +2231,9 @@ def _screen_semantic_core(
     # generation-cached quantizer tables (VERDICT r11 #4): frozen for
     # the generation's lifetime, so no trigger re-reads them from the
     # lake; the per-trigger increments below stay fresh reads
-    centroids, cells, _ = _quantizer_tables(spark, cells_dir)
+    centroids, cells, _ = _quantizer_tables(
+        spark, cells_dir, id_col, corpus_emb.schema[id_col].dataType
+    )
     cells = _with_prior(cells, f"{cells_dir}/incr", cutoff)
     verdicts = incremental_semantic_dedup(
         batch_df,

@@ -105,6 +105,32 @@ def test_jdbc_write_then_read_back(spark, daily_table):
     assert len(_read_back(spark, daily_table)) == 3
 
 
+def test_jdbc_append_runs_a_shuffled_plan_once(spark, daily_table):
+    """A batch frame with a shuffle is written in its two AQE jobs (the
+    shuffle-map stage, then the write): probing its partition count
+    before the coalesce ran the shuffle as one more job, and the write
+    ran it again."""
+    import uuid
+
+    from perfbench.tracing import JobGroups
+
+    daily = (
+        spark.range(2000)
+        .select(
+            (F.col("id") % 50).cast("string").alias("customer_id"),
+            F.lit(dt.date(2025, 3, 10)).alias("transaction_date"),
+            F.col("id").cast("double").alias("v"),
+        )
+        .groupBy("customer_id", "transaction_date")
+        .agg(F.sum("v").alias("total_spent"))
+    )
+    jobs, gid = JobGroups(spark), f"jdbc-{uuid.uuid4()}"
+    with jobs.group(gid):
+        write_jdbc_append(daily, _cfg(daily_table))
+    assert len(jobs.job_ids(gid)) <= 2
+    assert len(_read_back(spark, daily_table)) == 50
+
+
 def test_jdbc_pk_violation_raises_and_rolls_back(spark, daily_table):
     """IT:468-496 analog: appending rows whose (customer, date) key
     already exists violates the PRIMARY KEY; the failed partition is

@@ -1123,6 +1123,43 @@ def test_span_stage_excises_corpus_and_prior_batch_spans(spark, dirs):
         shutil.rmtree(span_dir, ignore_errors=True)
 
 
+def test_span_stage_keeps_first_of_exact_copies_in_one_batch(
+    spark, dirs
+):
+    """Two exact copies in one batch share every window, so the span
+    stage alone would excise both to empty; the screen keeps the
+    smallest id of the copies, as it does without ``span_dir``."""
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        materialize_corpus_window_hashes,
+        screen_micro_batch,
+    )
+
+    _, acc, _ = dirs
+    span_dir = tempfile.mkdtemp(prefix="span_")
+    acc_plain = tempfile.mkdtemp(prefix="acc_")
+    try:
+        corpus = spark.createDataFrame(
+            [(0, T["c0"])], "doc_id long, text string"
+        )
+        materialize_corpus_window_hashes(corpus, span_dir, 8)
+        batch = spark.createDataFrame(
+            [(11, T["u1"]), (12, T["u2"]), (13, T["u2"])],
+            "doc_id long, text string",
+        )
+        assert screen_micro_batch(batch, 0, corpus, acc_plain) == (3, 2)
+        assert screen_micro_batch(
+            batch, 0, corpus, acc, span_dir=span_dir, span_window_tokens=8
+        ) == (3, 2)
+        for lake in (acc_plain, acc):
+            got = spark.read.parquet(lake).collect()
+            assert sorted((r.doc_id, r.text) for r in got) == [
+                (11, T["u1"]), (12, T["u2"])
+            ]
+    finally:
+        shutil.rmtree(span_dir, ignore_errors=True)
+        shutil.rmtree(acc_plain, ignore_errors=True)
+
+
 def test_span_stage_replay_idempotent_and_matches_one_shot(spark, dirs):
     """Replaying a batch through the span-staged screen leaves the
     lake AND the span incr byte-identical; the accepted text equals
