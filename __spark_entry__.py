@@ -2007,9 +2007,9 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_customer_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer monthly-spend regression (built-in regr_slope /
-    regr_intercept partial->final moment aggregation; no window, no
-    Python) for customers active >= 3 distinct months."""
+    """Per-customer monthly-spend regression (exact integer moment
+    sums in one hash aggregation; no window, no Python) for customers
+    active >= 3 distinct months."""
     from kafka_sparkstreaming_sbt_spark.operators.analytics import (
         customer_spend_trend,
     )
@@ -4134,27 +4134,31 @@ def oracle_sql() -> dict[str, str]:
                  AS retention_rate
         FROM ret JOIN sizes ON ret.cohort_d = sizes.cohort_d
         """,
-        # x is the small month index (0..84) so the regression moments
-        # stay far from float cancellation; 4-dp round is stable
+        # exact moment sums (cents, month index) as BIGINT, then one
+        # double division each: the same doubles Spark computes
         "customer_trend": """
         WITH monthly AS (
-          SELECT o_custkey, date_trunc('month', o_orderdate) AS m,
-                 ROUND(SUM(o_totalprice), 2) AS spend
+          SELECT o_custkey,
+                 CAST(date_diff('month', DATE '1992-01-01',
+                      date_trunc('month', o_orderdate)) AS BIGINT) AS x,
+                 CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
+                      AS BIGINT) AS y
           FROM orders GROUP BY 1, 2
         ),
         per AS (
-          SELECT o_custkey, COUNT(*) AS n_months,
-                 ROUND(regr_slope(spend,
-                   CAST(date_diff('month', DATE '1992-01-01', m)
-                        AS DOUBLE)), 4) AS slope,
-                 ROUND(regr_intercept(spend,
-                   CAST(date_diff('month', DATE '1992-01-01', m)
-                        AS DOUBLE)), 4) AS intercept
+          SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n,
+                 CAST(SUM(x) AS BIGINT) AS sx,
+                 CAST(SUM(y) AS BIGINT) AS sy,
+                 CAST(SUM(x * y) AS BIGINT) AS sxy,
+                 CAST(SUM(x * x) AS BIGINT) AS sxx
           FROM monthly GROUP BY o_custkey
         )
-        SELECT o_custkey, CAST(n_months AS BIGINT) AS n_months,
-               slope, intercept
-        FROM per WHERE n_months >= 3
+        SELECT o_custkey, n AS n_months,
+               CAST(n * sxy - sx * sy AS DOUBLE)
+                 / CAST((n * sxx - sx * sx) * 100 AS DOUBLE) AS slope,
+               CAST(sy * sxx - sx * sxy AS DOUBLE)
+                 / CAST((n * sxx - sx * sx) * 100 AS DOUBLE) AS intercept
+        FROM per WHERE n >= 3
         """,
         "quantized_embeddings": "WITH "
         + _QUANT_CTES

@@ -434,24 +434,44 @@ def customer_spend_trend(orders: DataFrame, min_months: int = 3) -> DataFrame:
     (months since 1992-01), for customers active in at least
     ``min_months`` distinct months.
 
-    Uses the built-in ``regr_slope``/``regr_intercept`` aggregates —
-    JVM-side partial->final moment sums (count, Σx, Σy, Σxy, Σx²),
-    so the whole regression is one hash aggregation per customer, no
-    window, no Python.  The month index keeps x small (0..84 for the
-    TPC-H date range), which bounds the float cancellation in the
-    covariance so a 4-dp round is stable across engines.
+    One hash aggregation per customer over exact moment sums: spend
+    in integer cents ``y``, the integer month index ``x``, and
+    ``n, Σx, Σy, Σxy, Σx²`` as longs.  The least-squares numerators
+    and denominator are then exact integers, and each of slope and
+    intercept is one correctly rounded double division of them.  So
+    the result does not depend on summation order, and another
+    engine that sums the same integers returns the same doubles
+    (float moments, as ``regr_slope`` keeps them, moved a slope by
+    1e-4 between runs).  Null for a customer with a single month,
+    which only a ``min_months`` below 2 keeps.
     """
     monthly = orders.groupBy(
         "o_custkey", F.trunc("o_orderdate", "month").alias("_m")
-    ).agg(F.round(F.sum("o_totalprice"), 2).alias("_spend"))
+    ).agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("_y")
+    )
     x = F.round(
         F.months_between(F.col("_m"), F.lit("1992-01-01").cast("date"))
-    ).cast("double")
+    ).cast("long")
+    y = F.col("_y")
     per_cust = monthly.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n_months"),
-        F.round(F.regr_slope(F.col("_spend"), x), 4).alias("slope"),
-        F.round(F.regr_intercept(F.col("_spend"), x), 4).alias("intercept"),
+        F.sum(x).alias("_sx"),
+        F.sum(y).alias("_sy"),
+        F.sum(x * y).alias("_sxy"),
+        F.sum(x * x).alias("_sxx"),
     )
-    return per_cust.filter(F.col("n_months") >= min_months).select(
-        "o_custkey", "n_months", "slope", "intercept"
+    n, sx, sy = F.col("n_months"), F.col("_sx"), F.col("_sy")
+    sxy, sxx = F.col("_sxy"), F.col("_sxx")
+    # cents -> dollars folded into the denominator, still exact
+    den = (n * sxx - sx * sx) * 100
+
+    def ratio(num):
+        return F.when(den != 0, num.cast("double") / den.cast("double"))
+
+    return per_cust.filter(n >= min_months).select(
+        "o_custkey",
+        "n_months",
+        ratio(n * sxy - sx * sy).alias("slope"),
+        ratio(sy * sxx - sx * sxy).alias("intercept"),
     )

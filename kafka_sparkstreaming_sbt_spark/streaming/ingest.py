@@ -792,17 +792,21 @@ def exact_screen_batch(
     batch_df: DataFrame,
     batch_id: int,
     exact_dir: str,
+    bloom: tuple[bytes, int, int] | None = None,
 ) -> DataFrame:
     """Drop batch rows whose text is an EXACT copy of anything in the
     corpus-as-of-batch N (static + accepted < N): bloom negatives pass
     map-only; positives are confirmed against the materialized hash
-    table.  Exact — a bloom false positive survives the confirm."""
+    table.  Exact — a bloom false positive survives the confirm.
+    ``bloom``: the filter :func:`_load_exact_bloom` returns for
+    ``batch_id``, when the caller has read it already."""
     from kafka_sparkstreaming_sbt_spark.operators.bloom import (
         with_bloom_flag,
     )
 
     spark = batch_df.sparkSession
-    bloom = _load_exact_bloom(spark, exact_dir, batch_id)
+    if bloom is None:
+        bloom = _load_exact_bloom(spark, exact_dir, batch_id)
     flagged = with_bloom_flag(batch_df, "text", bloom)
     negatives = flagged.filter(~F.col("bloom_maybe")).drop("bloom_maybe")
     positives = flagged.filter(F.col("bloom_maybe")).drop("bloom_maybe")
@@ -817,11 +821,14 @@ def exact_screen_batch(
 
 
 def _write_exact_incr(
-    spark, exact_dir: str, batch_id: int, accepted: DataFrame
+    spark, exact_dir: str, batch_id: int, accepted: DataFrame,
+    n_bits: int, n_hashes: int,
 ) -> None:
     """Bloom maintenance for one accepted batch: its OR-composable
     bitmap under the idempotent ``batch_id=N`` overwrite layout (the
-    md5 hash rows ride the caller's fused increment union).
+    md5 hash rows ride the caller's fused increment union), built
+    with the base's ``n_bits``/``n_hashes`` that the trigger's screen
+    read (:func:`_load_exact_bloom`).
     ``accepted`` is the MATERIALIZED (doc_id, text) frame of the
     written partition (already collapsed to a few partitions — the
     tree-reduce's per-partition bitmap tasks dominate its wall at
@@ -831,12 +838,7 @@ def _write_exact_incr(
         build_bloom_bitmap,
     )
 
-    base = read_parquet(
-        spark, f"{exact_dir}/bloom/base", _BLOOM_BASE_SCHEMA
-    ).select("n_bits", "n_hashes").collect()[0]
-    bitmap = build_bloom_bitmap(
-        accepted, "text", int(base.n_bits), int(base.n_hashes)
-    )
+    bitmap = build_bloom_bitmap(accepted, "text", n_bits, n_hashes)
     _one_row_bitmap_df(spark, bitmap).write.mode("overwrite").parquet(
         f"{exact_dir}/bloom/incr/batch_id={batch_id}"
     )
@@ -938,11 +940,14 @@ def _screen_text_core(
     span_dir: str | None = None,
     span_window_tokens: int = 16,
     stage_sec: dict | None = None,
+    exact_bloom: tuple[bytes, int, int] | None = None,
 ) -> DataFrame:
     """The text leg of the one screen body (:meth:`_Lake.screen`):
     the accepted (doc_id, text) rows of a MATERIALIZED batch as a lazy
     frame.  The batch feeds three consumers (corpus screen, self-pair
     screen, final anti-join), so it must not replay its source.
+    ``exact_bloom`` is the exact stage's filter as of ``cutoff``
+    (:func:`_load_exact_bloom`).
     ``stage_sec`` (optional) accumulates per-stage wall seconds at
     the eager stages (exact / span); the near-dup plan returned here
     is lazy, so its cost lands wherever the caller materializes."""
@@ -971,7 +976,7 @@ def _screen_text_core(
         # (the cutoff, not the partition id, bounds what it reads)
         with _staged(stage_sec, "exact"):
             batch_df = exact_screen_batch(
-                batch_df, cutoff, exact_dir
+                batch_df, cutoff, exact_dir, exact_bloom
             ).localCheckpoint(eager=True)
     if span_dir is not None:
         # ExactSubstr stage: excise windows already in the corpus/
@@ -1051,9 +1056,12 @@ def _write_text_increments(
     exact_dir: str | None,
     span_dir: str | None,
     span_window_tokens: int,
+    bloom_params: tuple[int, int] | None = None,
 ) -> None:
     """Signature/exact-screen maintenance for one ACCEPTED partition,
     same idempotent per-partition layout as the rows.
+    ``bloom_params`` is the bloom base's (n_bits, n_hashes), required
+    with ``exact_dir``.
     ``accepted_rows`` is the MATERIALIZED, few-partition frame the
     partition was written from, so maintenance never touches the
     parquet and describes exactly the written rows.
@@ -1132,7 +1140,7 @@ def _write_text_increments(
             f"{incr}/batch_id={batch_id}"
         )
     if exact_dir is not None:
-        _write_exact_incr(spark, exact_dir, batch_id, rows)
+        _write_exact_incr(spark, exact_dir, batch_id, rows, *bloom_params)
 
 
 @dataclass
@@ -1434,13 +1442,20 @@ class _Lake:
         leg's (possibly span-cleaned) text with the batch's vectors."""
         stage_sec, id_col = self.stage_sec, self.id_col
         cutoff = batch_id if corpus_upto is None else corpus_upto
-        kept = None
+        kept = bloom = None
         if self.corpus_docs is not None:
+            if self.exact_dir is not None:
+                # the one read of the bloom base per trigger: the
+                # screen's bitmap and the increment's parameters
+                with _staged(stage_sec, "exact"):
+                    bloom = _load_exact_bloom(
+                        self.spark, self.exact_dir, cutoff
+                    )
             text_ok = _screen_text_core(
                 batch, cutoff, self.corpus_docs, self.accepted_dir,
                 self.threshold, self.shingle_n, self.n_bands,
                 self.signature_dir, self.exact_dir, self.span_dir,
-                self.span_window_tokens, stage_sec,
+                self.span_window_tokens, stage_sec, bloom,
             )
             # the near-dup plan runs HERE, once; its survivors feed
             # the semantic prune, the write and every increment.  The
@@ -1484,6 +1499,7 @@ class _Lake:
                     self.spark, kept, batch_id, self.shingle_n,
                     self.n_bands, self.signature_dir, self.exact_dir,
                     self.span_dir, self.span_window_tokens,
+                    None if bloom is None else bloom[1:],
                 )
             if self.cells_dir is not None:
                 kept.select(id_col, "cell_id").write.mode(

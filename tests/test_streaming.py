@@ -7,9 +7,11 @@ drop; bounded-state streaming dedup."""
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import tempfile
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -321,6 +323,111 @@ def test_checkpoint_recovery_no_reprocessing(spark, stream_dir):
     assert any(
         r.customer_id == "2" and r.total_spent == 50.0 for r in collected2
     )
+
+
+#: Spark's own key, spelled out: the test reads and unsets it whether
+#: or not the session builder set it
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+class _BatchKeyedSink:
+    """An idempotent sink for ``run_spending_pipeline``: each trigger's
+    daily rows are stored under its batch id, so a re-run batch
+    overwrites its own rows.  Counts the runs of each batch."""
+
+    def __init__(self):
+        self.rows: dict[int, list] = {}
+        self.runs: Counter = Counter()
+
+    def __call__(self, daily) -> None:
+        # foreachBatch runs on the stream thread, which carries the
+        # trigger's batch id as a local property
+        batch_id = int(
+            daily.sparkSession.sparkContext.getLocalProperty(
+                "streaming.sql.batchId"
+            )
+        )
+        self.rows[batch_id] = [
+            (r.customer_id, r.total_spent) for r in daily.collect()
+        ]
+        self.runs[batch_id] += 1
+
+    def totals(self) -> dict[str, float]:
+        out: dict[str, float] = {}
+        for rows in self.rows.values():
+            for customer, spent in rows:
+                out[customer] = round(out.get(customer, 0.0) + spent, 2)
+        return out
+
+
+@pytest.mark.parametrize("first_manager", ["session", "spark_default"])
+def test_restart_reruns_uncommitted_batch_with_exact_totals(
+    spark, stream_dir, first_manager
+):
+    """A query that stopped after batch N's state commit but before its
+    commit-log record re-runs batch N on restart over state deltas
+    that already exist (the path where the FileSystem checkpoint
+    manager keeps the first file).  The restored dedup state still
+    drops a redelivered transaction, and per-customer totals are
+    exact to the cent.  With ``spark_default`` the first run writes
+    its checkpoint under Spark's default checkpoint manager, and the
+    restart reads it under the session's."""
+    ckpt = tempfile.mkdtemp()
+    sink = _BatchKeyedSink()
+
+    def start():
+        return run_spending_pipeline(
+            parse_transactions(_read_value_stream(spark, stream_dir)),
+            sink,
+            checkpoint_location=ckpt,
+            swallow_errors=False,
+        )
+
+    # one event time throughout: the watermark moves once, after the
+    # first batch, so the newest batch is a data batch
+    ts = "2025-03-10T12:01:00Z"
+    b0 = [("r1", "1", 10.10), ("r2", "2", 20.45), ("r3", "1", 0.35)]
+    b1 = [("r4", "2", 7.05), ("r3", "1", 0.35)]  # r3 redelivered
+    b2 = [("r1", "1", 10.10), ("r5", "3", 99.99)]  # r1 redelivered
+    session_manager = spark.conf.get(CHECKPOINT_MANAGER_KEY, None)
+    if first_manager == "spark_default":
+        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
+    try:
+        q = start()
+        try:
+            for name, txns in (("b0", b0), ("b1", b1)):
+                _write_batch(
+                    stream_dir, name,
+                    [_txn_json(t, c, ts, a) for t, c, a in txns],
+                )
+                q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        if session_manager is not None:
+            spark.conf.set(CHECKPOINT_MANAGER_KEY, session_manager)
+
+    # the crash: batch N's offsets and state deltas stay, its commit
+    # record (and the local file system's checksum of it) goes
+    commits = os.path.join(ckpt, "commits")
+    n = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(n), f".{n}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    assert sink.runs[n] == 1 and sink.rows[n] == [("2", 7.05)]
+
+    q = start()
+    try:
+        q.processAllAvailable()
+        _write_batch(
+            stream_dir, "b2", [_txn_json(t, c, ts, a) for t, c, a in b2]
+        )
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    shutil.rmtree(ckpt, ignore_errors=True)
+    assert sink.runs[n] == 2
+    assert sink.totals() == {"1": 10.45, "2": 27.50, "3": 99.99}
 
 
 def test_stream_stream_interval_join(spark, stream_dir):
