@@ -414,7 +414,7 @@ def multimodal_ingest_probe(
     (``run_multimodal_ingest_pipeline``): document batches carrying
     BOTH text and embeddings flow through exact -> near-dup ->
     semantic with all maintenance artifacts materialized up front
-    (signatures, bloom/hashes, quantizer) — the production shape.
+    (signatures, content hashes, quantizer) — the production shape.
     ~25% of batch docs clone a corpus doc's text and ~25% (disjoint)
     clone a corpus vector, so both modalities' screens do real
     rejection work."""
@@ -467,7 +467,7 @@ def multimodal_ingest_probe(
         docs = full.select("doc_id", "text")
         emb = full.select("doc_id", "embedding")
         materialize_corpus_signatures(docs, tmp["sig"])
-        materialize_exact_screen(docs, tmp["exact"], n_corpus * 4)
+        materialize_exact_screen(docs, tmp["exact"])
         materialize_semantic_quantizer(
             emb, tmp["cells"],
             n_cells=max(4, int(_math.isqrt(n_corpus))),

@@ -4,12 +4,12 @@ ALL the screens over documents ingested WITH their embeddings
 `run_multimodal_ingest_pipeline`, the one-foreachBatch production
 shape):
 
-    drift HOLD -> quality (optional) -> exact (bloom+hash) ->
+    drift HOLD -> quality (optional) -> exact (content hash) ->
     near-dup (MinHash) -> semantic (SemDeDup)
 
 in reject-cheapest-first order, with one accepted partition of FULL
 (doc_id, text, embedding) rows per micro-batch and every maintenance
-artifact (signatures, bloom/hashes, cell assignments) keyed on the
+artifact (signatures, content hashes, cell assignments) keyed on the
 same batch-id sequence.
 
 The demo replays the sf testdata through a file-source stream: docs
@@ -89,9 +89,7 @@ def main() -> None:
         # production shape: recurring-cost artifacts built once,
         # before the stream starts
         materialize_corpus_signatures(corpus_docs, tmp["sig"])
-        materialize_exact_screen(
-            corpus_docs, tmp["exact"], expected_items=4 * n_in
-        )
+        materialize_exact_screen(corpus_docs, tmp["exact"])
         materialize_semantic_quantizer(
             corpus_emb, tmp["cells"], n_cells=args.n_cells,
             id_col="doc_id",

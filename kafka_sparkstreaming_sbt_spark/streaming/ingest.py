@@ -66,15 +66,13 @@ generation     staging                    live                record     covers
 =============  =========================  ==================  =========  ====================
 compaction     ``<dir>/_compact/upto=M``  ``<dir>/batch_id``  _SUCCESS   ``<dir>/batch_id<M``
                (any ``batch_id=N`` dir)   ``=M-1``
-bloom          ``bloom/_rebuild/upto=M``  ``bloom/base``      _SUCCESS   ``bloom/incr``
 quality model  ``_rebuild/upto=M``        ``current``         _UPTO=M    —
 quantizer      ``_rebuild/upto=M``        ``quantizer``       _UPTO=M    ``incr``
 =============  =========================  ==================  =========  ====================
 
-Paths are relative to ``exact_dir``, ``quality_dir`` and ``cells_dir``.
-``_UPTO=M`` is a marker file touched inside the generation dir; a
-parquet dir cannot hold one, so the bloom base records M in an
-``upto`` column.  ``_Lake`` runs the whole lifecycle for the drivers:
+Paths are relative to ``quality_dir`` and ``cells_dir``.  ``_UPTO=M``
+is a marker file touched inside the generation dir.  ``_Lake`` runs
+the whole lifecycle for the drivers:
 recovery and materialization at start, the ``compact_every`` fold,
 the drift HOLD, release-partition deletes and the stream start.
 
@@ -103,30 +101,6 @@ from kafka_sparkstreaming_sbt_spark.schemas import columns
 from kafka_sparkstreaming_sbt_spark.sources.batch import read_parquet
 
 _LONG, _STRING, _DOUBLE = T.LongType(), T.StringType(), T.DoubleType()
-
-
-def _one_row_bitmap_df(
-    spark,
-    bitmap,
-    n_bits: int | None = None,
-    n_hashes: int | None = None,
-    upto: int | None = None,
-) -> DataFrame:
-    """One-row bloom-bitmap frame built from LITERAL expressions:
-    ``createDataFrame`` of a row holding a 100 KB+ bytearray pays
-    seconds of Python->JVM row conversion PER CALL (measured 3.6 s
-    for a 128 KiB bitmap vs 0.17 s as a binary literal, 20x), and the
-    exact-screen maintenance writes one of these per trigger — it was
-    the single largest fixed cost in the ingest increments stage
-    (VERDICT r10 #1)."""
-    cols = []
-    if n_bits is not None:
-        cols.append(F.lit(int(n_bits)).cast("long").alias("n_bits"))
-        cols.append(F.lit(int(n_hashes)).cast("long").alias("n_hashes"))
-    cols.append(F.lit(bytes(bitmap)).alias("bitmap"))
-    if upto is not None:
-        cols.append(F.lit(int(upto)).cast("long").alias("upto"))
-    return spark.range(1).coalesce(1).select(*cols)
 
 
 def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
@@ -322,9 +296,7 @@ class _Generation:
         drop one without it (the old live dir is intact).  Then
         re-apply an ``_UPTO`` generation's covered-incr deletes: a lake
         whose commit renamed before dropping them can hold stale incr
-        partitions past a crash.  (A bloom base records its coverage
-        only in its ``upto`` column; stale incr bitmaps there would
-        fail loudly on the n_bits mismatch.)"""
+        partitions past a crash."""
         fs, P = _hadoop_fs(self.spark, self.root)
         if fs.exists(P(self.root)):
             for st in fs.listStatus(P(self.root)):
@@ -404,39 +376,27 @@ def compact_batch_partitions(
     """
     import math
 
-    def stage(covered: list[int], staging: str) -> int:
-        fs, P = _hadoop_fs(spark, path)
-        total_bytes = sum(
-            fs.getContentSummary(P(f"{path}/batch_id={k}")).getLength()
-            for k in covered
-        )
-        n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-        # any batch_id dir, accepted rows included: its shape is the
-        # caller's, so the one read per fold infers it
-        (
-            _prior_partitions(spark, path, upto_batch, None)
-            .repartition(n_files)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        return n_files
-
-    return _fold_partitions(spark, path, upto_batch, stage)
-
-
-def _fold_partitions(spark, path: str, upto_batch: int, stage):
-    """The compaction generation: ``stage(covered_ids, staging_dir)``
-    writes the folded partition, then the protocol commits it.
-    Returns what ``stage`` returned, or None when there is nothing to
-    fold (0 or 1 covered partitions)."""
     gen = _compaction(spark, path)
     gen.recover()
     covered = [k for k in _list_batch_ids(spark, path) if k < upto_batch]
     if len(covered) <= 1:
         return None
-    out = stage(covered, gen.staging(upto_batch))
+    fs, P = _hadoop_fs(spark, path)
+    total_bytes = sum(
+        fs.getContentSummary(P(f"{path}/batch_id={k}")).getLength()
+        for k in covered
+    )
+    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
+    # any batch_id dir, accepted rows included: its shape is the
+    # caller's, so the one read per fold infers it
+    (
+        _prior_partitions(spark, path, upto_batch, None)
+        .repartition(n_files)
+        .write.mode("overwrite")
+        .parquet(gen.staging(upto_batch))
+    )
     gen.commit(upto_batch)
-    return out
+    return n_files
 
 
 def recover_compaction(spark, path: str) -> None:
@@ -634,238 +594,50 @@ def _batch_drift_alarms(
 # through the near-dup screen pays the expensive path for rows a
 # content-hash lookup would have killed.  The exact prefilter drops
 # them first (reject-cheapest-first, same ordering argument as the
-# quality screen) using two materialized lake artifacts under
-# ``exact_dir``, maintained with the SAME batch_id layout and
-# strict-inequality replay contract as everything else here:
+# quality screen) with one anti-join against a materialized lake
+# artifact under ``exact_dir``, maintained with the SAME batch_id
+# layout and strict-inequality replay contract as everything else
+# here:
 #
-#   bloom/base              one (n_bits, n_hashes, bitmap) row — the
-#                           static corpus's Bloom filter
-#   bloom/incr/batch_id=N   one bitmap row per accepted batch (same
-#                           parameters, so a reader OR-folds them)
 #   hashes/base             (h,) md5 of every static-corpus text
 #   hashes/incr/batch_id=N  md5 of batch N's accepted texts
 #
-# Per trigger: bloom rows < N OR-fold into one broadcast bitmap, the
-# batch takes a map-only membership test, and only the bloom-POSITIVE
-# slice enters the exact confirm anti-join against the hash table —
-# so the screen is exact (no false drops) yet never rescans corpus
-# text.  Bloom false positives cost one extra hash-join row, nothing
-# else; survivors still flow through the near-dup screen, which is
-# what catches non-exact duplicates.
+# Per trigger the batch anti-joins on ``md5(text)`` against base plus
+# the incr partitions < N, so the screen is exact and never rescans
+# corpus text; survivors still flow through the near-dup screen,
+# which is what catches non-exact duplicates.
 
 
 #: ``exact_dir/hashes/{base,incr}``: md5 of each text
 _HASHES_SCHEMA = columns(("h", _STRING))
-#: ``exact_dir/bloom/base``: the one bitmap row and its generation
-_BLOOM_BASE_SCHEMA = columns(
-    ("n_bits", _LONG), ("n_hashes", _LONG), ("bitmap", T.BinaryType()),
-    ("upto", _LONG),
-)
-#: ``exact_dir/bloom/incr/batch_id=N``: one bitmap row per batch
-_BLOOM_INCR_SCHEMA = columns(("bitmap", T.BinaryType()))
 
 
-def materialize_exact_screen(
-    corpus_docs: DataFrame,
-    exact_dir: str,
-    expected_items: int,
-    fpp: float = 0.01,
-) -> None:
-    """One-time base artifacts for the exact prefilter: the static
-    corpus's content-hash table and Bloom bitmap.  ``expected_items``
-    should budget for corpus + expected accepted growth — the bitmap
-    parameters are FROZEN here so every later batch's incr bitmap
-    OR-composes (until a saturation rebuild re-sizes the whole
-    generation, :func:`rebuild_exact_bloom`).  Both writes are
-    ``_SUCCESS``-gated like the signature base (a readable-but-partial
-    dir is rebuilt); the bloom base row also carries its generation's
-    ``upto`` column (0 here)."""
-    from kafka_sparkstreaming_sbt_spark.operators.bloom import (
-        bloom_params,
-        build_bloom_bitmap,
-    )
-
+def materialize_exact_screen(corpus_docs: DataFrame, exact_dir: str) -> None:
+    """One-time base artifact for the exact prefilter: the static
+    corpus's content-hash table, ``_SUCCESS``-gated like the signature
+    base (a readable-but-partial dir is rebuilt)."""
     spark = corpus_docs.sparkSession
     hashes_base = f"{exact_dir}/hashes/base"
     if not _success_marker_exists(spark, hashes_base):
         corpus_docs.select(
             F.md5("text").alias("h")
         ).write.mode("overwrite").parquet(hashes_base)
-    bloom_base = f"{exact_dir}/bloom/base"
-    if not _success_marker_exists(spark, bloom_base):
-        n_bits, n_hashes = bloom_params(expected_items, fpp)
-        bitmap = build_bloom_bitmap(corpus_docs, "text", n_bits, n_hashes)
-        _one_row_bitmap_df(
-            spark, bitmap, n_bits=n_bits, n_hashes=n_hashes, upto=0
-        ).write.mode("overwrite").parquet(bloom_base)
-
-
-def rebuild_exact_bloom(
-    spark,
-    corpus_docs: DataFrame,
-    accepted_dir: str,
-    exact_dir: str,
-    upto_batch: int,
-    fpp: float = 0.01,
-    growth: float = 4.0,
-) -> tuple[int, int]:
-    """Saturation response for the exact screen's Bloom filter
-    (VERDICT r7 wrong-2): re-size the bitmap for the corpus the
-    screen has actually grown into and atomically swap the
-    generation.  The frozen ``expected_items`` sizing degrades
-    silently once accepted batches push the fill fraction past 0.5
-    (fpp = fill^k — at 0.5 that's the design point 2^-k; beyond it
-    the "map-only for negatives" economics erode), so the pipeline
-    probes :func:`~...operators.bloom.bloom_fill_fraction` at every
-    compaction and calls this when the density crosses the line.
-
-    The new filter is built over corpus + accepted(<upto) — an exact
-    key count, not an estimate — sized for ``growth``x that count at
-    the original ``fpp``, so the new generation lands at ~1/growth
-    fill with byte size scaling linearly in actual corpus growth.
-
-    Crash-safe through the staged-generation protocol (module
-    docstring): the new base row's ``upto`` column records coverage,
-    and :func:`recover_exact_screen` rolls forward or back.  Incr
-    bitmaps < M are dropped at commit — their keys are folded into
-    the new base, and their OLD n_bits no longer OR-composes with
-    the new generation.  Returns (n_bits, n_hashes) of the new
-    generation."""
-    from kafka_sparkstreaming_sbt_spark.operators.bloom import (
-        bloom_params,
-        build_bloom_bitmap,
-    )
-
-    keys = _with_prior(corpus_docs.select("text"), accepted_dir, upto_batch)
-    keys = keys.localCheckpoint(eager=True)  # count + build
-    n_keys = keys.count()
-    n_bits, n_hashes = bloom_params(
-        max(2, int(n_keys * growth)), fpp
-    )
-    bitmap = build_bloom_bitmap(keys, "text", n_bits, n_hashes)
-    gen = _bloom_generation(spark, exact_dir)
-    _one_row_bitmap_df(
-        spark, bitmap, n_bits=n_bits, n_hashes=n_hashes, upto=upto_batch
-    ).write.mode("overwrite").parquet(gen.staging(upto_batch))
-    gen.commit(upto_batch)
-    return n_bits, n_hashes
-
-
-def _bloom_generation(spark, exact_dir: str) -> _Generation:
-    return _Generation(
-        spark, f"{exact_dir}/bloom/_rebuild", f"{exact_dir}/bloom/base",
-        "_SUCCESS", f"{exact_dir}/bloom/incr",
-    )
-
-
-def recover_exact_screen(spark, exact_dir: str) -> None:
-    """Finish or roll back a bloom-generation rebuild a crash
-    interrupted — run at pipeline start before any screen loads the
-    filter.  Stale incr bitmaps left past a crash would no longer
-    match the base's n_bits."""
-    _bloom_generation(spark, exact_dir).recover()
-
-
-def _load_exact_bloom(
-    spark, exact_dir: str, before_batch: int
-) -> tuple[bytes, int, int]:
-    """The corpus Bloom filter as of batches < ``before_batch``:
-    base bitmap OR'd with each earlier accepted batch's bitmap.
-    Driver-side OR over a handful of rows — compaction
-    (:func:`fold_bloom_partitions`) keeps the row count bounded."""
-    import numpy as np
-
-    base = read_parquet(
-        spark, f"{exact_dir}/bloom/base", _BLOOM_BASE_SCHEMA
-    ).collect()[0]
-    bm = np.frombuffer(bytes(base.bitmap), dtype=np.uint8).copy()
-    prior = _prior_partitions(
-        spark, f"{exact_dir}/bloom/incr", before_batch, _BLOOM_INCR_SCHEMA
-    )
-    if prior is not None:
-        for r in prior.select("bitmap").collect():
-            bm |= np.frombuffer(bytes(r.bitmap), dtype=np.uint8)
-    return bm.tobytes(), int(base.n_bits), int(base.n_hashes)
 
 
 def exact_screen_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    exact_dir: str,
-    bloom: tuple[bytes, int, int] | None = None,
+    batch_df: DataFrame, batch_id: int, exact_dir: str
 ) -> DataFrame:
     """Drop batch rows whose text is an EXACT copy of anything in the
-    corpus-as-of-batch N (static + accepted < N): bloom negatives pass
-    map-only; positives are confirmed against the materialized hash
-    table.  Exact — a bloom false positive survives the confirm.
-    ``bloom``: the filter :func:`_load_exact_bloom` returns for
-    ``batch_id``, when the caller has read it already."""
-    from kafka_sparkstreaming_sbt_spark.operators.bloom import (
-        with_bloom_flag,
-    )
-
+    corpus-as-of-batch N (static + accepted < N): one ``left_anti``
+    join on ``md5(text)`` against the materialized hash table."""
     spark = batch_df.sparkSession
-    if bloom is None:
-        bloom = _load_exact_bloom(spark, exact_dir, batch_id)
-    flagged = with_bloom_flag(batch_df, "text", bloom)
-    negatives = flagged.filter(~F.col("bloom_maybe")).drop("bloom_maybe")
-    positives = flagged.filter(F.col("bloom_maybe")).drop("bloom_maybe")
     hashes = _with_prior(
         read_parquet(spark, f"{exact_dir}/hashes/base", _HASHES_SCHEMA),
         f"{exact_dir}/hashes/incr", batch_id,
     )
-    confirmed = positives.join(
-        hashes, F.md5(positives["text"]) == hashes["h"], "left_anti"
+    return batch_df.join(
+        hashes, F.md5(batch_df["text"]) == hashes["h"], "left_anti"
     )
-    return negatives.unionByName(confirmed)
-
-
-def _write_exact_incr(
-    spark, exact_dir: str, batch_id: int, accepted: DataFrame,
-    n_bits: int, n_hashes: int,
-) -> None:
-    """Bloom maintenance for one accepted batch: its OR-composable
-    bitmap under the idempotent ``batch_id=N`` overwrite layout (the
-    md5 hash rows ride the caller's fused increment union), built
-    with the base's ``n_bits``/``n_hashes`` that the trigger's screen
-    read (:func:`_load_exact_bloom`).
-    ``accepted`` is the MATERIALIZED (doc_id, text) frame of the
-    written partition (already collapsed to a few partitions — the
-    tree-reduce's per-partition bitmap tasks dominate its wall at
-    high partition counts: measured 4.2 s at 32 partitions vs 1.4 s
-    at 4 for a 1 K-row batch)."""
-    from kafka_sparkstreaming_sbt_spark.operators.bloom import (
-        build_bloom_bitmap,
-    )
-
-    bitmap = build_bloom_bitmap(accepted, "text", n_bits, n_hashes)
-    _one_row_bitmap_df(spark, bitmap).write.mode("overwrite").parquet(
-        f"{exact_dir}/bloom/incr/batch_id={batch_id}"
-    )
-
-
-def fold_bloom_partitions(
-    spark, path: str, upto_batch: int
-) -> None:
-    """Compaction for the bloom incr dir: OR the ``batch_id <
-    upto_batch`` bitmap rows into ONE row — bounding what
-    :func:`_load_exact_bloom` must collect per trigger — as a
-    compaction generation (same commit and recovery as
-    :func:`compact_batch_partitions`)."""
-    import numpy as np
-
-    def stage(covered: list[int], staging: str) -> None:
-        rows = _prior_partitions(
-            spark, path, upto_batch, _BLOOM_INCR_SCHEMA
-        ).collect()
-        acc = np.frombuffer(bytes(rows[0].bitmap), dtype=np.uint8).copy()
-        for r in rows[1:]:
-            acc |= np.frombuffer(bytes(r.bitmap), dtype=np.uint8)
-        _one_row_bitmap_df(spark, acc.tobytes()).write.mode(
-            "overwrite"
-        ).parquet(staging)
-
-    _fold_partitions(spark, path, upto_batch, stage)
 
 
 def screen_micro_batch(
@@ -897,9 +669,8 @@ def screen_micro_batch(
     streaming contract: cutoff == batch_id.
 
     With ``exact_dir`` (see :func:`materialize_exact_screen`) exact
-    copies of corpus/accepted content are dropped FIRST via the
-    bloom-prefiltered hash screen — map-only for bloom negatives,
-    one hash anti-join for the positive slice — so the expensive
+    copies of corpus/accepted content are dropped FIRST by one hash
+    anti-join (:func:`exact_screen_batch`), so the expensive
     shingle/bucket-join path only ever sees content that is at most
     a NEAR duplicate.
 
@@ -940,14 +711,11 @@ def _screen_text_core(
     span_dir: str | None = None,
     span_window_tokens: int = 16,
     stage_sec: dict | None = None,
-    exact_bloom: tuple[bytes, int, int] | None = None,
 ) -> DataFrame:
     """The text leg of the one screen body (:meth:`_Lake.screen`):
     the accepted (doc_id, text) rows of a MATERIALIZED batch as a lazy
     frame.  The batch feeds three consumers (corpus screen, self-pair
     screen, final anti-join), so it must not replay its source.
-    ``exact_bloom`` is the exact stage's filter as of ``cutoff``
-    (:func:`_load_exact_bloom`).
     ``stage_sec`` (optional) accumulates per-stage wall seconds at
     the eager stages (exact / span); the near-dup plan returned here
     is lazy, so its cost lands wherever the caller materializes."""
@@ -976,7 +744,7 @@ def _screen_text_core(
         # (the cutoff, not the partition id, bounds what it reads)
         with _staged(stage_sec, "exact"):
             batch_df = exact_screen_batch(
-                batch_df, cutoff, exact_dir, exact_bloom
+                batch_df, cutoff, exact_dir
             ).localCheckpoint(eager=True)
     if span_dir is not None:
         # ExactSubstr stage: excise windows already in the corpus/
@@ -1047,7 +815,6 @@ def _screen_text_core(
 
 
 def _write_text_increments(
-    spark,
     accepted_rows: DataFrame,
     batch_id: int,
     shingle_n: int,
@@ -1056,12 +823,9 @@ def _write_text_increments(
     exact_dir: str | None,
     span_dir: str | None,
     span_window_tokens: int,
-    bloom_params: tuple[int, int] | None = None,
 ) -> None:
     """Signature/exact-screen maintenance for one ACCEPTED partition,
     same idempotent per-partition layout as the rows.
-    ``bloom_params`` is the bloom base's (n_bits, n_hashes), required
-    with ``exact_dir``.
     ``accepted_rows`` is the MATERIALIZED, few-partition frame the
     partition was written from, so maintenance never touches the
     parquet and describes exactly the written rows.
@@ -1070,9 +834,8 @@ def _write_text_increments(
     builds are active, their plans are UNIONED and materialized in
     one Spark job; the per-path writes then just filter the
     materialized union (the 32-hex-char md5 and window hashes share
-    the ``wh`` slot; only the bloom bitmap build stays separate — it
-    is an RDD tree-reduce, not a DataFrame plan).  A single active
-    build keeps the direct one-job derive-and-write shape."""
+    the ``wh`` slot).  A single active build keeps the direct one-job
+    derive-and-write shape."""
     from kafka_sparkstreaming_sbt_spark.operators.chunking import (
         window_hash_table,
     )
@@ -1139,8 +902,6 @@ def _write_text_increments(
         frame.select(*cols).write.mode("overwrite").parquet(
             f"{incr}/batch_id={batch_id}"
         )
-    if exact_dir is not None:
-        _write_exact_incr(spark, exact_dir, batch_id, rows, *bloom_params)
 
 
 @dataclass
@@ -1163,13 +924,6 @@ class _Lake:
     threshold: float = 0.5
     shingle_n: int = 3
     n_bands: int = 8
-    bloom_expected_items: int = 1_000_000
-    bloom_fpp: float = 0.01
-    #: fill fraction past which a compaction rebuilds the bloom
-    #: generation; None = no probe
-    bloom_rebuild_density: float | None = None
-    bloom_rebuild_growth: float = 4.0
-    on_bloom_density: Callable[[int, float], None] | None = None
     span_window_tokens: int = 16
     semantic_threshold: float = 0.9
     method: str = "sql"
@@ -1216,9 +970,8 @@ class _Lake:
         names = {f.name for f in fields(cls)} & set(args) - {"spark"}
         return cls(spark, **{n: args[n] for n in names})
 
-    def batch_dirs(self, with_bloom: bool = True) -> list[str]:
-        """Every ``batch_id=N``-partitioned dir (the bloom incr folds
-        by OR, not by row compaction)."""
+    def batch_dirs(self) -> list[str]:
+        """Every ``batch_id=N``-partitioned dir."""
         dirs = [self.accepted_dir] + [
             f"{d}/incr"
             for d in (self.signature_dir, self.span_dir, self.cells_dir)
@@ -1226,8 +979,6 @@ class _Lake:
         ]
         if self.exact_dir is not None:
             dirs.append(f"{self.exact_dir}/hashes/incr")
-            if with_bloom:
-                dirs.append(f"{self.exact_dir}/bloom/incr")
         return dirs
 
     def open(self) -> _Lake:
@@ -1237,8 +988,6 @@ class _Lake:
         # contract)
         for d in self.batch_dirs():
             recover_compaction(spark, d)
-        if self.exact_dir is not None:
-            recover_exact_screen(spark, self.exact_dir)
         if self.cells_dir is not None:
             recover_semantic_quantizer(spark, self.cells_dir)
         if self.quality_dir is not None:
@@ -1249,10 +998,7 @@ class _Lake:
                 self.n_bands, self.accepted_dir,
             )
         if self.exact_dir is not None:
-            materialize_exact_screen(
-                corpus_docs, self.exact_dir, self.bloom_expected_items,
-                self.bloom_fpp,
-            )
+            materialize_exact_screen(corpus_docs, self.exact_dir)
         if self.span_dir is not None:
             materialize_corpus_window_hashes(
                 corpus_docs, self.span_dir, self.span_window_tokens
@@ -1289,7 +1035,6 @@ class _Lake:
         return self
 
     def maintain(self, batch_id: int) -> None:
-        spark = self.spark
         if self.quantizer_stale and batch_id > 0:
             rebuild_semantic_quantizer(
                 self.corpus_emb, self.accepted_dir, self.cells_dir,
@@ -1307,33 +1052,9 @@ class _Lake:
         # checkpoint-committed (this trigger is the only one that can
         # still replay), so the fold can never swallow a replayable
         # batch's own partition
-        for d in self.batch_dirs(with_bloom=False):
+        for d in self.batch_dirs():
             compact_batch_partitions(
-                spark, d, batch_id, self.target_file_bytes
-            )
-        if self.exact_dir is None:
-            return
-        fold_bloom_partitions(
-            spark, f"{self.exact_dir}/bloom/incr", batch_id
-        )
-        if self.bloom_rebuild_density is None:
-            return
-        # saturation probe on the folded filter — one fancy-index
-        # numpy pass over the (already driver-side) bitmap, once per
-        # compaction
-        from kafka_sparkstreaming_sbt_spark.operators.bloom import (
-            bloom_fill_fraction,
-        )
-
-        bitmap, _, _ = _load_exact_bloom(spark, self.exact_dir, batch_id)
-        fill = bloom_fill_fraction(bitmap)
-        if self.on_bloom_density is not None:
-            self.on_bloom_density(batch_id, fill)
-        if fill > self.bloom_rebuild_density:
-            rebuild_exact_bloom(
-                spark, self.corpus_docs, self.accepted_dir,
-                self.exact_dir, batch_id, fpp=self.bloom_fpp,
-                growth=self.bloom_rebuild_growth,
+                self.spark, d, batch_id, self.target_file_bytes
             )
 
     def hold(self, batch_df: DataFrame, batch_id: int) -> bool:
@@ -1442,20 +1163,13 @@ class _Lake:
         leg's (possibly span-cleaned) text with the batch's vectors."""
         stage_sec, id_col = self.stage_sec, self.id_col
         cutoff = batch_id if corpus_upto is None else corpus_upto
-        kept = bloom = None
+        kept = None
         if self.corpus_docs is not None:
-            if self.exact_dir is not None:
-                # the one read of the bloom base per trigger: the
-                # screen's bitmap and the increment's parameters
-                with _staged(stage_sec, "exact"):
-                    bloom = _load_exact_bloom(
-                        self.spark, self.exact_dir, cutoff
-                    )
             text_ok = _screen_text_core(
                 batch, cutoff, self.corpus_docs, self.accepted_dir,
                 self.threshold, self.shingle_n, self.n_bands,
                 self.signature_dir, self.exact_dir, self.span_dir,
-                self.span_window_tokens, stage_sec, bloom,
+                self.span_window_tokens, stage_sec,
             )
             # the near-dup plan runs HERE, once; its survivors feed
             # the semantic prune, the write and every increment.  The
@@ -1496,10 +1210,9 @@ class _Lake:
         with _staged(stage_sec, "increments"):
             if self.corpus_docs is not None:
                 _write_text_increments(
-                    self.spark, kept, batch_id, self.shingle_n,
+                    kept, batch_id, self.shingle_n,
                     self.n_bands, self.signature_dir, self.exact_dir,
                     self.span_dir, self.span_window_tokens,
-                    None if bloom is None else bloom[1:],
                 )
             if self.cells_dir is not None:
                 kept.select(id_col, "cell_id").write.mode(
@@ -1579,11 +1292,6 @@ def run_dedup_ingest_pipeline(
     quality_drift_nats: float = 2.0,
     on_quality_drift: Callable[[int, float], None] | None = None,
     exact_dir: str | None = None,
-    bloom_expected_items: int = 1_000_000,
-    bloom_fpp: float = 0.01,
-    bloom_rebuild_density: float = 0.5,
-    bloom_rebuild_growth: float = 4.0,
-    on_bloom_density: Callable[[int, float], None] | None = None,
     drift_dir: str | None = None,
     drift_cols: tuple[str, ...] = ("text",),
     drift_null_jump: float = 0.02,
@@ -1637,19 +1345,11 @@ def run_dedup_ingest_pipeline(
     and retrain loses the flag, but the drift persists in the data
     and the next drifted batch re-schedules it.
     ``exact_dir`` (recommended when the stream carries exact re-crawls):
-    drop exact copies BEFORE the near-dup screen via the materialized
-    bloom + content-hash artifacts (:func:`materialize_exact_screen`;
-    ``bloom_expected_items`` budgets corpus + expected growth, frozen
-    at first materialization) — semantics unchanged (the near-dup
-    screen would catch exact copies too, at shingling price), verdicts
-    identical, tested.  Saturation management (VERDICT r7 wrong-2):
-    at every compaction the folded filter's fill fraction is probed
-    (``on_bloom_density(batch_id, fill)`` observes it) and a fill
-    past ``bloom_rebuild_density`` (default 0.5 — the fpp=2^-k design
-    point) triggers :func:`rebuild_exact_bloom`, a staged atomic
-    generation swap sized ``bloom_rebuild_growth``x the corpus's
-    ACTUAL key count — so the frozen ``bloom_expected_items`` budget
-    can be outgrown without the screen's economics silently eroding.
+    drop exact copies BEFORE the near-dup screen by one anti-join
+    against the materialized content-hash table
+    (:func:`materialize_exact_screen`) — semantics unchanged (the
+    near-dup screen would catch exact copies too, at shingling
+    price), verdicts identical, tested.
     ``drift_dir`` (optional): HOLD broken feeds before any screen
     spends compute on them — the corpus's column profile is
     materialized once at ``drift_dir/baseline``, each micro-batch is
@@ -1658,7 +1358,7 @@ def run_dedup_ingest_pipeline(
     dead-lettered WHOLE to ``drift_dir/held/batch_id=N`` (same
     idempotent per-partition overwrite as accepted rows — a replayed
     held batch holds again) instead of entering the screens; it
-    contributes no accepted partition and no signature/bloom
+    contributes no accepted partition and no artifact
     increment, so the replay contract is untouched.  ``on_hold(
     batch_id, alarms)`` observes holds; ``on_batch`` still fires with
     ``n_accepted=0`` so throughput accounting stays complete.
@@ -1812,7 +1512,7 @@ def release_held_batches(
     held partition in place and the redo reproduces the same state.
 
     Run this as a maintenance op while the streaming query is paused
-    (same discipline as quantizer/bloom rebuilds — the lake writes
+    (same discipline as quantizer/quality rebuilds — the lake writes
     here race a concurrent trigger's corpus reads otherwise).
 
     Returns {held_batch_id: (n_screened, n_accepted) | None-if-still-
@@ -2372,8 +2072,6 @@ def run_multimodal_ingest_pipeline(
     max_cell_size: int | None = None,
     signature_dir: str | None = None,
     exact_dir: str | None = None,
-    bloom_expected_items: int = 1_000_000,
-    bloom_fpp: float = 0.01,
     quality_model: DataFrame | None = None,
     quality_threshold: float = 0.0,
     quality_n_buckets: int = 1024,

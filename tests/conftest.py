@@ -131,14 +131,11 @@ SLOW_TESTS = {
     "test_semantic_ingest.py::test_quantizer_rebuild_crash_recovery",
     "test_semantic_ingest.py::test_semantic_ingest_two_waves_replay_and_batch_parity",
     "test_sessions_asof_simhash.py::test_asof_salt_buckets_output_invariant",
-    "test_streaming_ingest.py::test_bloom_rebuild_crash_recovery_both_phases",
-    "test_streaming_ingest.py::test_bloom_saturation_rebuild_swaps_generation",
     "test_streaming_ingest.py::test_compaction_crash_recovery_both_phases",
     "test_streaming_ingest.py::test_compaction_preserves_verdicts_bounds_partitions_and_replay",
     "test_streaming_ingest.py::test_drift_gate_holds_broken_feed_and_passes_clean",
     "test_streaming_ingest.py::test_exact_prefilter_preserves_verdicts",
     "test_streaming_ingest.py::test_exact_prefilter_replay_and_fold",
-    "test_streaming_ingest.py::test_pipeline_probes_density_and_rebuilds_mid_stream",
     "test_streaming_ingest.py::test_quality_model_screens_before_dedup",
     "test_streaming_ingest.py::test_release_held_batches_after_baseline_refresh",
     "test_streaming_ingest.py::test_span_stage_compaction_folds_incr_and_preserves_verdicts",

@@ -122,7 +122,7 @@ def test_declared_lake_artifact_schemas_equal_written(spark, tmp_path):
     ingest.materialize_quality_model(docs, d["quality"], model, 64)
     ingest.materialize_corpus_window_hashes(docs, d["span"], 4)
     ingest.materialize_corpus_signatures(docs, d["sig"])
-    ingest.materialize_exact_screen(docs, d["exact"], 1000)
+    ingest.materialize_exact_screen(docs, d["exact"])
     ingest.materialize_semantic_quantizer(
         emb, d["cells"], n_cells=2, id_col="doc_id"
     )
@@ -142,8 +142,6 @@ def test_declared_lake_artifact_schemas_equal_written(spark, tmp_path):
         f"{d['sig']}/incr/batch_id=0": sigs,
         f"{d['exact']}/hashes/base": ingest._HASHES_SCHEMA,
         f"{d['exact']}/hashes/incr/batch_id=0": ingest._HASHES_SCHEMA,
-        f"{d['exact']}/bloom/base": ingest._BLOOM_BASE_SCHEMA,
-        f"{d['exact']}/bloom/incr/batch_id=0": ingest._BLOOM_INCR_SCHEMA,
         f"{d['span']}/base": ingest._WINDOW_HASH_SCHEMA,
         f"{d['span']}/incr/batch_id=0": ingest._WINDOW_HASH_SCHEMA,
         f"{d['drift']}/baseline": ingest._PROFILE_SCHEMA,

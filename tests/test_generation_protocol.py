@@ -20,10 +20,6 @@ LAYOUTS = {
         ingest.recover_compaction, "batch_id=2", "_compact/upto=3",
         "_SUCCESS", "", [2, 3],
     ),
-    "bloom": (
-        ingest.recover_exact_screen, "bloom/base", "bloom/_rebuild/upto=3",
-        "_SUCCESS", "bloom/incr", [3],
-    ),
     "quality": (
         ingest.recover_quality_model, "current", "_rebuild/upto=3",
         "_UPTO=3", None, None,

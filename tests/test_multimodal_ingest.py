@@ -129,7 +129,7 @@ def test_multimodal_replay_is_idempotent(spark, dirs):
         )
 
         materialize_corpus_signatures(docs, sig)
-        materialize_exact_screen(docs, exact, expected_items=100)
+        materialize_exact_screen(docs, exact)
         materialize_semantic_quantizer(
             emb, cells, n_cells=2, id_col="doc_id"
         )
@@ -192,7 +192,7 @@ def test_multimodal_stage_timers_populate_and_change_nothing(spark, dirs):
         )
 
         materialize_corpus_signatures(docs, sig)
-        materialize_exact_screen(docs, exact, expected_items=100)
+        materialize_exact_screen(docs, exact)
         materialize_corpus_window_hashes(docs, span, 8)
         materialize_semantic_quantizer(
             emb, cells, n_cells=2, id_col="doc_id"

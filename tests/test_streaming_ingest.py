@@ -111,17 +111,28 @@ def test_replay_of_a_batch_is_idempotent_and_self_blind(spark, dirs):
 
 def test_screen_micro_batch_job_count(spark, dirs):
     """Fixed-cost guard: a trigger on a few rows costs what its Spark
-    jobs cost, so one direct screen of the replay test's input must
-    not grow past the jobs the one screen body runs (the batch is
-    checkpointed once and counted on that job, the accepted rows are
-    materialized and counted the same way, and nothing is read back
-    from the lake)."""
-    import uuid
-
+    actions cost, so one direct screen of the replay test's input must
+    start exactly the SQL executions the one screen body runs (the
+    batch is checkpointed once and counted on that job, the accepted
+    rows are materialized and counted the same way, and nothing is
+    read back from the lake).  Executions, not jobs: AQE splits an
+    execution into a varying number of jobs (35-37 over 20 calls, 4
+    cores, Spark 4.1.2), while the execution count read 7 on each of
+    6 calls.  The count is the step of the newest execution id, which
+    the status store's retention cap cannot hide."""
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
         screen_micro_batch,
     )
-    from perfbench.tracing import JobGroups
+
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest_execution_id() -> int:
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        if n == 0:
+            return -1
+        return store.executionsList(n - 1, 1).head().executionId()
 
     _, acc, _ = dirs
     corpus = spark.createDataFrame(
@@ -130,12 +141,9 @@ def test_screen_micro_batch_job_count(spark, dirs):
     batch = spark.createDataFrame(
         [(10, T["c0"]), (11, T["u1"])], "doc_id long, text string"
     )
-    jobs, gid = JobGroups(spark), f"screen-{uuid.uuid4()}"
-    with jobs.group(gid):
-        assert screen_micro_batch(batch, 0, corpus, acc) == (2, 1)
-    # measured 35-36 over 15 calls (4 cores, Spark 4.1.2): AQE runs
-    # its query stages as a varying number of jobs
-    assert len(jobs.job_ids(gid)) <= 36
+    before = newest_execution_id()
+    assert screen_micro_batch(batch, 0, corpus, acc) == (2, 1)
+    assert newest_execution_id() - before == 7
 
 
 def test_materialize_rebuilds_partial_base_without_success_marker(
@@ -538,16 +546,16 @@ def test_quality_model_screens_before_dedup(spark, dirs):
     } == {11}
 
 
-def _run_exact_waves(spark, acc, exact, n_waves, expected_items=10000,
-                     fpp=0.01, fold_every=None):
+def _run_exact_waves(spark, acc, exact, n_waves, fold_every=None):
     """Drive the screen with the exact prefilter enabled — wave i
     carries one unique doc (100+i), one EXACT copy of wave i-2's
     unique (300+i), one exact copy of the static corpus doc (500+i),
     and from wave 1 on a NEAR-dup of the corpus doc (700+i, one token
     changed — must be caught by the near-dup screen, proving the
-    exact prefilter doesn't swallow the near path)."""
+    exact prefilter doesn't swallow the near path).  ``fold_every``
+    folds ``hashes/incr`` the way ``_Lake.maintain`` does."""
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-        fold_bloom_partitions,
+        compact_batch_partitions,
         materialize_exact_screen,
         screen_micro_batch,
     )
@@ -556,7 +564,7 @@ def _run_exact_waves(spark, acc, exact, n_waves, expected_items=10000,
         [(0, T["c0"])], "doc_id long, text string"
     )
     near_c0 = T["c0"].replace("alpha", "altered")
-    materialize_exact_screen(corpus, exact, expected_items, fpp)
+    materialize_exact_screen(corpus, exact)
     counts = []
     for i in range(n_waves):
         rows = [(100 + i, _unique_text(i)), (500 + i, T["c0"])]
@@ -566,24 +574,77 @@ def _run_exact_waves(spark, acc, exact, n_waves, expected_items=10000,
             rows.append((300 + i, _unique_text(i - 2)))
         batch = spark.createDataFrame(rows, "doc_id long, text string")
         if fold_every and i > 0 and i % fold_every == 0:
-            fold_bloom_partitions(spark, f"{exact}/bloom/incr", i)
+            compact_batch_partitions(spark, f"{exact}/hashes/incr", i)
         counts.append(
             screen_micro_batch(batch, i, corpus, acc, exact_dir=exact)
         )
     return counts
 
 
+def test_exact_screen_matches_no_exact_run_and_replays(spark, tmp_path):
+    """Fast guard for the exact prefilter: three tiny waves screened
+    with ``exact_dir`` and without it get the same ``(n, accepted)``
+    per wave and the same accepted ids.  The waves hold a corpus copy,
+    a copy of an earlier wave's survivor, an exact copy within one
+    batch, a near-dup of the corpus and uniques.  Replaying the last
+    wave leaves the lake's rows as they were, and ``exact_dir`` holds
+    only the hash table."""
+    import os
+
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        materialize_exact_screen,
+        screen_micro_batch,
+    )
+
+    corpus = spark.createDataFrame(
+        [(0, T["c0"])], "doc_id long, text string"
+    )
+    waves = [
+        # corpus copy; unique; 13 is an exact copy of 12 in-batch
+        [(10, T["c0"]), (11, T["u1"]), (12, T["u2"]), (13, T["u2"])],
+        # copy of survivor 11; near-dup of the corpus doc; unique
+        [(20, T["u1"]), (21, T["c0"].replace("alpha", "altered")),
+         (22, T["u3"])],
+        # copy of survivor 12; unique
+        [(30, T["u2"]), (31, _unique_text(7))],
+    ]
+    acc_a, acc_b = str(tmp_path / "acc_a"), str(tmp_path / "acc_b")
+    exact = str(tmp_path / "exact")
+    materialize_exact_screen(corpus, exact)
+    batches = [
+        spark.createDataFrame(w, "doc_id long, text string") for w in waves
+    ]
+    with_exact = [
+        screen_micro_batch(b, i, corpus, acc_a, exact_dir=exact)
+        for i, b in enumerate(batches)
+    ]
+    without = [
+        screen_micro_batch(b, i, corpus, acc_b)
+        for i, b in enumerate(batches)
+    ]
+    assert with_exact == without == [(4, 2), (3, 1), (2, 1)]
+
+    def rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    ids = sorted(r[0] for r in rows(acc_a))
+    assert ids == sorted(r[0] for r in rows(acc_b)) == [11, 12, 22, 31]
+    lake = (rows(acc_a), rows(f"{exact}/hashes/incr"))
+    assert screen_micro_batch(
+        batches[2], 2, corpus, acc_a, exact_dir=exact
+    ) == with_exact[2]
+    assert (rows(acc_a), rows(f"{exact}/hashes/incr")) == lake
+    assert os.listdir(exact) == ["hashes"]
+
+
 def test_exact_prefilter_preserves_verdicts(spark, dirs):
-    """The bloom+hash exact screen must not change WHO is accepted —
-    only where exact copies die (cheap hash screen vs shingling).
-    Near-dups (not exact) must still be caught downstream, and a
-    saturated bloom (tiny capacity -> ~every probe positive) must
-    still be exact via the confirm join."""
+    """The exact screen must not change WHO is accepted — only where
+    exact copies die (cheap hash screen vs shingling).  Near-dups
+    (not exact) must still be caught downstream."""
     import tempfile
 
     acc_a, exact_a = tempfile.mkdtemp(), tempfile.mkdtemp()
     acc_b = tempfile.mkdtemp()
-    acc_c, exact_c = tempfile.mkdtemp(), tempfile.mkdtemp()
     import shutil
 
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
@@ -618,23 +679,17 @@ def test_exact_prefilter_preserves_verdicts(spark, dirs):
         assert not any(500 <= d < 600 for d in a)
         assert not any(300 <= d < 400 for d in a)
         assert not any(700 <= d < 800 for d in a)
-        # saturated bloom: capacity 1 -> dense bitmap, fp-heavy, but
-        # the confirm join keeps it exact
-        _run_exact_waves(
-            spark, acc_c, exact_c, 4, expected_items=1, fpp=0.5
-        )
-        c = {r.doc_id for r in spark.read.parquet(acc_c).collect()}
-        assert c == {100, 101, 102, 103}  # uniques only, no extras
     finally:
-        for d in (acc_a, exact_a, acc_b, acc_c, exact_c):
+        for d in (acc_a, exact_a, acc_b):
             shutil.rmtree(d, ignore_errors=True)
 
 
 def test_exact_prefilter_replay_and_fold(spark, dirs):
     """Replaying a batch with its exact-screen incr artifacts already
-    written must be idempotent (strict-inequality: its own bloom/hash
-    partitions are excluded), and fold_bloom_partitions must collapse
-    the incr rows to one while preserving verdicts."""
+    written must be idempotent (strict-inequality: its own hash
+    partition is excluded), and folding ``hashes/incr`` with
+    compact_batch_partitions must keep the partition count bounded
+    while preserving verdicts."""
     import shutil
     import tempfile
 
@@ -645,10 +700,10 @@ def test_exact_prefilter_replay_and_fold(spark, dirs):
 
     acc, exact = tempfile.mkdtemp(), tempfile.mkdtemp()
     try:
-        _run_exact_waves(spark, acc, exact, 6, fold_every=3)
-        # bloom incr rows stay bounded: folds at 3 covered 0..2
-        bloom_ids = _list_batch_ids(spark, f"{exact}/bloom/incr")
-        assert len(bloom_ids) <= 4  # fold(3) -> {2} + 3,4,5
+        counts = _run_exact_waves(spark, acc, exact, 6, fold_every=3)
+        # hash incr partitions stay bounded: the fold at 3 covered 0..2
+        hash_ids = _list_batch_ids(spark, f"{exact}/hashes/incr")
+        assert len(hash_ids) <= 4  # fold(3) -> {2} + 3,4,5
         before = sorted(
             (r.doc_id, r.batch_id)
             for r in spark.read.parquet(acc).collect()
@@ -667,7 +722,8 @@ def test_exact_prefilter_replay_and_fold(spark, dirs):
             ],
             "doc_id long, text string",
         )
-        screen_micro_batch(batch5, 5, corpus, acc, exact_dir=exact)
+        replay = screen_micro_batch(batch5, 5, corpus, acc, exact_dir=exact)
+        assert replay == counts[5] == (4, 1)
         after = sorted(
             (r.doc_id, r.batch_id)
             for r in spark.read.parquet(acc).collect()
@@ -785,204 +841,6 @@ def test_release_held_batches_after_baseline_refresh(spark, dirs):
         } == {30, 40, 42, 61}
     finally:
         shutil.rmtree(drift, ignore_errors=True)
-
-
-# ------------------------------------------- bloom saturation rebuild --
-
-
-def test_bloom_saturation_rebuild_swaps_generation(spark, dirs):
-    """VERDICT r7 wrong-2 / r8 #2 done-criteria: ingest past the
-    frozen ``expected_items`` budget, watch the density metric fire,
-    rebuild with larger n_bits via the staged atomic swap, and prove
-    verdicts identical before/after with replay still idempotent."""
-    import os
-    import tempfile
-
-    from kafka_sparkstreaming_sbt_spark.operators.bloom import (
-        bloom_fill_fraction,
-    )
-    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-        _list_batch_ids,
-        _load_exact_bloom,
-        materialize_exact_screen,
-        rebuild_exact_bloom,
-        screen_micro_batch,
-    )
-
-    acc, exact = tempfile.mkdtemp(), tempfile.mkdtemp()
-    try:
-        corpus = spark.createDataFrame(
-            [(0, T["c0"])], "doc_id long, text string"
-        )
-        # budget frozen at 4 keys -> 40-bit bitmap; 6 accepted uniques
-        # blow straight past it
-        materialize_exact_screen(corpus, exact, expected_items=4)
-        old = spark.read.parquet(f"{exact}/bloom/base").collect()[0]
-        for i in range(6):
-            batch = spark.createDataFrame(
-                [(100 + i, _unique_text(i)), (500 + i, T["c0"])],
-                "doc_id long, text string",
-            )
-            screen_micro_batch(batch, i, corpus, acc, exact_dir=exact)
-        # the metric fires: the outgrown filter is past the 0.5 line
-        bitmap, n_bits, _ = _load_exact_bloom(spark, exact, 6)
-        fill_before = bloom_fill_fraction(bitmap)
-        assert fill_before > 0.5
-        assert n_bits == old.n_bits
-        # staged rebuild sized from the ACTUAL key count (7)
-        rebuild_exact_bloom(spark, corpus, acc, exact, upto_batch=6)
-        new = spark.read.parquet(f"{exact}/bloom/base").collect()[0]
-        assert new.n_bits > old.n_bits
-        bitmap2, n_bits2, _ = _load_exact_bloom(spark, exact, 6)
-        assert n_bits2 == new.n_bits
-        assert bloom_fill_fraction(bitmap2) < 0.5
-        # atomic swap bookkeeping: covered incr gone, coverage
-        # recorded in the generation row, no staging residue
-        assert _list_batch_ids(spark, f"{exact}/bloom/incr") == []
-        assert new.upto == 6
-        assert not os.path.exists(f"{exact}/bloom/_rebuild")
-        # verdicts identical after the swap: exact copies of corpus
-        # AND of pre-rebuild accepted docs still die, uniques pass
-        batch6 = spark.createDataFrame(
-            [
-                (106, _unique_text(6)),
-                (506, T["c0"]),
-                (306, _unique_text(3)),
-            ],
-            "doc_id long, text string",
-        )
-        n, a = screen_micro_batch(
-            batch6, 6, corpus, acc, exact_dir=exact
-        )
-        assert (n, a) == (3, 1)
-        ids = {r.doc_id for r in spark.read.parquet(acc).collect()}
-        assert ids == {100 + i for i in range(7)}
-        # replay of batch 6 (incr artifacts exist, NEW n_bits): same
-        # verdicts, lake unchanged
-        n2, a2 = screen_micro_batch(
-            batch6, 6, corpus, acc, exact_dir=exact
-        )
-        assert (n2, a2) == (n, a)
-        assert {
-            r.doc_id for r in spark.read.parquet(acc).collect()
-        } == ids
-    finally:
-        shutil.rmtree(acc, ignore_errors=True)
-        shutil.rmtree(exact, ignore_errors=True)
-
-
-def test_bloom_rebuild_crash_recovery_both_phases(spark, dirs):
-    """The staged-generation protocol for the bloom rebuild: a
-    staging dir WITHOUT its _SUCCESS commit record rolls back (old
-    base intact); one WITH it rolls forward (swap + covered-incr
-    deletes completed by recovery)."""
-    import os
-    import tempfile
-
-    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-        _list_batch_ids,
-        materialize_exact_screen,
-        recover_exact_screen,
-        screen_micro_batch,
-    )
-
-    acc, exact = tempfile.mkdtemp(), tempfile.mkdtemp()
-    try:
-        corpus = spark.createDataFrame(
-            [(0, T["c0"])], "doc_id long, text string"
-        )
-        materialize_exact_screen(corpus, exact, expected_items=4)
-        for i in range(3):
-            batch = spark.createDataFrame(
-                [(100 + i, _unique_text(i))], "doc_id long, text string"
-            )
-            screen_micro_batch(batch, i, corpus, acc, exact_dir=exact)
-        old = spark.read.parquet(f"{exact}/bloom/base").collect()[0]
-
-        # crash DURING the staging write: dir present, no _SUCCESS
-        spark.createDataFrame(
-            [(99999, 3, bytearray(b"\xff" * (99999 // 8)), 3)],
-            "n_bits long, n_hashes long, bitmap binary, upto long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{exact}/bloom/_rebuild/upto=3"
-        )
-        os.remove(f"{exact}/bloom/_rebuild/upto=3/_SUCCESS")
-        recover_exact_screen(spark, exact)
-        assert not os.path.exists(f"{exact}/bloom/_rebuild")
-        rolled_back = spark.read.parquet(f"{exact}/bloom/base").collect()[0]
-        assert rolled_back.n_bits == old.n_bits  # old generation intact
-        assert _list_batch_ids(spark, f"{exact}/bloom/incr") == [0, 1, 2]
-
-        # crash AFTER the staging committed (_SUCCESS present) but
-        # before the swap: recovery rolls FORWARD
-        n_bits_new = 1600
-        spark.createDataFrame(
-            [(n_bits_new, 5, bytearray(bytes(n_bits_new // 8)), 3)],
-            "n_bits long, n_hashes long, bitmap binary, upto long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{exact}/bloom/_rebuild/upto=3"
-        )
-        recover_exact_screen(spark, exact)
-        assert not os.path.exists(f"{exact}/bloom/_rebuild")
-        swapped = spark.read.parquet(f"{exact}/bloom/base").collect()[0]
-        assert swapped.n_bits == n_bits_new
-        assert _list_batch_ids(spark, f"{exact}/bloom/incr") == []
-        assert swapped.upto == 3
-    finally:
-        shutil.rmtree(acc, ignore_errors=True)
-        shutil.rmtree(exact, ignore_errors=True)
-
-
-def test_pipeline_probes_density_and_rebuilds_mid_stream(spark, dirs):
-    """End-to-end wiring: with a tiny frozen budget the pipeline's
-    compaction hook observes the fill fraction crossing 0.5
-    (on_bloom_density) and swaps in a larger generation mid-stream —
-    and verdicts after the swap still hold."""
-    src, acc, ckpt = dirs
-    import tempfile
-
-    exact = tempfile.mkdtemp(prefix="exact_")
-    try:
-        corpus = spark.createDataFrame(
-            [(0, T["c0"])], "doc_id long, text string"
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string").json(src)
-        )
-        densities = []
-        q = run_dedup_ingest_pipeline(
-            stream, corpus, acc, ckpt,
-            exact_dir=exact,
-            bloom_expected_items=4,
-            compact_every=2,
-            on_bloom_density=lambda bid, fill: densities.append(
-                (bid, fill)
-            ),
-        )
-        initial = spark.read.parquet(f"{exact}/bloom/base").collect()[0]
-        try:
-            for i in range(7):
-                rows = [(100 + i, _unique_text(i)), (500 + i, T["c0"])]
-                if i >= 2:
-                    rows.append((300 + i, _unique_text(i - 2)))
-                spark.createDataFrame(
-                    rows, "doc_id long, text string"
-                ).coalesce(1).write.mode("append").json(src)
-                q.processAllAvailable()
-        finally:
-            q.stop()
-        # probe fired at each compaction (batches 2, 4, 6) and
-        # crossed the rebuild line at least once
-        assert [bid for bid, _ in densities] == [2, 4, 6]
-        assert any(fill > 0.5 for _, fill in densities)
-        # a larger generation was swapped in mid-stream
-        final = spark.read.parquet(f"{exact}/bloom/base").collect()[0]
-        assert final.n_bits > initial.n_bits
-        # and the verdicts held throughout: uniques in, copies out
-        ids = {r.doc_id for r in spark.read.parquet(acc).collect()}
-        assert ids == {100 + i for i in range(7)}
-    finally:
-        shutil.rmtree(exact, ignore_errors=True)
 
 
 def test_drift_gate_holds_broken_feed_and_passes_clean(spark, dirs):
