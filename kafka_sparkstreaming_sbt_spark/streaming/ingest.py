@@ -256,19 +256,20 @@ _GENERATION_CACHE_MAX = 4
 class _Generation:
     """One artifact's staged-generation protocol (module docstring
     table).  ``live=None``: the generation lands as ``incr``'s own
-    ``batch_id=M-1`` partition (compaction folds a dir into itself)."""
+    ``batch_id=M-1`` partition (compaction folds a dir into itself)
+    and its commit record is the committer's ``_SUCCESS``; every
+    generation with a live dir commits with ``_UPTO=M``."""
 
     spark: object
     root: str
     live: str | None = None
-    marker: str = "_UPTO"
     incr: str | None = None
 
     def staging(self, upto: int) -> str:
         return f"{self.root}/upto={upto}"
 
     def _committed(self, staged: str) -> bool:
-        if self.marker == "_SUCCESS":
+        if self.live is None:
             return _success_marker_exists(self.spark, staged)
         return _quantizer_upto(self.spark, staged) is not None
 
@@ -307,7 +308,7 @@ class _Generation:
                     self.commit(int(name.split("=", 1)[1]))
                     break
             fs.delete(P(self.root), True)
-        if self.marker == "_UPTO":
+        if self.live is not None:
             self.drop_covered(_quantizer_upto(self.spark, self.live))
 
     def load(self, loader: Callable[[str], tuple]) -> tuple:
@@ -335,9 +336,7 @@ class _Generation:
 
 
 def _compaction(spark, path: str) -> _Generation:
-    return _Generation(
-        spark, f"{path}/_compact", marker="_SUCCESS", incr=path
-    )
+    return _Generation(spark, f"{path}/_compact", incr=path)
 
 
 def compact_batch_partitions(

@@ -115,11 +115,19 @@ def test_screen_micro_batch_job_count(spark, dirs):
     start exactly the SQL executions the one screen body runs (the
     batch is checkpointed once and counted on that job, the accepted
     rows are materialized and counted the same way, and nothing is
-    read back from the lake).  Executions, not jobs: AQE splits an
-    execution into a varying number of jobs (35-37 over 20 calls, 4
-    cores, Spark 4.1.2), while the execution count read 7 on each of
-    6 calls.  The count is the step of the newest execution id, which
-    the status store's retention cap cannot hide."""
+    read back from the lake), and no job outside them.  Executions,
+    not jobs: AQE splits an execution into a varying number of jobs
+    (35-37 over 20 calls, 4 cores, Spark 4.1.2), while the execution
+    count read 7 on each of 6 calls.  The count is the step of the
+    newest execution id, which the status store's retention cap
+    cannot hide.  Jobs that belong to no execution (an RDD action, a
+    parquet schema inference at read time) are pinned separately:
+    the call's job group minus the jobs of its executions, which read
+    0 on 4 of 4 calls."""
+    import uuid
+
+    from perfbench.tracing import JobGroups
+
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
         screen_micro_batch,
     )
@@ -134,6 +142,10 @@ def test_screen_micro_batch_job_count(spark, dirs):
             return -1
         return store.executionsList(n - 1, 1).head().executionId()
 
+    def execution_jobs(eid: int) -> set[int]:
+        keys = store.execution(eid).get().jobs().keys().mkString(",")
+        return {int(k) for k in keys.split(",") if k}
+
     _, acc, _ = dirs
     corpus = spark.createDataFrame(
         [(0, T["c0"])], "doc_id long, text string"
@@ -141,9 +153,18 @@ def test_screen_micro_batch_job_count(spark, dirs):
     batch = spark.createDataFrame(
         [(10, T["c0"]), (11, T["u1"])], "doc_id long, text string"
     )
+    jobs, gid = JobGroups(spark), f"screen-{uuid.uuid4()}"
     before = newest_execution_id()
-    assert screen_micro_batch(batch, 0, corpus, acc) == (2, 1)
-    assert newest_execution_id() - before == 7
+    with jobs.group(gid):
+        assert screen_micro_batch(batch, 0, corpus, acc) == (2, 1)
+    after = newest_execution_id()
+    assert after - before == 7
+    in_executions = set().union(
+        *(execution_jobs(e) for e in range(before + 1, after + 1))
+    )
+    group = set(jobs.job_ids(gid))
+    assert in_executions and in_executions <= group
+    assert group - in_executions == set()
 
 
 def test_materialize_rebuilds_partial_base_without_success_marker(
@@ -581,14 +602,16 @@ def _run_exact_waves(spark, acc, exact, n_waves, fold_every=None):
     return counts
 
 
-def test_exact_screen_matches_no_exact_run_and_replays(spark, tmp_path):
+def test_exact_screen_verdicts_and_replay(spark, tmp_path):
     """Fast guard for the exact prefilter: three tiny waves screened
-    with ``exact_dir`` and without it get the same ``(n, accepted)``
-    per wave and the same accepted ids.  The waves hold a corpus copy,
-    a copy of an earlier wave's survivor, an exact copy within one
-    batch, a near-dup of the corpus and uniques.  Replaying the last
-    wave leaves the lake's rows as they were, and ``exact_dir`` holds
-    only the hash table."""
+    with ``exact_dir`` get the ``(n, accepted)`` per wave and the
+    accepted ids a screen without it gets (that parity is run in the
+    slow ``test_exact_prefilter_preserves_verdicts``; here the
+    no-exact figures are the literal oracle).  The waves hold a corpus
+    copy, a copy of an earlier wave's survivor, an exact copy within
+    one batch, a near-dup of the corpus and uniques.  Replaying the
+    last wave leaves the lake's rows as they were, and ``exact_dir``
+    holds only the hash table."""
     import os
 
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
@@ -608,32 +631,26 @@ def test_exact_screen_matches_no_exact_run_and_replays(spark, tmp_path):
         # copy of survivor 12; unique
         [(30, T["u2"]), (31, _unique_text(7))],
     ]
-    acc_a, acc_b = str(tmp_path / "acc_a"), str(tmp_path / "acc_b")
-    exact = str(tmp_path / "exact")
+    acc, exact = str(tmp_path / "acc"), str(tmp_path / "exact")
     materialize_exact_screen(corpus, exact)
     batches = [
         spark.createDataFrame(w, "doc_id long, text string") for w in waves
     ]
-    with_exact = [
-        screen_micro_batch(b, i, corpus, acc_a, exact_dir=exact)
+    counts = [
+        screen_micro_batch(b, i, corpus, acc, exact_dir=exact)
         for i, b in enumerate(batches)
     ]
-    without = [
-        screen_micro_batch(b, i, corpus, acc_b)
-        for i, b in enumerate(batches)
-    ]
-    assert with_exact == without == [(4, 2), (3, 1), (2, 1)]
+    assert counts == [(4, 2), (3, 1), (2, 1)]
 
     def rows(path):
         return sorted(tuple(r) for r in spark.read.parquet(path).collect())
 
-    ids = sorted(r[0] for r in rows(acc_a))
-    assert ids == sorted(r[0] for r in rows(acc_b)) == [11, 12, 22, 31]
-    lake = (rows(acc_a), rows(f"{exact}/hashes/incr"))
+    assert [r[0] for r in rows(acc)] == [11, 12, 22, 31]
+    lake = (rows(acc), rows(f"{exact}/hashes/incr"))
     assert screen_micro_batch(
-        batches[2], 2, corpus, acc_a, exact_dir=exact
-    ) == with_exact[2]
-    assert (rows(acc_a), rows(f"{exact}/hashes/incr")) == lake
+        batches[2], 2, corpus, acc, exact_dir=exact
+    ) == counts[2]
+    assert (rows(acc), rows(f"{exact}/hashes/incr")) == lake
     assert os.listdir(exact) == ["hashes"]
 
 
