@@ -860,6 +860,43 @@ def test_release_held_batches_after_baseline_refresh(spark, dirs):
         shutil.rmtree(drift, ignore_errors=True)
 
 
+def test_release_recovers_an_interrupted_compaction_first(spark, dirs):
+    """A release reads the lake, so it recovers it first, as a
+    pipeline start does.  The lake below holds a compaction of batch
+    0 that crashed after dropping the covered partition and before
+    its rename: batch 0's accepted row sits only in the committed
+    ``_compact/upto=1`` staging dir.  Unrecovered, the release screen
+    would not see that row and would accept a held copy of it."""
+    import os
+
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        _RELEASE_BASE,
+        _list_batch_ids,
+        materialize_drift_baseline,
+        release_held_batches,
+    )
+
+    _, acc, drift = dirs
+    schema = "doc_id long, text string"
+    corpus = spark.createDataFrame([(0, T["c0"])], schema)
+    materialize_drift_baseline(corpus, drift)
+    spark.createDataFrame([(30, T["u1"])], schema).write.parquet(
+        f"{acc}/_compact/upto=1"
+    )
+    assert os.path.exists(f"{acc}/_compact/upto=1/_SUCCESS")
+    assert _list_batch_ids(spark, acc) == []
+    # held batch 1: a copy of batch 0's accepted text, and a unique
+    spark.createDataFrame(
+        [(40, T["u1"]), (41, T["u2"])], schema
+    ).write.parquet(f"{drift}/held/batch_id=1")
+
+    assert release_held_batches(spark, corpus, acc, drift) == {1: (2, 1)}
+    assert not os.path.exists(f"{acc}/_compact")
+    assert {
+        (r.doc_id, r.batch_id) for r in spark.read.parquet(acc).collect()
+    } == {(30, 0), (41, _RELEASE_BASE + 1)}
+
+
 def test_drift_gate_holds_broken_feed_and_passes_clean(spark, dirs):
     """The drift HOLD (drift_dir=): a clean wave flows through the
     screens untouched; a producer bug that repeats one text
