@@ -2526,14 +2526,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # FIRST 50 entries in round 3 (CORRECTNESS_r03.json has 50 rows
     # while 67 queries existed), so the first 50 here are a curated,
     # oracle-complete set covering every operator family; the overflow
-    # block holds same-family variants (still oracle-gated — the local
-    # driver-sim in .claude/skills/verify checks ALL of them) and the
+    # block holds same-family variants (still oracle-gated —
+    # `python scripts/measure.py oracle` checks ALL of them) and the
     # four rows-only sketch/ANN queries last.
     #
     # ROTATED in r8 (VERDICT r7 #4): the r6/r7 families (PQ, BM25, RRF,
     # PageRank, profiling, Bloom, soft-dedup, DSIR, NB, WARC) moved
     # INTO the gate window; ten long-stable same-family variants moved
-    # to overflow — still oracle-gated by the full sim, just past the
+    # to overflow — still oracle-gated by `measure.py oracle`, past the
     # driver's 50-row record.
     #
     # ROTATED AGAIN in r9 (VERDICT r8 #4): nine r8 families

@@ -241,21 +241,20 @@ def stream_ingest_probe(
     """Dedup-on-ingest throughput (streaming/ingest.py): replay
     ``n_waves`` document batches through the foreachBatch incremental
     screen against an ``n_corpus``-doc corpus with MATERIALIZED
-    signatures (the production configuration — the base table is
-    built before the clock starts, as a deployment would).  Documents
-    are synthesized with ~25% near-dups of corpus docs so the screen
-    does real verification work, not just bucket misses.
+    signatures (the production configuration — the pipeline start
+    builds the lake's key table before the clock starts, as a
+    deployment would).  Documents are synthesized with ~25% near-dups
+    of corpus docs so the screen does real verification work, not
+    just bucket misses.
 
     ``span=True`` measures the SAME configuration plus the
-    ExactSubstr span-excision stage (``span_dir`` with the
-    materialized corpus window-hash table, window_tokens=8) under
+    ExactSubstr span-excision stage (``span_window_tokens=8``, the
+    corpus window hashes materialized in the key table) under
     ``span_ingest_*`` keys — a separate record, so
     ``stream_ingest_docs_per_sec`` stays wave-size- AND
     stage-set-comparable round-over-round (VERDICT r8 #6), while the
     span stage's cost is the delta between the two."""
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-        materialize_corpus_signatures,
-        materialize_corpus_window_hashes,
         run_dedup_ingest_pipeline,
     )
 
@@ -277,20 +276,14 @@ def stream_ingest_probe(
     src_dir = tempfile.mkdtemp(prefix="bench_ing_src_")
     acc = tempfile.mkdtemp(prefix="bench_ing_acc_")
     ckpt = tempfile.mkdtemp(prefix="bench_ing_ckpt_")
-    sig = tempfile.mkdtemp(prefix="bench_ing_sig_")
-    span_dir = tempfile.mkdtemp(prefix="bench_ing_span_") if span else None
     try:
         corpus = synth_docs(0, n_corpus, False).localCheckpoint(eager=True)
-        materialize_corpus_signatures(corpus, sig)
-        if span_dir is not None:
-            materialize_corpus_window_hashes(corpus, span_dir, 8)
         stream = spark.readStream.schema("doc_id long, text string").json(
             src_dir
         )
         accepted: list[int] = []
         q = run_dedup_ingest_pipeline(
-            stream, corpus, acc, ckpt, signature_dir=sig,
-            span_dir=span_dir, span_window_tokens=8,
+            stream, corpus, acc, ckpt, span_window_tokens=8 if span else None,
             on_batch=lambda bid, n, a: accepted.append(a),
         )
         total = n_batch * n_waves
@@ -317,9 +310,8 @@ def stream_ingest_probe(
             f"{key}_wave_docs": n_batch,
         }
     finally:
-        for d in (src_dir, acc, ckpt, sig, span_dir):
-            if d is not None:
-                shutil.rmtree(d, ignore_errors=True)
+        for d in (src_dir, acc, ckpt):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def semantic_ingest_probe(
@@ -423,8 +415,6 @@ def multimodal_ingest_probe(
     from pyspark.sql import functions as F
 
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-        materialize_corpus_signatures,
-        materialize_exact_screen,
         materialize_semantic_quantizer,
         run_multimodal_ingest_pipeline,
     )
@@ -460,14 +450,12 @@ def multimodal_ingest_probe(
 
     tmp = {
         k: tempfile.mkdtemp(prefix=f"bench_mm_{k}_")
-        for k in ("src", "acc", "cells", "ckpt", "sig", "exact")
+        for k in ("src", "acc", "cells", "ckpt")
     }
     try:
         full = synth(0, n_corpus, False).localCheckpoint(eager=True)
         docs = full.select("doc_id", "text")
         emb = full.select("doc_id", "embedding")
-        materialize_corpus_signatures(docs, tmp["sig"])
-        materialize_exact_screen(docs, tmp["exact"])
         materialize_semantic_quantizer(
             emb, tmp["cells"],
             n_cells=max(4, int(_math.isqrt(n_corpus))),
@@ -479,8 +467,7 @@ def multimodal_ingest_probe(
         accepted: list[int] = []
         q = run_multimodal_ingest_pipeline(
             stream, docs, emb, tmp["acc"], tmp["cells"], tmp["ckpt"],
-            method="numpy",
-            signature_dir=tmp["sig"], exact_dir=tmp["exact"],
+            method="numpy", exact=True,
             on_batch=lambda bid, n, a: accepted.append(a),
             stage_sec=stage_sec,
         )

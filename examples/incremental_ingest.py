@@ -13,7 +13,7 @@ corpus with itself:
 
 With ``--span-window N`` an ExactSubstr excision stage runs FIRST:
 corpus-duplicated N-token windows are cut out of the batch text (the
-streaming pipeline's ``span_dir`` stage, one-shot form), docs emptied
+streaming pipeline's span stage, one-shot form), docs emptied
 by excision are rejected, and the dedup screens see the cleaned text.
 
 A batch doc is ACCEPTED only if neither screen finds a duplicate.
@@ -128,8 +128,8 @@ def screen_batch(
     ``span_window``: optional ExactSubstr stage BEFORE the screens —
     every ``span_window``-token window already present in the corpus
     (or shared within the batch) is EXCISED from the batch text, the
-    same stage the streaming pipeline runs under ``span_dir``; docs
-    emptied by excision are flagged ``span_emptied`` and rejected.
+    same stage the streaming pipeline runs with ``span_window_tokens``;
+    docs emptied by excision are flagged ``span_emptied`` and rejected.
     The dedup screens then run on the CLEANED text, so boilerplate
     spans can no longer glue unrelated docs into near-dup pairs.  In
     production the corpus window-hash table is a materialized

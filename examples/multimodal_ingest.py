@@ -42,8 +42,6 @@ from pyspark.sql import functions as F
 from kafka_sparkstreaming_sbt_spark.session import get_spark
 from kafka_sparkstreaming_sbt_spark.sources.batch import read_table
 from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-    materialize_corpus_signatures,
-    materialize_exact_screen,
     materialize_semantic_quantizer,
     run_multimodal_ingest_pipeline,
 )
@@ -80,16 +78,15 @@ def main() -> None:
 
     tmp = {
         k: tempfile.mkdtemp(prefix=f"mm_{k}_")
-        for k in ("src", "cells", "ckpt", "sig", "exact")
+        for k in ("src", "cells", "ckpt")
     }
     acc = args.out or tempfile.mkdtemp(prefix="mm_acc_")
     corpus_docs = corpus.select("doc_id", "text")
     corpus_emb = corpus.select("doc_id", "embedding")
     try:
         # production shape: recurring-cost artifacts built once,
-        # before the stream starts
-        materialize_corpus_signatures(corpus_docs, tmp["sig"])
-        materialize_exact_screen(corpus_docs, tmp["exact"])
+        # before the stream starts (the pipeline start builds the
+        # text keys)
         materialize_semantic_quantizer(
             corpus_emb, tmp["cells"], n_cells=args.n_cells,
             id_col="doc_id",
@@ -103,8 +100,7 @@ def main() -> None:
             tmp["ckpt"],
             threshold=args.jaccard_threshold,
             semantic_threshold=args.semantic_threshold,
-            n_cells=args.n_cells, method="numpy",
-            signature_dir=tmp["sig"], exact_dir=tmp["exact"],
+            n_cells=args.n_cells, method="numpy", exact=True,
             on_batch=lambda bid, n, a: waves.append(
                 {"batch_id": bid, "n_in": n, "n_accepted": a}
             ),

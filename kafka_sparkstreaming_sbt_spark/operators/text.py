@@ -47,12 +47,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 TOKEN_REGEX = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace tokenization as an array column (single-space split
-    to stay byte-identical with the SQL oracle)."""
-    return df.withColumn("tokens", F.split(F.col(text_col), " "))
-
-
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document token statistics: whitespace tokens, distinct
     tokens, regex (BPE-ish) tokens, characters."""

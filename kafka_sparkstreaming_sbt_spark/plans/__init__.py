@@ -1,6 +1,7 @@
-"""Plan inspection helpers — used by tests to assert the physical plan
-is the one we want at scale (pushdown reached the scan, aggregation is
-partial->final, joins broadcast where intended)."""
+"""Plan helpers: compute-partition sizing, and the formatted physical
+plan ``scripts/measure.py plans`` dumps for inspection (pushdown
+reached the scan, aggregation is partial->final, joins broadcast where
+intended)."""
 
 from __future__ import annotations
 
@@ -31,15 +32,3 @@ def physical_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def assert_in_plan(df: DataFrame, *needles: str) -> None:
-    plan = physical_plan(df)
-    for needle in needles:
-        assert needle in plan, f"{needle!r} not in plan:\n{plan}"
-
-
-def assert_not_in_plan(df: DataFrame, *needles: str) -> None:
-    plan = physical_plan(df)
-    for needle in needles:
-        assert needle not in plan, f"{needle!r} unexpectedly in plan:\n{plan}"

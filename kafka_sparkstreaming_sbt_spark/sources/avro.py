@@ -1,12 +1,12 @@
-"""Avro payload decode/encode (extension surface — the reference
+"""Avro payload decode (extension surface — the reference
 DECLARES Confluent Avro + Schema Registry dependencies but ships
 JSON-only code, SURVEY.md §2.11; this carries that intent).
 
-``from_avro``/``to_avro`` live in the external ``spark-avro`` module
-(not bundled with the PySpark pip distribution), so everything here is
-gated: :func:`avro_available` probes for the jar and the wrappers
-raise a clear error instead of an opaque Py4J failure when it is
-absent.  The JSON-schema string format is Avro's own, e.g.::
+``from_avro`` lives in the external ``spark-avro`` module (not
+bundled with the PySpark pip distribution), so the decode is gated:
+:func:`avro_available` probes for the jar and the wrapper raises a
+clear error instead of an opaque Py4J failure when it is absent.  The
+JSON-schema string format is Avro's own, e.g.::
 
     {"type": "record", "name": "txn", "fields": [
         {"name": "transaction_id", "type": "string"}, ...]}
@@ -85,14 +85,3 @@ def with_confluent_frame(
         }
     )
 
-
-def encode_avro(col: Column | str) -> Column:
-    """``to_avro(struct)`` — struct -> binary for an Avro sink."""
-    try:
-        from pyspark.sql.avro.functions import to_avro
-    except ImportError as exc:  # pragma: no cover
-        raise ImportError(
-            "spark-avro is not available; launch with "
-            "--packages org.apache.spark:spark-avro_2.13:<spark-version>"
-        ) from exc
-    return to_avro(col)

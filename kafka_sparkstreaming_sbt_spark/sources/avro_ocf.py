@@ -1,7 +1,7 @@
-"""Pure-Python Avro Object Container File source (extension surface —
-the reference DECLARES Avro + Schema Registry dependencies but ships
-JSON-only code, SURVEY.md §2.11; ``sources.avro`` carries the gated
-spark-avro wrappers, this module makes Avro archives READABLE in
+"""Pure-Python Avro binary codec (extension surface — the reference
+DECLARES Avro + Schema Registry dependencies but ships JSON-only code,
+SURVEY.md §2.11; ``sources.avro`` carries the gated spark-avro
+wrappers, this module decodes Avro payloads and container files in
 environments without the jar).
 
 Format implemented from the public Avro 1.11 spec (container file +
@@ -13,13 +13,8 @@ primitive types (boolean / int / long / float / double / bytes /
 string) and their ``["null", T]`` nullable unions — the shape of
 every Kafka-archive/CDC dump this engine's reference feeds on.
 
-Spark-first distribution: ``spark.read.format("binaryFile")`` ships
-each file's bytes to an executor and ``mapInPandas`` decodes there —
-the driver never touches row data (it reads only one file's HEADER
-for schema sniffing when the caller doesn't pass a schema).  The
-parallelism unit is the file, the standard layout for archived Avro
-(many ~128 MB objects); rows stream out in bounded pandas batches so
-a large file never materializes as one Python list.
+Spark-first distribution: the payload decodes run as ``mapInPandas``
+over Arrow batches, so the driver never touches row data.
 """
 
 from __future__ import annotations
@@ -31,7 +26,7 @@ import zlib
 from collections.abc import Iterator
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 _MAGIC = b"Obj\x01"
@@ -227,58 +222,6 @@ def iter_ocf_records(data: bytes) -> Iterator[dict]:
             yield read_record(block)
         if buf.read(16) != sync:
             raise ValueError("sync marker mismatch (corrupt block)")
-
-
-def read_avro_ocf(
-    spark: SparkSession,
-    path: str,
-    avro_schema: dict | None = None,
-    batch_rows: int = 10_000,
-) -> DataFrame:
-    """Distributed Avro OCF read without the spark-avro jar.
-
-    ``binaryFile`` ships whole files to executors; a ``mapInPandas``
-    stage decodes them there in ``batch_rows`` chunks.  When
-    ``avro_schema`` is None the driver sniffs the HEADER of one file
-    (local filesystems only — pass the schema explicitly for object
-    stores).  Mirrors the contract of ``spark.read.format("avro")``
-    for the supported primitive-record subset."""
-    import pandas as pd
-
-    if avro_schema is None:
-        import glob as _glob
-        import os as _os
-
-        root = path[len("file:"):] if path.startswith("file:") else path
-        candidates = (
-            sorted(_glob.glob(_os.path.join(root, "**", "*.avro"),
-                              recursive=True))
-            if _os.path.isdir(root)
-            else [root]
-        )
-        if not candidates:
-            raise FileNotFoundError(f"no .avro files under {path}")
-        with open(candidates[0], "rb") as fh:
-            head = fh.read(1 << 20)  # header only; never row data
-        avro_schema, _, _, _ = read_ocf_header(head)
-
-    out_schema = spark_schema_for(avro_schema)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows: list[dict] = []
-                for rec in iter_ocf_records(bytes(content)):
-                    rows.append(rec)
-                    if len(rows) >= batch_rows:
-                        yield pd.DataFrame(rows, columns=names)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=names)
-
-    files = spark.read.format("binaryFile").load(path).select("content")
-    return files.mapInPandas(decode, schema=out_schema)
 
 
 def decode_avro_payloads(

@@ -111,9 +111,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Read several tables into a dict keyed by table name."""
     return {name: read_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for ``spark.sql``."""
-    for name in TABLES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)

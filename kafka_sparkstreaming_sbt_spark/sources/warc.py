@@ -11,12 +11,12 @@ the standard per-record concatenated-member gzip — both handled by a
 decompressobj loop).  WET "conversion" records carry extracted plain
 text — the pretraining-relevant payload.
 
-Spark-first distribution (the :mod:`avro_ocf` discipline):
-``spark.read.format("binaryFile")`` ships each archive's bytes to an
-executor and ``mapInPandas`` parses there — the driver never touches
-record data.  The parallelism unit is the file (Common Crawl WET
-segments are ~150 MB, tens of thousands per crawl — natural partition
-grain); records stream out in bounded pandas batches.  A malformed
+Spark-first distribution: ``spark.read.format("binaryFile")`` ships
+each archive's bytes to an executor and ``mapInPandas`` parses there
+— the driver never touches record data.  The parallelism unit is the
+file (Common Crawl WET segments are ~150 MB, tens of thousands per
+crawl — natural partition grain); records stream out in bounded
+pandas batches.  A malformed
 record dead-letters as a null row carrying ``error`` instead of
 failing the task — one corrupt segment must not kill a 100 TB ingest.
 """

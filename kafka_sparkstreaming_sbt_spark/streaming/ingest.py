@@ -31,24 +31,23 @@ and screens reject-cheapest-first, each on the survivors of the last:
           -> write -> increments
 
 (profile scan, broadcast-join score, hash screen, window excision,
-shingle bucket-join, in-cell vector scan).  A stage runs only when its
-model or artifact dir is configured; the text stages need a text
-corpus, the semantic stage ``cells_dir``.  ``write`` is the one
-accepted-partition overwrite, and ``increments`` derive every artifact
-increment from the same materialized ``kept`` frame, so no artifact
-asserts a row the lake doesn't hold.
+shingle bucket-join, in-cell vector scan).  A stage runs only when it
+is configured; the text stages need a text corpus, the semantic stage
+``cells_dir``.  ``write`` is the one accepted-partition overwrite, and
+``increments`` derive every artifact increment from the same
+materialized ``kept`` frame, so no artifact asserts a row the lake
+doesn't hold.
 
 Scale shape: per-trigger cost is |batch| x local-neighborhood (the
 incremental screen's contract — bucket-join vs corpus signatures,
-candidate-only corpus re-shingle), never corpus x corpus.  With
-``signature_dir`` set the corpus-side banded keys are a MATERIALIZED
-lake artifact: the static corpus's table is built once at pipeline
-start (``materialize_corpus_signatures``) and every batch appends only
-its accepted rows' keys — the append-only maintenance discipline
-``banded_signature_table`` documents, under the same ``batch_id=N``
-partition layout and strict-inequality replay contract as the accepted
-rows themselves.  Without it the signatures are recomputed per batch
-(self-containment for toy corpora).
+candidate-only corpus re-shingle), never corpus x corpus.  The
+corpus-side keys of every text stage (banded MinHash signatures,
+content hashes, window hashes) live in ONE lake-owned key table,
+``<accepted_dir>/_keys`` (the key table section below): the static
+corpus's keys are built once, at pipeline start, and every batch
+appends only its accepted rows' keys, in one write, under the same
+``batch_id=N`` layout and strict-inequality replay contract as the
+accepted rows themselves.
 
 Every artifact that is REPLACED rather than appended to goes through
 one staged-generation protocol (``_Generation``), single-writer and
@@ -414,122 +413,94 @@ def recover_compaction(spark, path: str) -> None:
     _compaction(spark, path).recover()
 
 
-def materialize_corpus_signatures(
-    corpus_docs: DataFrame,
-    signature_dir: str,
-    shingle_n: int = 3,
-    n_bands: int = 8,
-) -> None:
-    """One-time base artifact for the streaming screen: the static
-    corpus's banded MinHash keys at ``signature_dir/base``.  Runs
-    once per pipeline deployment — after this, no micro-batch ever
-    re-shingles the static corpus.  The skip is gated on the
-    committer's ``_SUCCESS`` marker, NOT on the dir being readable:
-    a crash mid-write leaves a partial dir that still reads, and a
-    screen running against partial signatures silently admits every
-    duplicate of the missing docs.  A partial dir (no marker) is
-    simply rebuilt — ``mode("overwrite")`` makes the retry safe.
-
-    The key values are versioned: ``signature_dir/_FORMAT=<n>``
-    (``_SIGNATURE_FORMAT``) is written LAST and vouches for base AND
-    incr.  Keys of another format never equal a live batch's keys, so
-    the screen would silently admit duplicates of every stored doc.
-    An older-format ``incr`` can only be rebuilt from the accepted
-    lake, which the pipeline start does; called alone on such a dir,
-    this refreshes ``base`` and leaves the marker off."""
-    _materialize_signatures(corpus_docs, signature_dir, shingle_n, n_bands)
-
-
-def _signature_schema(id_type: T.DataType) -> T.StructType:
-    """``signature_dir/{base,incr}``: ``(doc_id, bs)`` banded keys, in
-    the corpus's doc id type."""
-    return columns(("doc_id", id_type), ("bs", _LONG))
-
-
-#: Version of the banded bucket-key values in ``signature_dir``.  Bump
-#: it whenever ``dedup_fuzzy.banded_bucket_keys`` changes the keys it
-#: emits for the same text: 1 = xxhash64 over the parsed long band
-#: minima (unversioned dirs hold the earlier hex-substring keys).
-_SIGNATURE_FORMAT = 1
+# ------------------------------------------------------ key table --
+#
+# The text stages probe one key table that the lake owns, under the
+# same batch_id layout and strict-inequality replay contract as the
+# accepted rows (the ``_`` hides it from parquet reads of them):
+#
+#   <accepted_dir>/_keys/base/kind=K   static-corpus keys of kind K
+#   <accepted_dir>/_keys/incr/batch_id=N
+#                                      batch N's accepted keys, every kind
+#   <accepted_dir>/_keys/_FORMAT=<n>   key-value version, written LAST
+#
+# One kind per text stage, each probed alone (a partition filter on
+# ``base``, a pushed filter on ``incr``), named with its derivation's
+# parameters (:attr:`_Lake.kinds`):
+#
+#   sig_<n>_<b>  (doc_id, bs)  banded MinHash keys (n-token shingles,
+#                              b bands); near_dup probes them with the
+#                              (span-cleaned) batch text
+#   exact        (wh)          md5 of the text; the exact screen
+#                              anti-joins the raw batch text on it
+#   span_<w>     (wh)          distinct w-token window hashes; the span
+#                              stage excises the raw batch text's
+#                              matches
+#
+# ``base`` stays apart from ``incr``, so a compaction fold never
+# rewrites the corpus keys.  Every key derives from corpus or accepted
+# rows, so a table that is absent, of another format, or without the
+# base of a kind a stage now probes (the stage was switched on after
+# batches were accepted, or its parameters changed: their keys of that
+# kind were never written) is rebuilt whole from them
+# (:meth:`_Lake.open_keys`).
 
 
-def _materialize_signatures(
-    corpus_docs: DataFrame,
-    signature_dir: str,
-    shingle_n: int,
-    n_bands: int,
-    accepted_dir: str | None = None,
-) -> None:
-    """:func:`materialize_corpus_signatures`.  A missing or different
-    format marker drops the whole dir and rebuilds it when
-    ``accepted_dir`` is given (``incr`` from the accepted lake, one
-    partition per accepted ``batch_id``) or there is no ``incr`` to
-    lose.  The marker goes last, so a crash mid-rebuild just rebuilds
-    again."""
+def _keys_schema(id_type: T.DataType) -> T.StructType:
+    """``_keys/{base,incr}``: a kind fills only its own columns, the
+    doc ids in the corpus's id type."""
+    return columns(
+        ("doc_id", id_type), ("bs", _LONG), ("wh", _STRING),
+        ("kind", _STRING),
+    )
+
+
+#: Version of the key values in ``_keys``.  Bump it whenever a
+#: derivation in :func:`_derive_keys` changes the keys it emits for
+#: the same text (``dedup_fuzzy.banded_bucket_keys``, ``md5``,
+#: ``chunking.window_hash_table``): stored keys of another version
+#: never equal a live batch's, and every stored doc's duplicates would
+#: be admitted.
+_KEYS_FORMAT = 1
+
+
+def _derive_keys(
+    lake: _Lake, rows: DataFrame, stages: tuple[str, ...],
+    compute_partitions: int | None = 4,
+) -> DataFrame:
+    """The one derivation of the key table: the keys ``stages`` probe
+    (:attr:`_Lake.kinds`), of ``rows`` (doc_id, text), as one unioned
+    plan in the :func:`_keys_schema` shape.  ``compute_partitions``
+    spreads the shingling: 4 for the few rows of a batch, None (every
+    core) for a corpus."""
+    from kafka_sparkstreaming_sbt_spark.operators.chunking import (
+        window_hash_table,
+    )
     from kafka_sparkstreaming_sbt_spark.operators.dedup_fuzzy import (
         banded_signature_table,
     )
 
-    spark = corpus_docs.sparkSession
-    base = f"{signature_dir}/base"
-    current = (
-        _marker(spark, signature_dir, "_FORMAT") == _SIGNATURE_FORMAT
+    rows = rows.select("doc_id", "text")
+    null = F.lit(None)
+    no_id = null.cast(rows.schema["doc_id"].dataType).alias("doc_id")
+    no_bs = null.cast("long").alias("bs")
+    no_wh = null.cast("string").alias("wh")
+    derive = {
+        "sig": lambda: banded_signature_table(
+            rows, shingle_n=lake.shingle_n, n_bands=lake.n_bands,
+            compute_partitions=compute_partitions,
+        ).select("doc_id", "bs", no_wh),
+        "exact": lambda: rows.select(no_id, no_bs, F.md5("text").alias("wh")),
+        # membership is all the span stage tests, so windows repeated
+        # across partitions are harmless
+        "span": lambda: window_hash_table(
+            rows, window_tokens=lake.span_window_tokens
+        ).select(no_id, no_bs, "wh"),
+    }
+    return functools.reduce(
+        DataFrame.unionByName,
+        (derive[s]().withColumn("kind", F.lit(lake.kinds[s])) for s in stages),
     )
-    if current and _success_marker_exists(spark, base):
-        return  # already materialized by an earlier deployment
-    fs, P = _hadoop_fs(spark, signature_dir)
-    rekey = not current and (
-        accepted_dir is not None
-        or not fs.exists(P(f"{signature_dir}/incr"))
-    )
-    if rekey:
-        fs.delete(P(signature_dir), True)
-        accepted_ids = (
-            _list_batch_ids(spark, accepted_dir) if accepted_dir else []
-        )
-        rows = corpus_docs.select("doc_id", "text").schema
-        for k in accepted_ids:
-            banded_signature_table(
-                read_parquet(spark, f"{accepted_dir}/batch_id={k}", rows),
-                shingle_n=shingle_n, n_bands=n_bands,
-                compute_partitions=4,
-            ).write.mode("overwrite").parquet(
-                f"{signature_dir}/incr/batch_id={k}"
-            )
-    banded_signature_table(
-        corpus_docs, shingle_n=shingle_n, n_bands=n_bands
-    ).write.mode("overwrite").parquet(base)
-    if rekey:
-        _touch(spark, f"{signature_dir}/_FORMAT={_SIGNATURE_FORMAT}")
-
-
-#: ``span_dir/{base,incr}``: distinct window hashes
-_WINDOW_HASH_SCHEMA = columns(("wh", _STRING))
-
-
-def materialize_corpus_window_hashes(
-    corpus_docs: DataFrame,
-    span_dir: str,
-    window_tokens: int = 16,
-) -> None:
-    """One-time base artifact for the streaming ExactSubstr span
-    stage: the static corpus's DISTINCT window-hash set
-    (:func:`~..operators.chunking.window_hash_table`) at
-    ``span_dir/base`` — after this, no micro-batch ever re-windows
-    the static corpus.  Same ``_SUCCESS``-gated skip discipline as
-    :func:`materialize_corpus_signatures`: a partial table would
-    silently admit duplicated spans of the missing windows."""
-    from kafka_sparkstreaming_sbt_spark.operators.chunking import (
-        window_hash_table,
-    )
-
-    spark = corpus_docs.sparkSession
-    base = f"{span_dir}/base"
-    if _success_marker_exists(spark, base):
-        return
-    window_hash_table(
-        corpus_docs, window_tokens=window_tokens
-    ).write.mode("overwrite").parquet(base)
 
 
 #: ``drift_dir/baseline``: ``profile_columns`` rows, one per column
@@ -562,58 +533,6 @@ def materialize_drift_baseline(
     ).parquet(base)
 
 
-# ------------------------------------------------ exact prefilter --
-#
-# Most duplicates a crawl delivers are EXACT copies; shingling them
-# through the near-dup screen pays the expensive path for rows a
-# content-hash lookup would have killed.  The exact prefilter drops
-# them first (reject-cheapest-first, same ordering argument as the
-# quality screen) with one anti-join against a materialized lake
-# artifact under ``exact_dir``, maintained with the SAME batch_id
-# layout and strict-inequality replay contract as everything else
-# here:
-#
-#   hashes/base             (h,) md5 of every static-corpus text
-#   hashes/incr/batch_id=N  md5 of batch N's accepted texts
-#
-# Per trigger the batch anti-joins on ``md5(text)`` against base plus
-# the incr partitions < N, so the screen is exact and never rescans
-# corpus text; survivors still flow through the near-dup screen,
-# which is what catches non-exact duplicates.
-
-
-#: ``exact_dir/hashes/{base,incr}``: md5 of each text
-_HASHES_SCHEMA = columns(("h", _STRING))
-
-
-def materialize_exact_screen(corpus_docs: DataFrame, exact_dir: str) -> None:
-    """One-time base artifact for the exact prefilter: the static
-    corpus's content-hash table, ``_SUCCESS``-gated like the signature
-    base (a readable-but-partial dir is rebuilt)."""
-    spark = corpus_docs.sparkSession
-    hashes_base = f"{exact_dir}/hashes/base"
-    if not _success_marker_exists(spark, hashes_base):
-        corpus_docs.select(
-            F.md5("text").alias("h")
-        ).write.mode("overwrite").parquet(hashes_base)
-
-
-def exact_screen_batch(
-    batch_df: DataFrame, batch_id: int, exact_dir: str
-) -> DataFrame:
-    """Drop batch rows whose text is an EXACT copy of anything in the
-    corpus-as-of-batch N (static + accepted < N): one ``left_anti``
-    join on ``md5(text)`` against the materialized hash table."""
-    spark = batch_df.sparkSession
-    hashes = _with_prior(
-        read_parquet(spark, f"{exact_dir}/hashes/base", _HASHES_SCHEMA),
-        f"{exact_dir}/hashes/incr", batch_id,
-    )
-    return batch_df.join(
-        hashes, F.md5(batch_df["text"]) == hashes["h"], "left_anti"
-    )
-
-
 def _screen_text_core(
     lake: _Lake, batch_df: DataFrame, cutoff: int
 ) -> DataFrame:
@@ -629,46 +548,32 @@ def _screen_text_core(
         minhash_near_dup_pairs,
     )
 
-    spark, stage_sec = lake.spark, lake.stage_sec
-    corpus_docs, span_dir = lake.corpus_docs, lake.span_dir
+    stage_sec = lake.stage_sec
     batch_df = batch_df.select("doc_id", "text")
     corpus = _with_prior(
-        corpus_docs.select("doc_id", "text"), lake.accepted_dir, cutoff
+        lake.corpus_docs.select("doc_id", "text"), lake.accepted_dir, cutoff
     )
-    corpus_sigs = None
-    if lake.signature_dir is not None:
-        corpus_sigs = _with_prior(
-            read_parquet(
-                spark, f"{lake.signature_dir}/base",
-                _signature_schema(corpus_docs.schema["doc_id"].dataType),
-            ),
-            f"{lake.signature_dir}/incr", cutoff,
-        )
-    if lake.exact_dir is not None:
-        # exact copies die here (cheap); survivors re-materialize so
-        # the three near-dup consumers don't replay the hash screen
-        # (the cutoff, not the partition id, bounds what it reads)
+    if lake.exact:
+        # most duplicates a crawl delivers are EXACT copies: one
+        # anti-join on md5(text) kills them before the shingle path
+        # (reject-cheapest-first); survivors re-materialize so the
+        # three near-dup consumers don't replay it
+        hashes = lake.keys("exact", cutoff, "wh")
         with _staged(stage_sec, "exact"):
-            batch_df = exact_screen_batch(
-                batch_df, cutoff, lake.exact_dir
+            batch_df = batch_df.join(
+                hashes, F.md5(batch_df["text"]) == hashes["wh"], "left_anti"
             ).localCheckpoint(eager=True)
-    if span_dir is not None:
-        # ExactSubstr stage: excise windows already in the corpus/
-        # accepted window-hash table (strict-cutoff read, like the
-        # signature incrs) or shared within the batch; docs emptied
-        # by excision are dropped.  Runs AFTER the exact screen
-        # (reject-cheapest-first) and BEFORE the near-dup screen, so
-        # accepted text — and every artifact derived from the
-        # accepted partition (signatures, hashes, window incrs) — is
-        # the CLEANED text.
+    if lake.span_window_tokens is not None:
+        # ExactSubstr stage: excise windows already in the corpus or
+        # the accepted lake, or shared within the batch; docs emptied
+        # by excision are dropped.  Runs AFTER the exact screen and
+        # BEFORE the near-dup screen, so accepted text, and every key
+        # derived from the accepted partition, is the CLEANED text.
         from kafka_sparkstreaming_sbt_spark.operators.chunking import (
             remove_duplicate_spans_incremental,
         )
 
-        hashes = _with_prior(
-            read_parquet(spark, f"{span_dir}/base", _WINDOW_HASH_SCHEMA),
-            f"{span_dir}/incr", cutoff,
-        )
+        hashes = lake.keys("span", cutoff, "wh")
         with _staged(stage_sec, "span"):
             # exact copies within the batch share every window, so the
             # stage would excise all of them: first keep the smallest
@@ -694,7 +599,7 @@ def _screen_text_core(
             shingle_n=lake.shingle_n,
             n_bands=lake.n_bands,
             threshold=lake.threshold,
-            corpus_signatures=corpus_sigs,
+            corpus_signatures=lake.keys("sig", cutoff, "doc_id", "bs"),
         )
         .select(F.col("new_doc_id").alias("doc_id"))
         .distinct()
@@ -720,97 +625,13 @@ def _screen_text_core(
     return accepted
 
 
-def _write_text_increments(
-    lake: _Lake, accepted_rows: DataFrame, batch_id: int
-) -> None:
-    """Signature/exact-screen maintenance for one ACCEPTED partition,
-    same idempotent per-partition layout as the rows.
-    ``accepted_rows`` is the MATERIALIZED, few-partition frame the
-    partition was written from, so maintenance never touches the
-    parquet and describes exactly the written rows.
-
-    When two or more of the signature, exact-hash and window-hash
-    builds are active, their plans are UNIONED and materialized in
-    one Spark job; the per-path writes then just filter the
-    materialized union (the 32-hex-char md5 and window hashes share
-    the ``wh`` slot).  A single active build keeps the direct one-job
-    derive-and-write shape."""
-    from kafka_sparkstreaming_sbt_spark.operators.chunking import (
-        window_hash_table,
-    )
-    from kafka_sparkstreaming_sbt_spark.operators.dedup_fuzzy import (
-        banded_signature_table,
-    )
-
-    signature_dir, span_dir = lake.signature_dir, lake.span_dir
-    exact_dir = lake.exact_dir
-    n_fused = sum(
-        d is not None for d in (signature_dir, span_dir, exact_dir)
-    )
-    if n_fused == 0:
-        return
-    rows = accepted_rows.select("doc_id", "text")
-    null = F.lit(None)
-    null_id = null.cast(rows.schema["doc_id"].dataType).alias("doc_id")
-    # (incr dir, derivation in the shared (doc_id, bs, wh) shape,
-    # written columns) per active build
-    builds = []
-    if signature_dir is not None:
-        # append-only signature maintenance: the accepted rows'
-        # banded keys
-        builds.append((
-            f"{signature_dir}/incr",
-            banded_signature_table(
-                rows, shingle_n=lake.shingle_n, n_bands=lake.n_bands,
-                compute_partitions=4,
-            ).select("doc_id", "bs", null.cast("string").alias("wh")),
-            ["doc_id", "bs"],
-        ))
-    if span_dir is not None:
-        # the accepted rows' (cleaned) window hashes — membership is
-        # all the incremental span screen tests, so overlap with the
-        # base table across appends is harmless (dedup on compaction,
-        # not on the write path)
-        builds.append((
-            f"{span_dir}/incr",
-            window_hash_table(rows, window_tokens=lake.span_window_tokens)
-            .select(null_id, null.cast("long").alias("bs"), "wh"),
-            ["wh"],
-        ))
-    if exact_dir is not None:
-        # the accepted texts' md5 rows for the exact-screen hash
-        # anti-join
-        builds.append((
-            f"{exact_dir}/hashes/incr",
-            rows.select(
-                null_id, null.cast("long").alias("bs"),
-                F.md5("text").alias("wh"),
-            ),
-            [F.col("wh").alias("h")],
-        ))
-    frames = [frame for _, frame, _ in builds]
-    if len(builds) > 1:
-        # ONE job computes every derivation; the writes below are
-        # cheap filters over the materialized union.  With a single
-        # build the fused machinery (union checkpoint + filter-write)
-        # would turn one Spark job into two.
-        fused = frames[0].withColumn("kind", F.lit(0))
-        for i, frame in enumerate(frames[1:], 1):
-            fused = fused.unionByName(frame.withColumn("kind", F.lit(i)))
-        fused = fused.localCheckpoint(eager=True)
-        frames = [fused.filter(F.col("kind") == i) for i in range(n_fused)]
-    for (incr, _, cols), frame in zip(builds, frames):
-        frame.select(*cols).write.mode("overwrite").parquet(
-            f"{incr}/batch_id={batch_id}"
-        )
-
-
 @dataclass
 class _Lake:
     """The one declaration of every ingest option, and the artifact
     lifecycle and one trigger body that the seven entry points share.
     The fields past ``accepted_dir`` are the options, grouped by
-    stage; a ``*_dir`` left None turns its stage off.  :meth:`open`
+    stage; a ``*_dir`` left None turns its stage off, as do
+    ``exact=False`` and ``span_window_tokens=None``.  :meth:`open`
     recovers and materializes every artifact at pipeline start;
     :meth:`start` runs :meth:`trigger` per micro-batch."""
 
@@ -828,18 +649,14 @@ class _Lake:
     shingle_n: int = 3
     #: LSH band count
     n_bands: int = 8
-    #: materialized banded keys: no trigger re-shingles the corpus
-    signature_dir: str | None = None
 
     # -- exact: one ``md5(text)`` anti-join before the near-dup screen
-    #: content-hash table (:func:`materialize_exact_screen`)
-    exact_dir: str | None = None
+    #: probe the ``exact`` keys
+    exact: bool = False
 
     # -- span: EXCISE windows seen before; accepted text is the cleaned
-    #: window-hash table (:func:`materialize_corpus_window_hashes`)
-    span_dir: str | None = None
-    #: window length in tokens
-    span_window_tokens: int = 16
+    #: window length in tokens of the ``span`` keys; None = off
+    span_window_tokens: int | None = None
 
     # -- drift HOLD: an alarming batch goes whole to ``held/batch_id=N``
     #: column-profile baseline and held batches (:meth:`hold`)
@@ -941,14 +758,81 @@ class _Lake:
 
     def batch_dirs(self) -> list[str]:
         """Every ``batch_id=N``-partitioned dir."""
-        dirs = [self.accepted_dir] + [
-            f"{d}/incr"
-            for d in (self.signature_dir, self.span_dir, self.cells_dir)
-            if d is not None
-        ]
-        if self.exact_dir is not None:
-            dirs.append(f"{self.exact_dir}/hashes/incr")
+        dirs = [self.accepted_dir]
+        if self.corpus_docs is not None:
+            dirs.append(f"{self.accepted_dir}/_keys/incr")
+        if self.cells_dir is not None:
+            dirs.append(f"{self.cells_dir}/incr")
         return dirs
+
+    @property
+    def kinds(self) -> dict[str, str]:
+        """The key kind each configured text stage probes, by stage.
+        A kind's name carries its derivation's parameters, so a lake
+        opened with other parameters finds its kinds missing and
+        rebuilds, instead of probing keys no batch can match."""
+        kinds = {"sig": f"sig_{self.shingle_n}_{self.n_bands}"}
+        if self.exact:
+            kinds["exact"] = "exact"
+        if self.span_window_tokens is not None:
+            kinds["span"] = f"span_{self.span_window_tokens}"
+        return kinds
+
+    def open_keys(self) -> None:
+        """Make the key table current for the configured stages: FS
+        listings only when it is.  The base of a kind no stage probes
+        is dropped, since its increments stop being written; a later
+        stage switch-on then finds it missing and rebuilds.  The
+        rebuild derives base from the corpus and one increment per
+        accepted partition, and touches ``_FORMAT`` LAST, so a crash
+        mid-rebuild just rebuilds again."""
+        if self.corpus_docs is None:
+            return
+        spark, keys = self.spark, f"{self.accepted_dir}/_keys"
+        fs, P = _hadoop_fs(spark, keys)
+        kinds = self.kinds
+        if _marker(spark, keys, "_FORMAT") == _KEYS_FORMAT and all(
+            _success_marker_exists(spark, f"{keys}/base/kind={k}")
+            for k in kinds.values()
+        ):
+            for st in fs.listStatus(P(f"{keys}/base")):
+                name = st.getPath().getName()
+                if name[len("kind="):] not in kinds.values():
+                    fs.delete(st.getPath(), True)
+            return
+        fs.delete(P(keys), True)
+        for stage, kind in kinds.items():
+            _derive_keys(self, self.corpus_docs, (stage,), None).drop(
+                "kind"
+            ).write.mode("overwrite").parquet(f"{keys}/base/kind={kind}")
+        rows = self.corpus_docs.select("doc_id", "text").schema
+        for b in _list_batch_ids(spark, self.accepted_dir):
+            self.write_keys(
+                read_parquet(spark, f"{self.accepted_dir}/batch_id={b}", rows),
+                b,
+            )
+        _touch(spark, f"{keys}/_FORMAT={_KEYS_FORMAT}")
+
+    def write_keys(self, rows: DataFrame, batch_id: int) -> None:
+        """The one writer of ``_keys/incr``: every probed kind's keys
+        of one accepted partition's rows, straight from their frame in
+        one static overwrite, so a replay that keeps no rows still
+        clears what its first attempt wrote."""
+        _derive_keys(self, rows, tuple(self.kinds)).write.mode(
+            "overwrite"
+        ).parquet(f"{self.accepted_dir}/_keys/incr/batch_id={batch_id}")
+
+    def keys(self, stage: str, cutoff: int, *cols: str) -> DataFrame:
+        """The ``cols`` of the keys ``stage`` probes, of the corpus as
+        of ``cutoff``: base plus the incr partitions strictly before
+        it."""
+        keys = f"{self.accepted_dir}/_keys"
+        schema = _keys_schema(self.corpus_docs.schema["doc_id"].dataType)
+        table = read_parquet(self.spark, f"{keys}/base", schema)
+        prior = _prior_partitions(self.spark, f"{keys}/incr", cutoff, schema)
+        if prior is not None:
+            table = table.unionByName(prior)
+        return table.filter(F.col("kind") == self.kinds[stage]).select(*cols)
 
     def recover(self) -> _Lake:
         """Finish any compaction or rebuild a crash interrupted: the
@@ -967,17 +851,7 @@ class _Lake:
         and pin the frames every trigger reads."""
         self.recover()
         spark, corpus_docs = self.spark, self.corpus_docs
-        if self.signature_dir is not None:
-            _materialize_signatures(
-                corpus_docs, self.signature_dir, self.shingle_n,
-                self.n_bands, self.accepted_dir,
-            )
-        if self.exact_dir is not None:
-            materialize_exact_screen(corpus_docs, self.exact_dir)
-        if self.span_dir is not None:
-            materialize_corpus_window_hashes(
-                corpus_docs, self.span_dir, self.span_window_tokens
-            )
+        self.open_keys()
         if self.cells_dir is not None:
             materialize_semantic_quantizer(
                 self.corpus_emb, self.cells_dir, self.centroids,
@@ -1204,7 +1078,7 @@ class _Lake:
             )
         with _staged(stage_sec, "increments"):
             if self.corpus_docs is not None:
-                _write_text_increments(self, kept, batch_id)
+                self.write_keys(kept, batch_id)
             if self.cells_dir is not None:
                 kept.select(id_col, "cell_id").write.mode(
                     "overwrite"
@@ -1297,10 +1171,7 @@ def _options(*names: str, **renamed: str):
 
 
 #: option groups that several entry points accept
-_TEXT = (
-    "threshold", "shingle_n", "n_bands", "signature_dir", "exact_dir",
-    "span_dir", "span_window_tokens",
-)
+_TEXT = ("threshold", "shingle_n", "n_bands", "exact", "span_window_tokens")
 _QUALITY = (
     "quality_model", "quality_threshold", "quality_n_buckets",
     "quality_seed",
@@ -1331,6 +1202,7 @@ def screen_micro_batch(
         batch_df.sparkSession, accepted_dir, corpus_docs=corpus_docs,
         **options,
     )
+    lake.open_keys()
     batch, n_in = lake.checkpoint(batch_df)
     return n_in, lake.screen(batch, batch_id, corpus_upto)
 
@@ -1475,6 +1347,7 @@ def release_held_batches(
     held_ids = _list_batch_ids(spark, held_root)
     if not held_ids:
         return results
+    lake.open_keys()
     lake.pin_baseline()
     for held_id in held_ids:
         # a held batch is whatever the stream delivered: inferred
@@ -1786,13 +1659,13 @@ def materialize_semantic_quantizer(
     seed: int = 42,
 ) -> None:
     """One-time quantizer generation for the semantic screen — the
-    embedding analog of :func:`materialize_corpus_signatures`: frozen
+    embedding analog of the text key table's base: frozen
     centroids (caller-supplied, else seeded k-means over the static
     corpus), the corpus's materialized cell assignments, and the
     quality baseline drift is measured against.  Skipped only when
     the ``_UPTO`` marker exists — written last, so a crash mid-build
     leaves no marker and the retry rebuilds (same non-atomic-dir
-    lesson as the signature base)."""
+    lesson as the key table's base)."""
     from kafka_sparkstreaming_sbt_spark.operators.similarity import (
         kmeans_centroids,
     )
@@ -1992,5 +1865,6 @@ def screen_multimodal_micro_batch(
         batch_df.sparkSession, accepted_dir, corpus_docs=corpus_docs,
         corpus_emb=corpus_emb, cells_dir=cells_dir, **options,
     )
+    lake.open_keys()
     batch, n_in = lake.checkpoint(batch_df)
     return n_in, lake.screen(batch, batch_id, corpus_upto)

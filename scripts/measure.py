@@ -181,16 +181,15 @@ def cmd_ingest(args, qs) -> None:
     root = tempfile.mkdtemp(prefix="measure_ingest_")
     dirs = [
         os.path.join(root, d)
-        for d in ("src", "acc", "ckpt", "sig", "exact", "span", "cells")
+        for d in ("src", "acc", "ckpt", "cells")
     ]
     for d in dirs:
         os.makedirs(d)
-    src, acc, ckpt, sig, exact, span, cells = dirs
+    src, acc, ckpt, cells = dirs
     cols = ["doc_id", "text", "embedding"][: 3 if multimodal else 2]
     seen, stage_sec = [], {}
     opts = dict(
-        signature_dir=sig, exact_dir=exact, span_dir=span,
-        span_window_tokens=8, compact_every=1,
+        exact=True, span_window_tokens=8, compact_every=1,
         on_batch=lambda bid, n, a: seen.append((bid, n, a)),
     )
     try:

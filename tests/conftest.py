@@ -90,11 +90,10 @@ def tied_vectors(spark) -> TiedVectors:
 # was a TIMEOUT, not a failure).  The tests below — end-to-end
 # streaming/replay/example/property scenarios, each >= 10 s measured —
 # are SKIPPED by default so `pytest tests/` completes in well under
-# 10 minutes; set SPARK_GRAFT_SLOW_TESTS=1 to run everything (the
-# builder session runs the full suite and records it each round).
+# 10 minutes; set SPARK_GRAFT_SLOW_TESTS=1 to run everything.
 # Every equality gate the slow tier exercises is independently covered
 # by the fast tier's unit/parity tests plus the 120-query DuckDB
-# driver sim.
+# check, `python scripts/measure.py oracle`.
 # ---------------------------------------------------------------------
 SLOW_TESTS = {
     "test_assemble_example.py::test_assemble_end_to_end_and_determinism",
@@ -111,7 +110,7 @@ SLOW_TESTS = {
     "test_incremental_ingest_example.py::test_screen_batch_verdicts_and_report",
     "test_ivf_stateful.py::test_auto_probe_tunes_to_cluster_structure",
     "test_multimodal_ingest.py::test_multimodal_drift_hold_keeps_embeddings",
-    "test_multimodal_ingest.py::test_multimodal_pipeline_with_span_dir_end_to_end",
+    "test_multimodal_ingest.py::test_multimodal_pipeline_with_span_stage_end_to_end",
     "test_multimodal_ingest.py::test_multimodal_release_preserves_full_row_schema",
     "test_multimodal_ingest.py::test_multimodal_replay_is_idempotent",
     "test_multimodal_ingest.py::test_multimodal_span_stage_cleans_accepted_text",

@@ -105,7 +105,7 @@ def test_declared_lake_artifact_schemas_equal_written(spark, tmp_path):
         return v
 
     d = {k: str(tmp_path / k) for k in (
-        "acc", "cells", "sig", "exact", "span", "drift", "quality",
+        "acc", "cells", "drift", "quality",
     )}
     docs = spark.createDataFrame(
         [(i, text(i)) for i in range(4)], "doc_id long, text string"
@@ -120,9 +120,6 @@ def test_declared_lake_artifact_schemas_equal_written(spark, tmp_path):
     )
     ingest.materialize_drift_baseline(docs, d["drift"])
     ingest.materialize_quality_model(docs, d["quality"], model, 64)
-    ingest.materialize_corpus_window_hashes(docs, d["span"], 4)
-    ingest.materialize_corpus_signatures(docs, d["sig"])
-    ingest.materialize_exact_screen(docs, d["exact"])
     ingest.materialize_semantic_quantizer(
         emb, d["cells"], n_cells=2, id_col="doc_id"
     )
@@ -132,18 +129,13 @@ def test_declared_lake_artifact_schemas_equal_written(spark, tmp_path):
     )
     ingest.screen_multimodal_micro_batch(
         batch, 0, docs, emb, d["acc"], d["cells"], method="numpy",
-        signature_dir=d["sig"], exact_dir=d["exact"], span_dir=d["span"],
-        span_window_tokens=4,
+        exact=True, span_window_tokens=4,
     )
-    sigs = ingest._signature_schema(docs.schema["doc_id"].dataType)
+    keys = ingest._keys_schema(docs.schema["doc_id"].dataType)
     cells = ingest._cells_schema("doc_id", emb.schema["doc_id"].dataType)
     declared = {
-        f"{d['sig']}/base": sigs,
-        f"{d['sig']}/incr/batch_id=0": sigs,
-        f"{d['exact']}/hashes/base": ingest._HASHES_SCHEMA,
-        f"{d['exact']}/hashes/incr/batch_id=0": ingest._HASHES_SCHEMA,
-        f"{d['span']}/base": ingest._WINDOW_HASH_SCHEMA,
-        f"{d['span']}/incr/batch_id=0": ingest._WINDOW_HASH_SCHEMA,
+        f"{d['acc']}/_keys/base": keys,
+        f"{d['acc']}/_keys/incr/batch_id=0": keys,
         f"{d['drift']}/baseline": ingest._PROFILE_SCHEMA,
         f"{d['quality']}/current/model": ingest._QUALITY_MODEL_SCHEMA,
         f"{d['quality']}/current/baseline": ingest._QUALITY_BASELINE_SCHEMA,

@@ -13,10 +13,7 @@ import pytest
 
 from kafka_sparkstreaming_sbt_spark.streaming import ingest
 
-_TEXT = {
-    "threshold", "shingle_n", "n_bands", "signature_dir", "exact_dir",
-    "span_dir", "span_window_tokens",
-}
+_TEXT = {"threshold", "shingle_n", "n_bands", "exact", "span_window_tokens"}
 _QUALITY = {
     "quality_model", "quality_threshold", "quality_n_buckets",
     "quality_seed",
@@ -115,6 +112,7 @@ def test_semantic_threshold_keyword_reaches_the_semantic_stage(monkeypatch):
         seen.update(vars(lake))
         return 0
 
+    monkeypatch.setattr(ingest._Lake, "open_keys", lambda lake: None)
     monkeypatch.setattr(ingest._Lake, "checkpoint", lambda lake, df: (df, 0))
     monkeypatch.setattr(ingest._Lake, "screen", screen)
     ingest.screen_semantic_micro_batch(

@@ -116,61 +116,44 @@ def test_multimodal_replay_is_idempotent(spark, dirs):
     """Replaying a batch (all its artifacts already written) must
     reproduce identical verdicts and leave the lake byte-identical —
     the strict-inequality exclusion covers the accepted rows, the
-    signature/exact increments, and the cell assignments at once."""
+    key increments, and the cell assignments at once."""
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        materialize_semantic_quantizer,
+    )
+
     _, acc, cells, _ = dirs
-    sig = tempfile.mkdtemp(prefix="sig_")
-    exact = tempfile.mkdtemp(prefix="exact_")
-    try:
-        docs, emb = _corpus(spark)
-        from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-            materialize_corpus_signatures,
-            materialize_exact_screen,
-            materialize_semantic_quantizer,
-        )
+    docs, emb = _corpus(spark)
+    materialize_semantic_quantizer(emb, cells, n_cells=2, id_col="doc_id")
+    batch = spark.createDataFrame(
+        [
+            (10, _text(0), _vec(40)),   # exact text dup of corpus
+            (11, _text(11), _vec(1)),   # semantic dup of corpus
+            (12, _text(12), _vec(45)),  # unique (axis 5)
+        ],
+        SCHEMA,
+    )
+    kw = dict(method="numpy", exact=True)
 
-        materialize_corpus_signatures(docs, sig)
-        materialize_exact_screen(docs, exact)
-        materialize_semantic_quantizer(
-            emb, cells, n_cells=2, id_col="doc_id"
-        )
-        batch = spark.createDataFrame(
-            [
-                (10, _text(0), _vec(40)),   # exact text dup of corpus
-                (11, _text(11), _vec(1)),   # semantic dup of corpus
-                (12, _text(12), _vec(45)),  # unique (axis 5)
-            ],
-            SCHEMA,
-        )
-        kw = dict(
-            method="numpy", signature_dir=sig, exact_dir=exact
-        )
-        def lake_state():
-            return {
-                (r.doc_id, r.text, tuple(r.embedding), r.batch_id)
-                for r in spark.read.parquet(acc).collect()
-            }
+    def lake_state():
+        return {
+            (r.doc_id, r.text, tuple(r.embedding), r.batch_id)
+            for r in spark.read.parquet(acc).collect()
+        }
 
-        r1 = screen_multimodal_micro_batch(
-            batch, 0, docs, emb, acc, cells, **kw
-        )
-        state1 = lake_state()
-        r2 = screen_multimodal_micro_batch(
-            batch, 0, docs, emb, acc, cells, **kw
-        )
-        state2 = lake_state()
-        assert r1 == r2 == (3, 1)
-        assert state1 == state2
-        assert {r.doc_id for r in spark.read.parquet(acc).collect()} == {12}
-        # increments also stable: one signature/hash/cell partition
-        assert {
-            r.doc_id
-            for r in spark.read.parquet(f"{cells}/incr").collect()
-        } == {12}
-        hashes = spark.read.parquet(f"{exact}/hashes/incr")
-        assert hashes.count() == 1  # md5 of doc 12's text only
-    finally:
-        shutil.rmtree(sig, ignore_errors=True)
-        shutil.rmtree(exact, ignore_errors=True)
+    r1 = screen_multimodal_micro_batch(batch, 0, docs, emb, acc, cells, **kw)
+    state1 = lake_state()
+    r2 = screen_multimodal_micro_batch(batch, 0, docs, emb, acc, cells, **kw)
+    state2 = lake_state()
+    assert r1 == r2 == (3, 1)
+    assert state1 == state2
+    assert {r.doc_id for r in spark.read.parquet(acc).collect()} == {12}
+    # increments also stable: one key/cell partition
+    assert {
+        r.doc_id
+        for r in spark.read.parquet(f"{cells}/incr").collect()
+    } == {12}
+    hashes = spark.read.parquet(f"{acc}/_keys/incr").filter("kind = 'exact'")
+    assert hashes.count() == 1  # md5 of doc 12's text only
 
 
 def test_multimodal_stage_timers_populate_and_change_nothing(spark, dirs):
@@ -178,51 +161,31 @@ def test_multimodal_stage_timers_populate_and_change_nothing(spark, dirs):
     (a) accumulate wall per screen stage at the existing eager points
     and (b) leave verdicts and the lake untouched — the timers wrap
     existing materializations, never add actions."""
-    _, acc, cells, _ = dirs
-    sig = tempfile.mkdtemp(prefix="sig_")
-    exact = tempfile.mkdtemp(prefix="exact_")
-    span = tempfile.mkdtemp(prefix="span_")
-    try:
-        docs, emb = _corpus(spark)
-        from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-            materialize_corpus_signatures,
-            materialize_corpus_window_hashes,
-            materialize_exact_screen,
-            materialize_semantic_quantizer,
-        )
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        materialize_semantic_quantizer,
+    )
 
-        materialize_corpus_signatures(docs, sig)
-        materialize_exact_screen(docs, exact)
-        materialize_corpus_window_hashes(docs, span, 8)
-        materialize_semantic_quantizer(
-            emb, cells, n_cells=2, id_col="doc_id"
-        )
-        batch = spark.createDataFrame(
-            [(10, _text(0), _vec(40)), (12, _text(12), _vec(45))],
-            SCHEMA,
-        )
-        kw = dict(
-            method="numpy", signature_dir=sig, exact_dir=exact,
-            span_dir=span, span_window_tokens=8,
-        )
-        stage_sec: dict = {}
-        r1 = screen_multimodal_micro_batch(
-            batch, 0, docs, emb, acc, cells, **kw, stage_sec=stage_sec
-        )
-        # every instrumented stage recorded positive wall
-        assert set(stage_sec) == {
-            "batch_ckpt", "exact", "span", "near_dup", "semantic",
-            "write_accept", "increments",
-        }
-        assert all(v > 0 for v in stage_sec.values())
-        # profiling is observation-only: same verdicts as unprofiled
-        r2 = screen_multimodal_micro_batch(
-            batch, 0, docs, emb, acc, cells, **kw
-        )
-        assert r1 == r2
-    finally:
-        for d in (sig, exact, span):
-            shutil.rmtree(d, ignore_errors=True)
+    _, acc, cells, _ = dirs
+    docs, emb = _corpus(spark)
+    materialize_semantic_quantizer(emb, cells, n_cells=2, id_col="doc_id")
+    batch = spark.createDataFrame(
+        [(10, _text(0), _vec(40)), (12, _text(12), _vec(45))],
+        SCHEMA,
+    )
+    kw = dict(method="numpy", exact=True, span_window_tokens=8)
+    stage_sec: dict = {}
+    r1 = screen_multimodal_micro_batch(
+        batch, 0, docs, emb, acc, cells, **kw, stage_sec=stage_sec
+    )
+    # every instrumented stage recorded positive wall
+    assert set(stage_sec) == {
+        "batch_ckpt", "exact", "span", "near_dup", "semantic",
+        "write_accept", "increments",
+    }
+    assert all(v > 0 for v in stage_sec.values())
+    # profiling is observation-only: same verdicts as unprofiled
+    r2 = screen_multimodal_micro_batch(batch, 0, docs, emb, acc, cells, **kw)
+    assert r1 == r2
 
 
 def test_multimodal_release_preserves_full_row_schema(spark, dirs):
@@ -372,108 +335,95 @@ def test_multimodal_drift_hold_keeps_embeddings(spark, dirs):
 
 
 def test_multimodal_span_stage_cleans_accepted_text(spark, dirs):
-    """With span_dir, the unified screen excises corpus-duplicated
-    windows from batch text, the accepted FULL rows carry the CLEANED
-    text with their embeddings intact, the span incr records the
-    cleaned windows, and a replay is byte-identical."""
+    """With the span stage on, the unified screen excises
+    corpus-duplicated windows from batch text, the accepted FULL rows
+    carry the CLEANED text with their embeddings intact, the span keys
+    record the cleaned windows, and a replay is byte-identical."""
     from kafka_sparkstreaming_sbt_spark.operators.chunking import (
         window_hash_table,
     )
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-        materialize_corpus_window_hashes,
         materialize_semantic_quantizer,
     )
 
     src, acc, cells, ckpt = dirs
-    span_dir = tempfile.mkdtemp(prefix="span_")
-    try:
-        docs = spark.createDataFrame(
-            [(0, "s1 s2 s3 s4 c1 c2 c3 c4")], "doc_id long, text string"
-        )
-        emb = spark.createDataFrame(
-            [(0, _vec(0))], "doc_id long, embedding array<double>"
-        )
-        materialize_semantic_quantizer(
-            emb, cells, n_cells=1, id_col="doc_id"
-        )
-        materialize_corpus_window_hashes(docs, span_dir, 4)
-        # 100: corpus span inside fresh text, unique vector (residue 4)
-        # 101: entirely corpus spans -> emptied -> dropped
-        # 102: clean text, SEMANTIC dup of corpus vector 0
-        batch = spark.createDataFrame(
-            [
-                (100, "x1 x2 s1 s2 s3 s4 y1 y2", _vec(4)),
-                (101, "s1 s2 s3 s4 c1 c2 c3 c4", _vec(5)),
-                (102, "m1 m2 m3 m4 m5 m6 m7 m8", _vec(0)),
-            ],
-            SCHEMA,
-        )
-        n, a = screen_multimodal_micro_batch(
-            batch, 0, docs, emb, acc, cells,
-            span_dir=span_dir, span_window_tokens=4,
-        )
-        assert (n, a) == (3, 1)
-        out = {r.doc_id: r for r in spark.read.parquet(acc).collect()}
-        assert set(out) == {100}
-        assert out[100].text == "x1 x2 y1 y2"  # cleaned, not raw
-        assert list(out[100].embedding) == _vec(4)
-        # span incr holds the CLEANED text's windows only
-        incr = {
-            r.wh
-            for r in spark.read.parquet(f"{span_dir}/incr").collect()
-        }
-        want = {
-            r.wh
-            for r in window_hash_table(
-                spark.createDataFrame(
-                    [(100, "x1 x2 y1 y2")], "doc_id long, text string"
-                ),
-                window_tokens=4,
-            ).collect()
-        }
-        assert incr == want
-        # replay: same batch id -> identical lake + incr
-        n2, a2 = screen_multimodal_micro_batch(
-            batch, 0, docs, emb, acc, cells,
-            span_dir=span_dir, span_window_tokens=4,
-        )
-        assert (n2, a2) == (3, 1)
-        out2 = {r.doc_id: r for r in spark.read.parquet(acc).collect()}
-        assert {(k, v.text) for k, v in out.items()} == {
-            (k, v.text) for k, v in out2.items()
-        }
-    finally:
-        shutil.rmtree(span_dir, ignore_errors=True)
+    docs = spark.createDataFrame(
+        [(0, "s1 s2 s3 s4 c1 c2 c3 c4")], "doc_id long, text string"
+    )
+    emb = spark.createDataFrame(
+        [(0, _vec(0))], "doc_id long, embedding array<double>"
+    )
+    materialize_semantic_quantizer(emb, cells, n_cells=1, id_col="doc_id")
+    # 100: corpus span inside fresh text, unique vector (residue 4)
+    # 101: entirely corpus spans -> emptied -> dropped
+    # 102: clean text, SEMANTIC dup of corpus vector 0
+    batch = spark.createDataFrame(
+        [
+            (100, "x1 x2 s1 s2 s3 s4 y1 y2", _vec(4)),
+            (101, "s1 s2 s3 s4 c1 c2 c3 c4", _vec(5)),
+            (102, "m1 m2 m3 m4 m5 m6 m7 m8", _vec(0)),
+        ],
+        SCHEMA,
+    )
+    n, a = screen_multimodal_micro_batch(
+        batch, 0, docs, emb, acc, cells, span_window_tokens=4,
+    )
+    assert (n, a) == (3, 1)
+    out = {r.doc_id: r for r in spark.read.parquet(acc).collect()}
+    assert set(out) == {100}
+    assert out[100].text == "x1 x2 y1 y2"  # cleaned, not raw
+    assert list(out[100].embedding) == _vec(4)
+    # span keys hold the CLEANED text's windows only
+    incr = {
+        r.wh
+        for r in spark.read.parquet(f"{acc}/_keys/incr")
+        .filter("kind = 'span_4'").collect()
+    }
+    want = {
+        r.wh
+        for r in window_hash_table(
+            spark.createDataFrame(
+                [(100, "x1 x2 y1 y2")], "doc_id long, text string"
+            ),
+            window_tokens=4,
+        ).collect()
+    }
+    assert incr == want
+    # replay: same batch id -> identical lake + incr
+    n2, a2 = screen_multimodal_micro_batch(
+        batch, 0, docs, emb, acc, cells, span_window_tokens=4,
+    )
+    assert (n2, a2) == (3, 1)
+    out2 = {r.doc_id: r for r in spark.read.parquet(acc).collect()}
+    assert {(k, v.text) for k, v in out.items()} == {
+        (k, v.text) for k, v in out2.items()
+    }
 
 
-def test_multimodal_pipeline_with_span_dir_end_to_end(spark, dirs):
-    """The streaming form: span_dir on run_multimodal_ingest_pipeline
-    — wave-2 text sharing a window with a wave-1 SURVIVOR's cleaned
-    text is excised via the incr table."""
+def test_multimodal_pipeline_with_span_stage_end_to_end(spark, dirs):
+    """The streaming form: span_window_tokens on
+    run_multimodal_ingest_pipeline — wave-2 text sharing a window with
+    a wave-1 SURVIVOR's cleaned text is excised via the key
+    increments."""
     src, acc, cells, ckpt = dirs
-    span_dir = tempfile.mkdtemp(prefix="span_")
+    docs, emb = _corpus(spark)
+    stream = spark.readStream.schema(SCHEMA).json(src)
+    q = run_multimodal_ingest_pipeline(
+        stream, docs, emb, acc, cells, ckpt, span_window_tokens=4,
+    )
     try:
-        docs, emb = _corpus(spark)
-        stream = spark.readStream.schema(SCHEMA).json(src)
-        q = run_multimodal_ingest_pipeline(
-            stream, docs, emb, acc, cells, ckpt,
-            span_dir=span_dir, span_window_tokens=4,
-        )
-        try:
-            # wave 1: unique text+vector (residue 5)
-            spark.createDataFrame(
-                [(100, "k1 k2 k3 k4 k5 k6", _vec(5))], SCHEMA
-            ).coalesce(1).write.mode("append").json(src)
-            q.processAllAvailable()
-            # wave 2: shares window (k2 k3 k4 k5) with accepted 100
-            spark.createDataFrame(
-                [(200, "z1 k2 k3 k4 k5 z2", _vec(6))], SCHEMA
-            ).coalesce(1).write.mode("append").json(src)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = {r.doc_id: r.text for r in spark.read.parquet(acc).collect()}
-        assert out[100] == "k1 k2 k3 k4 k5 k6"
-        assert out[200] == "z1 z2"
+        # wave 1: unique text+vector (residue 5)
+        spark.createDataFrame(
+            [(100, "k1 k2 k3 k4 k5 k6", _vec(5))], SCHEMA
+        ).coalesce(1).write.mode("append").json(src)
+        q.processAllAvailable()
+        # wave 2: shares window (k2 k3 k4 k5) with accepted 100
+        spark.createDataFrame(
+            [(200, "z1 k2 k3 k4 k5 z2", _vec(6))], SCHEMA
+        ).coalesce(1).write.mode("append").json(src)
+        q.processAllAvailable()
     finally:
-        shutil.rmtree(span_dir, ignore_errors=True)
+        q.stop()
+    out = {r.doc_id: r.text for r in spark.read.parquet(acc).collect()}
+    assert out[100] == "k1 k2 k3 k4 k5 k6"
+    assert out[200] == "z1 z2"

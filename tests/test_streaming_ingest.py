@@ -109,26 +109,33 @@ def test_replay_of_a_batch_is_idempotent_and_self_blind(spark, dirs):
     assert {r.doc_id for r in spark.read.parquet(acc).collect()} == {11}
 
 
-def test_screen_micro_batch_job_count(spark, dirs):
+@pytest.mark.parametrize(
+    "options, executions",
+    [({}, 8), ({"exact": True, "span_window_tokens": 4}, 12)],
+    ids=["near_dup", "every_text_stage"],
+)
+def test_screen_micro_batch_job_count(spark, dirs, options, executions):
     """Fixed-cost guard: a trigger on a few rows costs what its Spark
-    actions cost, so one direct screen of the replay test's input must
-    start exactly the SQL executions the one screen body runs (the
-    batch is checkpointed once and counted on that job, the accepted
-    rows are materialized and counted the same way, and nothing is
-    read back from the lake), and no job outside them.  Executions,
-    not jobs: AQE splits an execution into a varying number of jobs
+    actions cost, so one direct screen of the replay test's input, on
+    a lake whose key table is already built, must start exactly the
+    SQL executions the one screen body runs (the batch is
+    checkpointed once and counted on that job, each eager stage
+    materializes once, the accepted rows are materialized and counted
+    the same way, their keys go out in ONE write, and nothing is read
+    back from the lake), and no job outside them.  Executions, not
+    jobs: AQE splits an execution into a varying number of jobs
     (35-37 over 20 calls, 4 cores, Spark 4.1.2), while the execution
-    count read 7 on each of 6 calls.  The count is the step of the
-    newest execution id, which the status store's retention cap
-    cannot hide.  Jobs that belong to no execution (an RDD action, a
-    parquet schema inference at read time) are pinned separately:
-    the call's job group minus the jobs of its executions, which read
-    0 on 4 of 4 calls."""
+    count does not vary.  The count is the step of the newest
+    execution id, which the status store's retention cap cannot hide.
+    Jobs that belong to no execution (an RDD action, a parquet schema
+    inference at read time) are pinned separately: the call's job
+    group minus the jobs of its executions, which read 0."""
     import uuid
 
     from perfbench.tracing import JobGroups
 
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        _Lake,
         screen_micro_batch,
     )
 
@@ -153,12 +160,13 @@ def test_screen_micro_batch_job_count(spark, dirs):
     batch = spark.createDataFrame(
         [(10, T["c0"]), (11, T["u1"])], "doc_id long, text string"
     )
+    _Lake(spark, acc, corpus_docs=corpus, **options).open_keys()
     jobs, gid = JobGroups(spark), f"screen-{uuid.uuid4()}"
     before = newest_execution_id()
     with jobs.group(gid):
-        assert screen_micro_batch(batch, 0, corpus, acc) == (2, 1)
+        assert screen_micro_batch(batch, 0, corpus, acc, **options) == (2, 1)
     after = newest_execution_id()
-    assert after - before == 7
+    assert after - before == executions
     in_executions = set().union(
         *(execution_jobs(e) for e in range(before + 1, after + 1))
     )
@@ -170,153 +178,129 @@ def test_screen_micro_batch_job_count(spark, dirs):
 def test_materialize_rebuilds_partial_base_without_success_marker(
     spark, dirs
 ):
-    """A crash mid-overwrite leaves a READABLE but incomplete
+    """A crash mid-overwrite leaves a READABLE but incomplete key
     ``base`` dir; the skip must key on the committer's ``_SUCCESS``
     marker, not readability — otherwise corpus docs with missing
     signatures are never screened and their duplicates are admitted
     forever."""
     import os
 
-    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-        materialize_corpus_signatures,
-    )
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import _Lake
 
-    sig, _, _ = dirs
+    _, acc, _ = dirs
     corpus = spark.createDataFrame(
         [(0, T["c0"]), (1, T["u1"])], "doc_id long, text string"
     )
+    base = f"{acc}/_keys/base/kind=sig_3_8"
+
+    def open_keys(docs):
+        _Lake(spark, acc, corpus_docs=docs).open_keys()
+        return {
+            r.doc_id
+            for r in spark.read.parquet(base).select("doc_id").collect()
+        }
+
     # simulate the crash: a valid parquet dir holding only doc 0's
     # signatures, with no _SUCCESS marker
-    materialize_corpus_signatures(
-        corpus.filter("doc_id = 0"), sig
-    )
-    os.remove(f"{sig}/base/_SUCCESS")
-    materialize_corpus_signatures(corpus, sig)
-    base_ids = {
-        r.doc_id
-        for r in spark.read.parquet(f"{sig}/base")
-        .select("doc_id").distinct().collect()
-    }
-    assert base_ids == {0, 1}  # rebuilt, not skipped
+    open_keys(corpus.filter("doc_id = 0"))
+    os.remove(f"{base}/_SUCCESS")
+    assert open_keys(corpus) == {0, 1}  # rebuilt, not skipped
     # and with the marker present the skip holds (idempotent start)
-    materialize_corpus_signatures(
-        corpus.filter("doc_id = 0"), sig
-    )
-    still = {
-        r.doc_id
-        for r in spark.read.parquet(f"{sig}/base")
-        .select("doc_id").distinct().collect()
-    }
-    assert still == {0, 1}  # untouched: marker gated the skip
+    assert open_keys(corpus.filter("doc_id = 0")) == {0, 1}
 
 
 def test_pipeline_rebuilds_signatures_of_another_format(spark, dirs):
-    """Stored banded keys of another format (no ``_FORMAT`` marker,
-    as in every signature dir written before the keys were
-    versioned) never equal a live batch's keys, so the screen would
-    admit duplicates of every stored doc.  Pipeline start must drop
-    the dir and rebuild base from the corpus and incr from the
-    accepted lake, so copies of a corpus doc AND of an
-    already-accepted doc are both rejected."""
+    """Stored keys of another format (no ``_FORMAT`` marker) never
+    equal a live batch's keys, so the screen would admit duplicates
+    of every stored doc.  Pipeline start must drop the key table and
+    rebuild base from the corpus and incr from the accepted lake, so
+    copies of a corpus doc AND of an already-accepted doc are both
+    rejected."""
     import glob
     import os
 
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
         _list_batch_ids,
-        materialize_corpus_signatures,
         screen_micro_batch,
     )
 
     src, acc, ckpt = dirs
-    sig = tempfile.mkdtemp(prefix="sig_")
+    keys = f"{acc}/_keys"
     schema = "doc_id long, text string"
-    try:
-        corpus = spark.createDataFrame([(0, T["c0"])], schema)
-        materialize_corpus_signatures(corpus, sig)
-        # an earlier deployment accepted doc 1 (partition -1: strictly
-        # before the stream's first batch)
-        screen_micro_batch(
-            spark.createDataFrame([(1, T["u1"])], schema), -1, corpus,
-            acc, signature_dir=sig,
-        )
-        for part in ("base", "incr/batch_id=-1"):
-            rows = spark.read.parquet(f"{sig}/{part}").collect()
-            spark.createDataFrame(
-                [(r.doc_id, r.bs + 1) for r in rows], "doc_id long, bs long"
-            ).write.mode("overwrite").parquet(f"{sig}/{part}")
-        for marker in glob.glob(f"{sig}/_FORMAT=*"):
-            os.remove(marker)
+    corpus = spark.createDataFrame([(0, T["c0"])], schema)
+    # an earlier deployment accepted doc 1 (partition -1: strictly
+    # before the stream's first batch)
+    screen_micro_batch(
+        spark.createDataFrame([(1, T["u1"])], schema), -1, corpus, acc
+    )
+    for part in ("base/kind=sig_3_8", "incr/batch_id=-1"):
+        old = spark.read.parquet(f"{keys}/{part}")
+        spark.createDataFrame(
+            old.withColumn("bs", F.col("bs") + 1).collect(), old.schema
+        ).write.mode("overwrite").parquet(f"{keys}/{part}")
+    for marker in glob.glob(f"{keys}/_FORMAT=*"):
+        os.remove(marker)
 
-        stream = spark.readStream.schema(schema).json(src)
-        q = run_dedup_ingest_pipeline(
-            stream, corpus, acc, ckpt, signature_dir=sig
-        )
-        try:
-            spark.createDataFrame(
-                [(10, T["c0"]), (11, T["u1"]), (12, T["u2"])], schema
-            ).coalesce(1).write.mode("append").json(src)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        accepted = {r.doc_id for r in spark.read.parquet(acc).collect()}
-        assert accepted == {1, 12}
-        assert glob.glob(f"{sig}/_FORMAT=*")
-        assert _list_batch_ids(spark, f"{sig}/incr") == [-1, 0]
+    stream = spark.readStream.schema(schema).json(src)
+    q = run_dedup_ingest_pipeline(stream, corpus, acc, ckpt)
+    try:
+        spark.createDataFrame(
+            [(10, T["c0"]), (11, T["u1"]), (12, T["u2"])], schema
+        ).coalesce(1).write.mode("append").json(src)
+        q.processAllAvailable()
     finally:
-        shutil.rmtree(sig, ignore_errors=True)
+        q.stop()
+    accepted = {r.doc_id for r in spark.read.parquet(acc).collect()}
+    assert accepted == {1, 12}
+    assert glob.glob(f"{keys}/_FORMAT=*")
+    assert _list_batch_ids(spark, f"{keys}/incr") == [-1, 0]
 
 
 def test_streaming_ingest_with_materialized_signatures(spark, dirs):
-    """The signature_dir path must produce the SAME accept/reject
-    decisions as the self-contained screen while maintaining the
-    banded-key lake: base table written once at start, one incr
-    partition per batch holding exactly the accepted rows' keys."""
-    import tempfile
-
+    """The pipeline maintains the signature keys of the lake's key
+    table beside the verdicts: base written once at start from the
+    static corpus, one incr partition per batch holding exactly the
+    accepted rows' keys."""
     src, acc, ckpt = dirs
-    sig = tempfile.mkdtemp(prefix="sig_")
+    corpus = spark.createDataFrame(
+        [(0, T["c0"])], "doc_id long, text string"
+    )
+    stream = (
+        spark.readStream.schema("doc_id long, text string").json(src)
+    )
+    q = run_dedup_ingest_pipeline(stream, corpus, acc, ckpt)
     try:
-        corpus = spark.createDataFrame(
-            [(0, T["c0"])], "doc_id long, text string"
+        wave1 = spark.createDataFrame(
+            [(10, T["c0"]), (11, T["u1"]), (12, T["u2"]), (13, T["u2"])],
+            "doc_id long, text string",
         )
-        stream = (
-            spark.readStream.schema("doc_id long, text string").json(src)
+        wave1.coalesce(1).write.mode("append").json(src)
+        q.processAllAvailable()
+        wave2 = spark.createDataFrame(
+            [(20, T["u1"]), (21, T["u3"])],
+            "doc_id long, text string",
         )
-        q = run_dedup_ingest_pipeline(
-            stream, corpus, acc, ckpt, signature_dir=sig,
-        )
-        try:
-            wave1 = spark.createDataFrame(
-                [(10, T["c0"]), (11, T["u1"]), (12, T["u2"]), (13, T["u2"])],
-                "doc_id long, text string",
-            )
-            wave1.coalesce(1).write.mode("append").json(src)
-            q.processAllAvailable()
-            wave2 = spark.createDataFrame(
-                [(20, T["u1"]), (21, T["u3"])],
-                "doc_id long, text string",
-            )
-            wave2.coalesce(1).write.mode("append").json(src)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        out = spark.read.parquet(acc)
-        assert {r.doc_id for r in out.collect()} == {11, 12, 21}
-        # base signatures: the static corpus's docs only
-        base = spark.read.parquet(f"{sig}/base")
-        assert {r.doc_id for r in base.select("doc_id").distinct().collect()} == {0}
-        # incr partitions: exactly the accepted ids per batch
-        incr = spark.read.parquet(f"{sig}/incr")
-        by_batch = {
-            (r.batch_id, r.doc_id)
-            for r in incr.select("batch_id", "doc_id").distinct().collect()
-        }
-        assert by_batch == {(0, 11), (0, 12), (1, 21)}
+        wave2.coalesce(1).write.mode("append").json(src)
+        q.processAllAvailable()
     finally:
-        import shutil
+        q.stop()
 
-        shutil.rmtree(sig, ignore_errors=True)
+    out = spark.read.parquet(acc)
+    assert {r.doc_id for r in out.collect()} == {11, 12, 21}
+    # base signatures: the static corpus's docs only
+    base = spark.read.parquet(f"{acc}/_keys/base")
+    assert {
+        (r.kind, r.doc_id) for r in base.select("kind", "doc_id").collect()
+    } == {("sig_3_8", 0)}
+    # incr partitions: exactly the accepted ids per batch
+    incr = spark.read.parquet(f"{acc}/_keys/incr")
+    by_batch = {
+        (r.kind, r.batch_id, r.doc_id)
+        for r in incr.select("kind", "batch_id", "doc_id").collect()
+    }
+    assert by_batch == {
+        ("sig_3_8", 0, 11), ("sig_3_8", 0, 12), ("sig_3_8", 1, 21)
+    }
 
 
 # ----------------------------------------------------- lake compaction --
@@ -328,7 +312,7 @@ def _unique_text(i):
     return " ".join(f"tok{i}x{j}" for j in range(10))
 
 
-def _run_screened_waves(spark, acc, sig, n_waves, compact_every=None):
+def _run_screened_waves(spark, acc, n_waves, compact_every=None):
     """Drive the foreachBatch body directly for ``n_waves`` batches —
     wave i carries one unique doc (id 100+i), one copy of wave
     i-2's unique (id 300+i, must be rejected vs the ACCEPTED lake),
@@ -336,14 +320,12 @@ def _run_screened_waves(spark, acc, sig, n_waves, compact_every=None):
     per-wave (n, accepted) counts."""
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
         compact_batch_partitions,
-        materialize_corpus_signatures,
         screen_micro_batch,
     )
 
     corpus = spark.createDataFrame(
         [(0, T["c0"])], "doc_id long, text string"
     )
-    materialize_corpus_signatures(corpus, sig)
     counts = []
     for i in range(n_waves):
         rows = [(100 + i, _unique_text(i)), (500 + i, T["c0"])]
@@ -352,10 +334,8 @@ def _run_screened_waves(spark, acc, sig, n_waves, compact_every=None):
         batch = spark.createDataFrame(rows, "doc_id long, text string")
         if compact_every and i > 0 and i % compact_every == 0:
             compact_batch_partitions(spark, acc, i)
-            compact_batch_partitions(spark, f"{sig}/incr", i)
-        counts.append(
-            screen_micro_batch(batch, i, corpus, acc, signature_dir=sig)
-        )
+            compact_batch_partitions(spark, f"{acc}/_keys/incr", i)
+        counts.append(screen_micro_batch(batch, i, corpus, acc))
     return counts
 
 
@@ -367,66 +347,49 @@ def test_compaction_preserves_verdicts_bounds_partitions_and_replay(
     uncompacted run, (b) keep the lake's partition count bounded at
     ~compact_every+1 instead of one-per-trigger-forever, and (c) keep
     post-compaction batch replay idempotent."""
-    import tempfile
-
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
         _list_batch_ids,
         screen_micro_batch,
     )
 
     acc_a, acc_b, _ = dirs
-    sig_a = tempfile.mkdtemp(prefix="siga_")
-    sig_b = tempfile.mkdtemp(prefix="sigb_")
-    try:
-        n = 20
-        plain = _run_screened_waves(spark, acc_a, sig_a, n)
-        compacted = _run_screened_waves(
-            spark, acc_b, sig_b, n, compact_every=5
-        )
-        # (a) verdict parity, per wave and in the lake
-        assert plain == compacted
-        ids_a = {r.doc_id for r in spark.read.parquet(acc_a).collect()}
-        ids_b = {r.doc_id for r in spark.read.parquet(acc_b).collect()}
-        assert ids_a == ids_b == {100 + i for i in range(n)}
-        # (b) bounded partition count: folds at 5/10/15 leave
-        # {14, 15..19}; the plain run keeps all 20
-        assert len(_list_batch_ids(spark, acc_b)) <= 6
-        assert len(_list_batch_ids(spark, f"{sig_b}/incr")) <= 6
-        assert len(_list_batch_ids(spark, acc_a)) == n
-        # signature lake parity too (doc ids, ignoring batch labels)
-        sig_ids_a = {
+    n = 20
+    plain = _run_screened_waves(spark, acc_a, n)
+    compacted = _run_screened_waves(spark, acc_b, n, compact_every=5)
+    # (a) verdict parity, per wave and in the lake
+    assert plain == compacted
+    ids_a = {r.doc_id for r in spark.read.parquet(acc_a).collect()}
+    ids_b = {r.doc_id for r in spark.read.parquet(acc_b).collect()}
+    assert ids_a == ids_b == {100 + i for i in range(n)}
+    # (b) bounded partition count: folds at 5/10/15 leave
+    # {14, 15..19}; the plain run keeps all 20
+    assert len(_list_batch_ids(spark, acc_b)) <= 6
+    assert len(_list_batch_ids(spark, f"{acc_b}/_keys/incr")) <= 6
+    assert len(_list_batch_ids(spark, acc_a)) == n
+    # key table parity too (doc ids, ignoring batch labels)
+    sig_ids_a, sig_ids_b = (
+        {
             r.doc_id
-            for r in spark.read.parquet(f"{sig_a}/incr")
+            for r in spark.read.parquet(f"{acc}/_keys/incr")
             .select("doc_id").distinct().collect()
         }
-        sig_ids_b = {
-            r.doc_id
-            for r in spark.read.parquet(f"{sig_b}/incr")
-            .select("doc_id").distinct().collect()
-        }
-        assert sig_ids_a == sig_ids_b == ids_a
-        # (c) replay of the LAST batch (post-compaction) is idempotent
-        corpus = spark.createDataFrame(
-            [(0, T["c0"])], "doc_id long, text string"
-        )
-        last = spark.createDataFrame(
-            [
-                (100 + n - 1, _unique_text(n - 1)),
-                (500 + n - 1, T["c0"]),
-                (300 + n - 1, _unique_text(n - 3)),
-            ],
-            "doc_id long, text string",
-        )
-        replay = screen_micro_batch(
-            last, n - 1, corpus, acc_b, signature_dir=sig_b
-        )
-        assert replay == compacted[-1]
-        assert {
-            r.doc_id for r in spark.read.parquet(acc_b).collect()
-        } == ids_b
-    finally:
-        shutil.rmtree(sig_a, ignore_errors=True)
-        shutil.rmtree(sig_b, ignore_errors=True)
+        for acc in (acc_a, acc_b)
+    )
+    assert sig_ids_a == sig_ids_b == ids_a
+    # (c) replay of the LAST batch (post-compaction) is idempotent
+    corpus = spark.createDataFrame(
+        [(0, T["c0"])], "doc_id long, text string"
+    )
+    last = spark.createDataFrame(
+        [
+            (100 + n - 1, _unique_text(n - 1)),
+            (500 + n - 1, T["c0"]),
+            (300 + n - 1, _unique_text(n - 3)),
+        ],
+        "doc_id long, text string",
+    )
+    assert screen_micro_batch(last, n - 1, corpus, acc_b) == compacted[-1]
+    assert {r.doc_id for r in spark.read.parquet(acc_b).collect()} == ids_b
 
 
 def test_compaction_crash_recovery_both_phases(spark, dirs):
@@ -567,17 +530,16 @@ def test_quality_model_screens_before_dedup(spark, dirs):
     } == {11}
 
 
-def _run_exact_waves(spark, acc, exact, n_waves, fold_every=None):
+def _run_exact_waves(spark, acc, n_waves, fold_every=None):
     """Drive the screen with the exact prefilter enabled — wave i
     carries one unique doc (100+i), one EXACT copy of wave i-2's
     unique (300+i), one exact copy of the static corpus doc (500+i),
     and from wave 1 on a NEAR-dup of the corpus doc (700+i, one token
     changed — must be caught by the near-dup screen, proving the
     exact prefilter doesn't swallow the near path).  ``fold_every``
-    folds ``hashes/incr`` the way ``_Lake.maintain`` does."""
+    folds ``_keys/incr`` the way ``_Lake.maintain`` does."""
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
         compact_batch_partitions,
-        materialize_exact_screen,
         screen_micro_batch,
     )
 
@@ -585,7 +547,6 @@ def _run_exact_waves(spark, acc, exact, n_waves, fold_every=None):
         [(0, T["c0"])], "doc_id long, text string"
     )
     near_c0 = T["c0"].replace("alpha", "altered")
-    materialize_exact_screen(corpus, exact)
     counts = []
     for i in range(n_waves):
         rows = [(100 + i, _unique_text(i)), (500 + i, T["c0"])]
@@ -595,27 +556,24 @@ def _run_exact_waves(spark, acc, exact, n_waves, fold_every=None):
             rows.append((300 + i, _unique_text(i - 2)))
         batch = spark.createDataFrame(rows, "doc_id long, text string")
         if fold_every and i > 0 and i % fold_every == 0:
-            compact_batch_partitions(spark, f"{exact}/hashes/incr", i)
-        counts.append(
-            screen_micro_batch(batch, i, corpus, acc, exact_dir=exact)
-        )
+            compact_batch_partitions(spark, f"{acc}/_keys/incr", i)
+        counts.append(screen_micro_batch(batch, i, corpus, acc, exact=True))
     return counts
 
 
 def test_exact_screen_verdicts_and_replay(spark, tmp_path):
     """Fast guard for the exact prefilter: three tiny waves screened
-    with ``exact_dir`` get the ``(n, accepted)`` per wave and the
+    with ``exact=True`` get the ``(n, accepted)`` per wave and the
     accepted ids a screen without it gets (that parity is run in the
     slow ``test_exact_prefilter_preserves_verdicts``; here the
     no-exact figures are the literal oracle).  The waves hold a corpus
     copy, a copy of an earlier wave's survivor, an exact copy within
     one batch, a near-dup of the corpus and uniques.  Replaying the
-    last wave leaves the lake's rows as they were, and ``exact_dir``
-    holds only the hash table."""
+    last wave leaves the lake's rows and keys as they were, and the
+    key table's base holds the two kinds the stages probe."""
     import os
 
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-        materialize_exact_screen,
         screen_micro_batch,
     )
 
@@ -631,27 +589,30 @@ def test_exact_screen_verdicts_and_replay(spark, tmp_path):
         # copy of survivor 12; unique
         [(30, T["u2"]), (31, _unique_text(7))],
     ]
-    acc, exact = str(tmp_path / "acc"), str(tmp_path / "exact")
-    materialize_exact_screen(corpus, exact)
+    acc = str(tmp_path / "acc")
     batches = [
         spark.createDataFrame(w, "doc_id long, text string") for w in waves
     ]
     counts = [
-        screen_micro_batch(b, i, corpus, acc, exact_dir=exact)
+        screen_micro_batch(b, i, corpus, acc, exact=True)
         for i, b in enumerate(batches)
     ]
     assert counts == [(4, 2), (3, 1), (2, 1)]
 
     def rows(path):
-        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+        return sorted(
+            (tuple(r) for r in spark.read.parquet(path).collect()), key=repr
+        )
 
-    assert [r[0] for r in rows(acc)] == [11, 12, 22, 31]
-    lake = (rows(acc), rows(f"{exact}/hashes/incr"))
+    assert sorted(r[0] for r in rows(acc)) == [11, 12, 22, 31]
+    lake = (rows(acc), rows(f"{acc}/_keys/incr"))
     assert screen_micro_batch(
-        batches[2], 2, corpus, acc, exact_dir=exact
+        batches[2], 2, corpus, acc, exact=True
     ) == counts[2]
-    assert (rows(acc), rows(f"{exact}/hashes/incr")) == lake
-    assert os.listdir(exact) == ["hashes"]
+    assert (rows(acc), rows(f"{acc}/_keys/incr")) == lake
+    assert sorted(os.listdir(f"{acc}/_keys/base")) == [
+        "kind=exact", "kind=sig_3_8"
+    ]
 
 
 def test_exact_prefilter_preserves_verdicts(spark, dirs):
@@ -660,8 +621,7 @@ def test_exact_prefilter_preserves_verdicts(spark, dirs):
     (not exact) must still be caught downstream."""
     import tempfile
 
-    acc_a, exact_a = tempfile.mkdtemp(), tempfile.mkdtemp()
-    acc_b = tempfile.mkdtemp()
+    acc_a, acc_b = tempfile.mkdtemp(), tempfile.mkdtemp()
     import shutil
 
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
@@ -669,7 +629,7 @@ def test_exact_prefilter_preserves_verdicts(spark, dirs):
     )
 
     try:
-        counts = _run_exact_waves(spark, acc_a, exact_a, 5)
+        counts = _run_exact_waves(spark, acc_a, 5)
         # baseline: same waves, no exact prefilter
         corpus = spark.createDataFrame(
             [(0, T["c0"])], "doc_id long, text string"
@@ -697,14 +657,14 @@ def test_exact_prefilter_preserves_verdicts(spark, dirs):
         assert not any(300 <= d < 400 for d in a)
         assert not any(700 <= d < 800 for d in a)
     finally:
-        for d in (acc_a, exact_a, acc_b):
+        for d in (acc_a, acc_b):
             shutil.rmtree(d, ignore_errors=True)
 
 
 def test_exact_prefilter_replay_and_fold(spark, dirs):
-    """Replaying a batch with its exact-screen incr artifacts already
-    written must be idempotent (strict-inequality: its own hash
-    partition is excluded), and folding ``hashes/incr`` with
+    """Replaying a batch with its key increments already written must
+    be idempotent (strict-inequality: its own key partition is
+    excluded), and folding ``_keys/incr`` with
     compact_batch_partitions must keep the partition count bounded
     while preserving verdicts."""
     import shutil
@@ -715,11 +675,11 @@ def test_exact_prefilter_replay_and_fold(spark, dirs):
         screen_micro_batch,
     )
 
-    acc, exact = tempfile.mkdtemp(), tempfile.mkdtemp()
+    acc = tempfile.mkdtemp()
     try:
-        counts = _run_exact_waves(spark, acc, exact, 6, fold_every=3)
-        # hash incr partitions stay bounded: the fold at 3 covered 0..2
-        hash_ids = _list_batch_ids(spark, f"{exact}/hashes/incr")
+        counts = _run_exact_waves(spark, acc, 6, fold_every=3)
+        # key incr partitions stay bounded: the fold at 3 covered 0..2
+        hash_ids = _list_batch_ids(spark, f"{acc}/_keys/incr")
         assert len(hash_ids) <= 4  # fold(3) -> {2} + 3,4,5
         before = sorted(
             (r.doc_id, r.batch_id)
@@ -739,7 +699,7 @@ def test_exact_prefilter_replay_and_fold(spark, dirs):
             ],
             "doc_id long, text string",
         )
-        replay = screen_micro_batch(batch5, 5, corpus, acc, exact_dir=exact)
+        replay = screen_micro_batch(batch5, 5, corpus, acc, exact=True)
         assert replay == counts[5] == (4, 1)
         after = sorted(
             (r.doc_id, r.batch_id)
@@ -747,8 +707,7 @@ def test_exact_prefilter_replay_and_fold(spark, dirs):
         )
         assert before == after
     finally:
-        for d in (acc, exact):
-            shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(acc, ignore_errors=True)
 
 
 # ------------------------------------------------ held-batch release --
@@ -976,63 +935,58 @@ def test_span_stage_excises_corpus_and_prior_batch_spans(spark, dirs):
     """Streaming ExactSubstr: a batch doc's windows matching the
     CORPUS window-hash table are excised (not the whole doc
     rejected); a later batch's windows matching an EARLIER accepted
-    batch's (cleaned) text are excised via the incr table; a doc
+    batch's (cleaned) text are excised via the key increments; a doc
     whose text is entirely corpus spans empties out and is dropped."""
     src, acc, ckpt = dirs
-    span_dir = tempfile.mkdtemp(prefix="span_")
+    corpus = spark.createDataFrame(
+        [(0, SPAN_T["c0"])], "doc_id long, text string"
+    )
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .json(src)
+    )
+    q = run_dedup_ingest_pipeline(
+        stream, corpus, acc, ckpt, span_window_tokens=4,
+    )
     try:
-        corpus = spark.createDataFrame(
-            [(0, SPAN_T["c0"])], "doc_id long, text string"
+        # 10: one corpus 4-window inside fresh text -> excised;
+        # 11: clean; 12: exactly the corpus text -> empties out
+        wave1 = spark.createDataFrame(
+            [
+                (10, SPAN_T["mix"]),
+                (11, SPAN_T["u1"]),
+                (12, SPAN_T["c0"]),
+            ],
+            "doc_id long, text string",
         )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .json(src)
+        wave1.coalesce(1).write.mode("append").json(src)
+        q.processAllAvailable()
+        # 20: shares a 4-window with ACCEPTED doc 11 -> excised
+        # via the key increments; 21 clean
+        wave2 = spark.createDataFrame(
+            [(20, SPAN_T["mix2"]), (21, SPAN_T["u3"])],
+            "doc_id long, text string",
         )
-        q = run_dedup_ingest_pipeline(
-            stream, corpus, acc, ckpt,
-            span_dir=span_dir, span_window_tokens=4,
-        )
-        try:
-            # 10: one corpus 4-window inside fresh text -> excised;
-            # 11: clean; 12: exactly the corpus text -> empties out
-            wave1 = spark.createDataFrame(
-                [
-                    (10, SPAN_T["mix"]),
-                    (11, SPAN_T["u1"]),
-                    (12, SPAN_T["c0"]),
-                ],
-                "doc_id long, text string",
-            )
-            wave1.coalesce(1).write.mode("append").json(src)
-            q.processAllAvailable()
-            # 20: shares a 4-window with ACCEPTED doc 11 -> excised
-            # via the incr table; 21 clean
-            wave2 = spark.createDataFrame(
-                [(20, SPAN_T["mix2"]), (21, SPAN_T["u3"])],
-                "doc_id long, text string",
-            )
-            wave2.coalesce(1).write.mode("append").json(src)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = {
-            r.doc_id: r.text for r in spark.read.parquet(acc).collect()
-        }
-        assert out == {
-            10: "x1 x2 y1 y2",
-            11: SPAN_T["u1"],
-            20: "z1 z2",
-            21: SPAN_T["u3"],
-        }
-        # incr table: one partition per batch, wh-only schema
-        incr = spark.read.parquet(f"{span_dir}/incr")
-        assert set(incr.columns) == {"wh", "batch_id"}
-        assert {
-            r.batch_id
-            for r in incr.select("batch_id").distinct().collect()
-        } == {0, 1}
+        wave2.coalesce(1).write.mode("append").json(src)
+        q.processAllAvailable()
     finally:
-        shutil.rmtree(span_dir, ignore_errors=True)
+        q.stop()
+    out = {
+        r.doc_id: r.text for r in spark.read.parquet(acc).collect()
+    }
+    assert out == {
+        10: "x1 x2 y1 y2",
+        11: SPAN_T["u1"],
+        20: "z1 z2",
+        21: SPAN_T["u3"],
+    }
+    # span keys: one incr partition per batch, window hashes only
+    incr = spark.read.parquet(f"{acc}/_keys/incr").filter("kind = 'span_4'")
+    assert incr.filter("doc_id IS NOT NULL OR bs IS NOT NULL").count() == 0
+    assert {
+        r.batch_id
+        for r in incr.select("batch_id").distinct().collect()
+    } == {0, 1}
 
 
 def test_span_stage_keeps_first_of_exact_copies_in_one_batch(
@@ -1040,41 +994,33 @@ def test_span_stage_keeps_first_of_exact_copies_in_one_batch(
 ):
     """Two exact copies in one batch share every window, so the span
     stage alone would excise both to empty; the screen keeps the
-    smallest id of the copies, as it does without ``span_dir``."""
+    smallest id of the copies, as it does without the span stage."""
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-        materialize_corpus_window_hashes,
         screen_micro_batch,
     )
 
-    _, acc, _ = dirs
-    span_dir = tempfile.mkdtemp(prefix="span_")
-    acc_plain = tempfile.mkdtemp(prefix="acc_")
-    try:
-        corpus = spark.createDataFrame(
-            [(0, T["c0"])], "doc_id long, text string"
-        )
-        materialize_corpus_window_hashes(corpus, span_dir, 8)
-        batch = spark.createDataFrame(
-            [(11, T["u1"]), (12, T["u2"]), (13, T["u2"])],
-            "doc_id long, text string",
-        )
-        assert screen_micro_batch(batch, 0, corpus, acc_plain) == (3, 2)
-        assert screen_micro_batch(
-            batch, 0, corpus, acc, span_dir=span_dir, span_window_tokens=8
-        ) == (3, 2)
-        for lake in (acc_plain, acc):
-            got = spark.read.parquet(lake).collect()
-            assert sorted((r.doc_id, r.text) for r in got) == [
-                (11, T["u1"]), (12, T["u2"])
-            ]
-    finally:
-        shutil.rmtree(span_dir, ignore_errors=True)
-        shutil.rmtree(acc_plain, ignore_errors=True)
+    _, acc, acc_plain = dirs
+    corpus = spark.createDataFrame(
+        [(0, T["c0"])], "doc_id long, text string"
+    )
+    batch = spark.createDataFrame(
+        [(11, T["u1"]), (12, T["u2"]), (13, T["u2"])],
+        "doc_id long, text string",
+    )
+    assert screen_micro_batch(batch, 0, corpus, acc_plain) == (3, 2)
+    assert screen_micro_batch(
+        batch, 0, corpus, acc, span_window_tokens=8
+    ) == (3, 2)
+    for lake in (acc_plain, acc):
+        got = spark.read.parquet(lake).collect()
+        assert sorted((r.doc_id, r.text) for r in got) == [
+            (11, T["u1"]), (12, T["u2"])
+        ]
 
 
 def test_span_stage_replay_idempotent_and_matches_one_shot(spark, dirs):
     """Replaying a batch through the span-staged screen leaves the
-    lake AND the span incr byte-identical; the accepted text equals
+    lake AND the span keys byte-identical; the accepted text equals
     the one-shot remove_duplicate_spans_incremental run on the same
     inputs (the equivalence the streaming stage claims)."""
     from kafka_sparkstreaming_sbt_spark.operators.chunking import (
@@ -1082,121 +1028,245 @@ def test_span_stage_replay_idempotent_and_matches_one_shot(spark, dirs):
         window_hash_table,
     )
     from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-        materialize_corpus_window_hashes,
         screen_micro_batch,
     )
 
     _, acc, _ = dirs
-    span_dir = tempfile.mkdtemp(prefix="span_")
-    try:
-        corpus = spark.createDataFrame(
-            [(0, SPAN_T["c0"])], "doc_id long, text string"
-        )
-        materialize_corpus_window_hashes(corpus, span_dir, 4)
-        batch = spark.createDataFrame(
-            [(10, SPAN_T["mix"]), (11, SPAN_T["u1"])],
-            "doc_id long, text string",
-        )
-        n1, a1 = screen_micro_batch(
-            batch, 0, corpus, acc, span_dir=span_dir,
-            span_window_tokens=4,
-        )
-        lake1 = {tuple(r) for r in spark.read.parquet(acc).collect()}
-        incr1 = {
+    corpus = spark.createDataFrame(
+        [(0, SPAN_T["c0"])], "doc_id long, text string"
+    )
+    batch = spark.createDataFrame(
+        [(10, SPAN_T["mix"]), (11, SPAN_T["u1"])],
+        "doc_id long, text string",
+    )
+
+    def span_keys():
+        return {
             r.wh
-            for r in spark.read.parquet(f"{span_dir}/incr").collect()
+            for r in spark.read.parquet(f"{acc}/_keys/incr")
+            .filter("kind = 'span_4'").collect()
         }
-        # replay: same batch id, partitions already on disk
-        n2, a2 = screen_micro_batch(
-            batch, 0, corpus, acc, span_dir=span_dir,
-            span_window_tokens=4,
-        )
-        lake2 = {tuple(r) for r in spark.read.parquet(acc).collect()}
-        incr2 = {
-            r.wh
-            for r in spark.read.parquet(f"{span_dir}/incr").collect()
-        }
-        assert (n1, a1) == (n2, a2) == (2, 2)
-        assert lake1 == lake2 and incr1 == incr2
-        # one-shot equivalence on the same inputs
-        want = {
-            r.doc_id: r.clean_text
-            for r in remove_duplicate_spans_incremental(
-                batch,
-                corpus_hashes=window_hash_table(
-                    corpus, window_tokens=4
-                ),
-                window_tokens=4,
-            ).collect()
-        }
-        got = {
-            r.doc_id: r.text for r in spark.read.parquet(acc).collect()
-        }
-        assert got == {i: t for i, t in want.items() if t}
-        # the incr carries the CLEANED text's windows: doc 10's
-        # excised corpus span contributes nothing
-        clean_whs = {
-            r.wh
-            for r in window_hash_table(
-                spark.createDataFrame(
-                    [(10, "x1 x2 y1 y2"), (11, SPAN_T["u1"])],
-                    "doc_id long, text string",
-                ),
-                window_tokens=4,
-            ).collect()
-        }
-        assert incr1 == clean_whs
-    finally:
-        shutil.rmtree(span_dir, ignore_errors=True)
+
+    n1, a1 = screen_micro_batch(batch, 0, corpus, acc, span_window_tokens=4)
+    lake1 = {tuple(r) for r in spark.read.parquet(acc).collect()}
+    incr1 = span_keys()
+    # replay: same batch id, partitions already on disk
+    n2, a2 = screen_micro_batch(batch, 0, corpus, acc, span_window_tokens=4)
+    lake2 = {tuple(r) for r in spark.read.parquet(acc).collect()}
+    assert (n1, a1) == (n2, a2) == (2, 2)
+    assert lake1 == lake2 and incr1 == span_keys()
+    # one-shot equivalence on the same inputs
+    want = {
+        r.doc_id: r.clean_text
+        for r in remove_duplicate_spans_incremental(
+            batch,
+            corpus_hashes=window_hash_table(corpus, window_tokens=4),
+            window_tokens=4,
+        ).collect()
+    }
+    got = {
+        r.doc_id: r.text for r in spark.read.parquet(acc).collect()
+    }
+    assert got == {i: t for i, t in want.items() if t}
+    # the incr carries the CLEANED text's windows: doc 10's
+    # excised corpus span contributes nothing
+    clean_whs = {
+        r.wh
+        for r in window_hash_table(
+            spark.createDataFrame(
+                [(10, "x1 x2 y1 y2"), (11, SPAN_T["u1"])],
+                "doc_id long, text string",
+            ),
+            window_tokens=4,
+        ).collect()
+    }
+    assert incr1 == clean_whs
 
 
 def test_span_stage_compaction_folds_incr_and_preserves_verdicts(
     spark, dirs
 ):
-    """With compact_every the span incr table folds like the
-    signature incrs: partition count stays bounded and a post-fold
-    wave still excises spans learned from pre-fold batches."""
+    """With compact_every the key increments fold like the accepted
+    rows: partition count stays bounded and a post-fold wave still
+    excises spans learned from pre-fold batches."""
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        _list_batch_ids,
+    )
+
     src, acc, ckpt = dirs
-    span_dir = tempfile.mkdtemp(prefix="span_")
+    corpus = spark.createDataFrame(
+        [(0, SPAN_T["c0"])], "doc_id long, text string"
+    )
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .json(src)
+    )
+    q = run_dedup_ingest_pipeline(
+        stream, corpus, acc, ckpt, span_window_tokens=4, compact_every=2,
+    )
     try:
-        corpus = spark.createDataFrame(
-            [(0, SPAN_T["c0"])], "doc_id long, text string"
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .json(src)
-        )
-        q = run_dedup_ingest_pipeline(
-            stream, corpus, acc, ckpt,
-            span_dir=span_dir, span_window_tokens=4,
-            compact_every=2,
-        )
-        try:
-            for i, (did, text) in enumerate(
-                [(10, SPAN_T["u1"]), (11, SPAN_T["u3"])]
-            ):
-                spark.createDataFrame(
-                    [(did, text)], "doc_id long, text string"
-                ).coalesce(1).write.mode("append").json(src)
-                q.processAllAvailable()
-            # wave 3 (batch 2, triggers the fold of batches 0-1):
-            # shares a window with batch-0 doc 10
+        for i, (did, text) in enumerate(
+            [(10, SPAN_T["u1"]), (11, SPAN_T["u3"])]
+        ):
             spark.createDataFrame(
-                [(20, SPAN_T["mix2"])], "doc_id long, text string"
+                [(did, text)], "doc_id long, text string"
             ).coalesce(1).write.mode("append").json(src)
             q.processAllAvailable()
-        finally:
-            q.stop()
-        out = {
-            r.doc_id: r.text for r in spark.read.parquet(acc).collect()
-        }
-        assert out[20] == "z1 z2"
-        from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
-            _list_batch_ids,
-        )
-
-        ids = _list_batch_ids(spark, f"{span_dir}/incr")
-        # batches 0-1 folded into one partition; batch 2 separate
-        assert len(ids) <= 3
+        # wave 3 (batch 2, triggers the fold of batches 0-1):
+        # shares a window with batch-0 doc 10
+        spark.createDataFrame(
+            [(20, SPAN_T["mix2"])], "doc_id long, text string"
+        ).coalesce(1).write.mode("append").json(src)
+        q.processAllAvailable()
     finally:
-        shutil.rmtree(span_dir, ignore_errors=True)
+        q.stop()
+    out = {
+        r.doc_id: r.text for r in spark.read.parquet(acc).collect()
+    }
+    assert out[20] == "z1 z2"
+    ids = _list_batch_ids(spark, f"{acc}/_keys/incr")
+    # batches 0-1 folded into one partition; batch 2 separate
+    assert len(ids) <= 3
+
+
+# ---- the key table: one rebuild from corpus + accepted partitions ----
+
+
+def _keys_rows(spark, acc):
+    """Every row of ``acc``'s key table, as a comparable set."""
+    return {
+        (part, *r)
+        for part in ("base", "incr")
+        for r in spark.read.parquet(f"{acc}/_keys/{part}")
+        .select("kind", "doc_id", "bs", "wh").collect()
+    }
+
+
+def test_span_switched_on_late_sees_accepted_windows(spark, dirs):
+    """A stage switched on for a lake that already holds accepted
+    batches must screen against their keys too: batch 0 is accepted
+    with the span stage off, and batch 1, screened with it on, still
+    has the window it shares with batch 0 excised, as when the stage
+    is on from the start.  The key table lacks the ``span_4`` kind, so
+    the screen rebuilds it from the corpus and accepted partitions.
+    The same holds when batch 0 was keyed with another window length:
+    its stored 8-token windows could never match a 4-token one."""
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        screen_micro_batch,
+    )
+
+    early, late, resized = dirs
+    schema = "doc_id long, text string"
+    corpus = spark.createDataFrame([(0, T["c0"])], schema)
+    b0 = spark.createDataFrame([(11, SPAN_T["u1"])], schema)
+    b1 = spark.createDataFrame([(20, SPAN_T["mix2"])], schema)
+    for acc, first in (
+        (early, {"span_window_tokens": 4}),
+        (late, {}),
+        (resized, {"span_window_tokens": 8}),
+    ):
+        screen_micro_batch(b0, 0, corpus, acc, **first)
+        screen_micro_batch(b1, 1, corpus, acc, span_window_tokens=4)
+        got = {r.doc_id: r.text for r in spark.read.parquet(acc).collect()}
+        assert got == {11: "k1 k2 k3 k4 k5 k6", 20: "z1 z2"}, first
+        assert _keys_rows(spark, acc) == _keys_rows(spark, early)
+
+
+def test_lake_without_key_table_opens_to_the_same_verdicts(spark, dirs):
+    """A lake whose accepted partitions have no ``_keys`` beside them
+    (as every lake written before the key table, which kept its keys
+    in separate dirs) rebuilds the table on open and screens to the
+    verdicts of a lake keyed from the start: the later batch holds an
+    exact copy of an accepted doc and two docs that share windows with
+    accepted ones, and the rebuilt table holds the keys of every kind
+    that the keyed one does.  Replaying that batch leaves the table as
+    it was."""
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        screen_micro_batch,
+    )
+
+    _, keyed, bare = dirs
+    schema = "doc_id long, text string"
+    opts = {"exact": True, "span_window_tokens": 4}
+    corpus = spark.createDataFrame([(0, T["c0"])], schema)
+    batches = [
+        spark.createDataFrame(rows, schema)
+        for rows in (
+            [(10, T["u1"]), (11, SPAN_T["u1"])],
+            [(20, T["u2"])],
+            # exact copy of 10; windows shared with 20 and with 11
+            [(30, T["u1"]), (31, T["u2"].replace("uniform", "unison")),
+             (32, SPAN_T["mix2"]), (33, T["u3"])],
+        )
+    ]
+    for i, b in enumerate(batches[:2]):
+        screen_micro_batch(b, i, corpus, keyed, **opts)
+    shutil.rmtree(bare)
+    shutil.copytree(keyed, bare, ignore=shutil.ignore_patterns("_keys"))
+    verdicts = [
+        screen_micro_batch(batches[2], 2, corpus, acc, **opts)
+        for acc in (keyed, bare)
+    ]
+    assert verdicts == [(4, 3), (4, 3)]
+
+    def lake(acc):
+        return {tuple(r) for r in spark.read.parquet(acc).collect()}
+
+    assert lake(keyed) == lake(bare)
+    assert {(r[0], r[1]) for r in lake(bare) if r[2] == 2} == {
+        (31, "unison"), (32, "z1 z2"), (33, T["u3"])
+    }
+    keys = _keys_rows(spark, keyed)
+    assert _keys_rows(spark, bare) == keys
+    assert screen_micro_batch(batches[2], 2, corpus, keyed, **opts) == (4, 3)
+    assert _keys_rows(spark, keyed) == keys
+
+
+def test_replay_that_keeps_no_rows_clears_its_keys(spark, dirs):
+    """The key write is a static overwrite of the batch's partition:
+    a replay of batch N that accepts nothing (here, a release redo
+    whose rows are now all duplicates) leaves no key of its first
+    attempt behind."""
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        screen_micro_batch,
+    )
+
+    _, acc, _ = dirs
+    schema = "doc_id long, text string"
+    corpus = spark.createDataFrame([(0, T["c0"])], schema)
+    first = spark.createDataFrame([(10, T["u1"])], schema)
+    assert screen_micro_batch(first, 0, corpus, acc, exact=True) == (1, 1)
+    incr = f"{acc}/_keys/incr/batch_id=0"
+    assert spark.read.parquet(incr).count() > 0
+    again = spark.createDataFrame([(11, T["c0"])], schema)
+    assert screen_micro_batch(again, 0, corpus, acc, exact=True) == (1, 0)
+    assert spark.read.parquet(incr).count() == 0
+
+
+def test_each_probe_reads_only_its_kind(spark, dirs):
+    """Each stage probes only its own kind of the key table: a
+    partition filter on ``base``, whose dirs are the kinds, and a
+    filter pushed to the ``incr`` scan."""
+    import re
+
+    from kafka_sparkstreaming_sbt_spark.plans import physical_plan
+    from kafka_sparkstreaming_sbt_spark.streaming.ingest import (
+        _Lake,
+        screen_micro_batch,
+    )
+
+    _, acc, _ = dirs
+    schema = "doc_id long, text string"
+    opts = {"exact": True, "span_window_tokens": 4}
+    corpus = spark.createDataFrame([(0, T["c0"])], schema)
+    batch = spark.createDataFrame([(10, T["u1"])], schema)
+    screen_micro_batch(batch, 0, corpus, acc, **opts)
+    lake = _Lake(spark, acc, corpus_docs=corpus, **opts)
+    for stage, kind in lake.kinds.items():
+        plan = physical_plan(lake.keys(stage, 1, "wh"))
+        assert re.search(
+            rf"PartitionFilters: \[[^\]]*\(kind#\d+ = {kind}\)", plan
+        ), plan
+        assert re.search(
+            rf"PushedFilters: \[[^\]]*EqualTo\(kind,{kind}\)", plan
+        ), plan
