@@ -632,15 +632,10 @@ def q_quantized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force top-10 in the int8 domain for the first 20 vectors
     — ranking by exact integer dot product (recall vs the float tier
-    gated in tests/test_quantize.py; SQL and BLAS tiers bit-equal)."""
+    gated in tests/test_quantize.py)."""
     _utc(spark)
     emb = read_table(spark, sf_dir, "embeddings")
-    # numpy tier: bit-identical to SQL (integer ranking arithmetic),
-    # so the BLAS path can face the oracle directly — unlike the
-    # float ANN gates, which must stay on their SQL tiers
-    out = quantized_topk(
-        emb, emb.filter(F.col("vec_id") < 20), k=10, method="numpy"
-    )
+    out = quantized_topk(emb, emb.filter(F.col("vec_id") < 20), k=10)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -655,9 +650,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale = _scale_value(quantization_scale(emb))
     books = pq_codebooks(emb, n_subspaces=4, n_codes=16, seed=42,
                          scale=scale)
-    # numpy encode is bit-identical (int argmin, same tie-break) and
-    # skips the interpreted N x M x K zip_with aggregates
-    out = pq_encode(emb, books, scale=scale, method="numpy")
+    out = pq_encode(emb, books, scale=scale)
     return out.select("vec_id", _codes_str("pq_codes").alias("pq_str"))
 
 
@@ -673,10 +666,8 @@ def q_pq_topk_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale = _scale_value(quantization_scale(emb))
     books = pq_codebooks(emb, n_subspaces=4, n_codes=16, seed=42,
                          scale=scale)
-    # both stages on the BLAS tiers — bit-identical to SQL by the
-    # integer contract, so the oracle still hash-gates them
-    enc = pq_encode(emb, books, scale=scale, method="numpy")
-    cand = pq_topk(enc, queries, books, scale, k=50, method="numpy")
+    enc = pq_encode(emb, books, scale=scale)
+    cand = pq_topk(enc, queries, books, scale, k=50)
     out = pq_rerank(cand, emb, queries, k=10)
     return out.withColumn("rank", F.col("rank").cast("long"))
 

@@ -760,9 +760,9 @@ def pq_rerank_recall(spark, sf_dir: str) -> float:
     books = pq_codebooks(
         emb, 8, 256, method="kmeans", seed=42, scale=scale
     ).localCheckpoint(eager=True)
-    enc = pq_encode(emb, books, scale=scale, method="numpy")
+    enc = pq_encode(emb, books, scale=scale)
     pool = max(100, emb.count() // 1000)
-    cand = pq_topk(enc, queries, books, scale, k=pool, method="numpy")
+    cand = pq_topk(enc, queries, books, scale, k=pool)
     approx = {
         (r["query_id"], r["neighbor_id"])
         for r in pq_rerank(cand, emb, queries, k=10).collect()

@@ -19,16 +19,18 @@ a single global grid scale, ``floor(x*qmax/scale + 0.5)`` — every
 downstream comparison is **integer arithmetic**: int dot products,
 int squared L2, int ADC lookup sums.  Integer sums are
 associative, so no engine/summation-order caveat applies anywhere in
-the ranking path; ties break on explicit id/code order.  The SQL
-tier and the BLAS tier agree bit-for-bit (not "modulo float ties"
-like the float ANN tiers), and the DuckDB oracles replay the whole
-pipeline including the encode step.
+the ranking path; ties break on explicit id/code order.  The DuckDB
+oracles replay the whole pipeline including the encode step.
 
-Tiers mirror the house pattern: ``method="sql"`` keeps the ranking
-arithmetic in codegen'd array expressions (the oracle twin);
-``method="numpy"`` runs the same integer math as BLAS/bulk-indexed
-NumPy inside Arrow ``mapInPandas`` for large Q — bit-identical
-output, unlike the float tiers, because integers don't reorder.
+One path per operator: the scale, the searches and the PQ encode run
+their integer math as NumPy inside Arrow ``mapInPandas`` batches
+(BLAS matmuls through floats wherever the integer bound is exactly
+representable, bulk-indexed lookup tables).  Only the scalar encode
+has two bodies, chosen by its consumer: the public
+:func:`quantize_embeddings` is SQL codegen (the faster of the two when
+the codes are the output), and the operators that feed the Arrow
+kernels encode through :func:`_quantize_numpy`, which yields the same
+codes bit for bit.
 """
 
 from __future__ import annotations
@@ -59,7 +61,7 @@ def _qmax(bits: int) -> int:
 
 
 def quantization_scale(
-    corpus: DataFrame, vec_col: str = "embedding", method: str = "numpy"
+    corpus: DataFrame, vec_col: str = "embedding"
 ) -> DataFrame:
     """The global symmetric grid scale: max |component| over the
     corpus's UNIT vectors (≤ 1 by construction, usually ≪ 1 for
@@ -67,54 +69,39 @@ def quantization_scale(
     naive ``scale=1``).  One scalar aggregate — callers cross-join the
     single row back (the broadcast-scalar pattern used throughout).
 
-    ``method="sql"`` is the oracle twin: per-row
-    ``array_max(transform(abs))`` then a plain ``max`` —
-    partial-aggregatable, one scan, shuffle carries one double per
-    task.  ``method="numpy"`` (the default) computes the same values
-    inside Arrow batches — norm in the same sequential per-dimension
-    order as :func:`_quantize_numpy`, divide/abs/max all exact IEEE —
-    so the result is BIT-identical while skipping the interpreted
-    higher-order folds (measured 1.26 s → 0.4 s per call at 64 dims;
-    the scale feeds up to 6 consumers per PQ pipeline)."""
-    if method == "numpy":
-        schema = T.StructType([T.StructField("q_scale", T.DoubleType())])
+    Each Arrow batch emits its partial max — norm in the same
+    sequential per-dimension order as :func:`_quantize_numpy`,
+    divide/abs/max all exact IEEE, so the value equals the SQL fold
+    ``max(array_max(transform(unit, abs)))`` bit for bit — and a plain
+    ``max`` combines the partials (one double per task)."""
+    schema = T.StructType([T.StructField("q_scale", T.DoubleType())])
 
-        def partial(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            best = -np.inf
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                acc = np.zeros(len(v), dtype=np.float64)
-                for d in range(v.shape[1]):  # sequential, like the fold
-                    acc = acc + v[:, d] * v[:, d]
-                nrm = np.sqrt(acc)
-                ok = nrm > 0
-                if ok.any():
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        unit = np.abs(v[ok] / nrm[ok, None])
-                    best = max(best, float(unit.max()))
-            if np.isfinite(best):
-                yield pd.DataFrame({"q_scale": [best]})
+    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        best = -np.inf
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            acc = np.zeros(len(v), dtype=np.float64)
+            for d in range(v.shape[1]):  # sequential, like the fold
+                acc = acc + v[:, d] * v[:, d]
+            nrm = np.sqrt(acc)
+            ok = nrm > 0
+            if ok.any():
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    unit = np.abs(v[ok] / nrm[ok, None])
+                best = max(best, float(unit.max()))
+        if np.isfinite(best):
+            yield pd.DataFrame({"q_scale": [best]})
 
-        from kafka_sparkstreaming_sbt_spark.plans import (
-            parallelize_for_compute,
-        )
+    from kafka_sparkstreaming_sbt_spark.plans import parallelize_for_compute
 
-        partials = (
-            parallelize_for_compute(corpus)
-            .select(vec_col)
-            .mapInPandas(partial, schema)
-        )
-        return partials.agg(F.max("q_scale").alias("q_scale"))
-    unit = with_unit_vectors(corpus, vec_col)
-    return unit.filter(F.col("unit").isNotNull()).agg(
-        F.max(F.array_max(F.transform(F.col("unit"), F.abs))).alias(
-            "q_scale"
-        )
+    partials = (
+        parallelize_for_compute(corpus)
+        .select(vec_col)
+        .mapInPandas(partial, schema)
     )
+    return partials.agg(F.max("q_scale").alias("q_scale"))
 
 
 def _scale_value(scale: DataFrame | float) -> float:
@@ -138,7 +125,6 @@ def quantize_embeddings(
     id_col: str = "vec_id",
     bits: int = 8,
     scale: DataFrame | float | None = None,
-    method: str = "sql",
 ) -> DataFrame:
     """Symmetric scalar quantization of unit vectors onto a
     ``[-qmax, qmax]`` integer grid (qmax = 2^(bits-1) - 1; 127 for
@@ -159,21 +145,14 @@ def quantize_embeddings(
     Per-row codegen over a broadcast scalar: no shuffle, no Python.
     ``int_norm = Σ code²`` rides along so consumers can reconstruct
     approximate cosine (``int_dot / sqrt(na*nb)``) without a second
-    pass.
-
-    ``method="numpy"`` (:func:`_quantize_numpy`) is BIT-identical:
-    the norm accumulates dimension-by-dimension in the same sequential
-    order as the SQL fold (vectorized ACROSS the batch, ordered WITHIN
-    the row), and divide/floor/clip are correctly-rounded IEEE either
-    way — so any tier can feed the oracle.  Higher-order array
-    expressions are interpreted, which makes the SQL tier ~3× slower
-    already at 64 dims."""
+    pass.  When the codes are the output this body is faster than the
+    Arrow encode (measured 0.81–0.86 s vs 0.94–1.09 s at sf0.1 on 4
+    cores); the operators that feed Arrow kernels encode through
+    :func:`_quantize_numpy` instead, which yields the same codes."""
     qmax = _qmax(bits)
     if scale is None:
         scale = quantization_scale(df, vec_col)
     s = _scale_value(scale)
-    if method == "numpy":
-        return _quantize_numpy(df, vec_col, id_col, qmax, s)
     unit = with_unit_vectors(df, vec_col)
 
     def code(x):
@@ -201,7 +180,7 @@ def _quantize_rows_kernel(v: "np.ndarray", qmax: int, s: float):
     (bit-identical to the SQL fold), exact IEEE divide/floor/clip —
     all per-row ops, so batch boundaries cannot change any value.
     Returns (codes int64 (B, dim), ok bool (B,)); rows with
-    ``not ok`` (zero norm) quantize to NULL in the DataFrame tiers."""
+    ``not ok`` (zero norm) quantize to NULL in the DataFrame encodes."""
     acc = np.zeros(len(v), dtype=np.float64)
     for d in range(v.shape[1]):  # sequential, like the fold
         acc = acc + v[:, d] * v[:, d]
@@ -216,14 +195,24 @@ def _quantize_rows_kernel(v: "np.ndarray", qmax: int, s: float):
 
 
 def _quantize_numpy(
-    df: DataFrame, vec_col: str, id_col: str, qmax: int, s: float
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    bits: int,
+    scale: DataFrame | float | None,
 ) -> DataFrame:
-    """Arrow tier of :func:`quantize_embeddings`.  Exactness note:
-    ``np.sum`` uses pairwise summation, which need NOT match the SQL
-    fold's strict left-to-right order — so the norm accumulates in an
-    explicit per-dimension loop (sequential within the row, vectorized
-    across the batch), making every intermediate bit-identical to the
-    SQL tier."""
+    """Arrow encode: the same ``(id, codes, int_norm)`` as
+    :func:`quantize_embeddings`, for the operators whose next stage is
+    an Arrow kernel.  Exactness note: ``np.sum`` uses pairwise
+    summation, which need NOT match the SQL fold's strict
+    left-to-right order — so the norm accumulates in an explicit
+    per-dimension loop (sequential within the row, vectorized across
+    the batch), making every intermediate bit-identical to the SQL
+    body."""
+    qmax = _qmax(bits)
+    if scale is None:
+        scale = quantization_scale(df, vec_col)
+    s = _scale_value(scale)
     schema = T.StructType(
         [
             _id_field(df, id_col),
@@ -260,17 +249,6 @@ def _quantize_numpy(
     )
 
 
-def _int_dot(a: F.Column, b: F.Column) -> F.Column:
-    """Exact integer dot product of two int-code arrays (long
-    accumulator: |qmax|² × dim ≈ 10^6 at int8/64-dim, nowhere near
-    overflow; associative, so no summation-order caveat)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -278,7 +256,6 @@ def quantized_topk(
     bits: int = 8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    method: str = "sql",
 ) -> DataFrame:
     """Brute-force top-k in the QUANTIZED domain: both sides encoded
     on the corpus grid, ranked by exact integer dot product (descending
@@ -287,58 +264,30 @@ def quantized_topk(
     gate).  Returns ``(query_id, neighbor_id, int_dot, rank)`` —
     self-matches excluded, ties on the smaller neighbor id.
 
-    Scale shape is :func:`similarity.cosine_topk`'s: queries
-    broadcast, corpus scanned once and never shuffled, map-side
-    WindowGroupLimit prune — but each corpus row moves ``dim`` BYTES
-    of codes instead of ``4×dim`` of floats, which is the whole point:
-    the scan stage of a 100 TB ANN system runs on codes and float
-    re-rank touches only the survivors.
-
-    ``method="numpy"``: one int64 BLAS matmul per Arrow batch
-    (:func:`_quantized_topk_numpy`) — BIT-IDENTICAL to the SQL tier
-    (integer arithmetic has no summation-order tie caveat), so unlike
-    the float tiers either tier can serve the oracle query."""
+    Scale shape is :func:`similarity.cosine_topk`'s: query codes
+    collected driver-side (Q×dim ints — the broadcast fits-in-memory
+    contract), corpus scanned once and never shuffled, one matmul per
+    Arrow batch and a per-batch local top-k
+    (:func:`similarity._local_topk`) before the rank stage — but each
+    corpus row moves ``dim`` BYTES of codes instead of ``4×dim`` of
+    floats, which is the whole point: the scan stage of a 100 TB ANN
+    system runs on codes and float re-rank touches only the
+    survivors."""
     scale = _scale_value(quantization_scale(corpus, vec_col))
-    # both sides encoded on the Arrow tier — bit-identical to SQL
     cq = (
-        quantize_embeddings(
-            corpus, vec_col, id_col, bits, scale, method="numpy"
-        )
+        _quantize_numpy(corpus, vec_col, id_col, bits, scale)
         .filter(F.col("codes").isNotNull())
         .select(
             F.col(id_col).alias("neighbor_id"), F.col("codes").alias("c_codes")
         )
     )
     qq = (
-        quantize_embeddings(
-            queries, vec_col, id_col, bits, scale, method="numpy"
-        )
+        _quantize_numpy(queries, vec_col, id_col, bits, scale)
         .filter(F.col("codes").isNotNull())
         .select(
             F.col(id_col).alias("query_id"), F.col("codes").alias("q_codes")
         )
     )
-    if method == "numpy":
-        return _quantized_topk_numpy(cq, qq, k)
-    from kafka_sparkstreaming_sbt_spark.plans import parallelize_for_compute
-
-    pairs = parallelize_for_compute(cq).join(
-        F.broadcast(qq), F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        _int_dot(F.col("q_codes"), F.col("c_codes")).alias("int_dot"),
-    )
-    return _ranked_topk_per_query(scored, k, "int_dot")
-
-
-def _quantized_topk_numpy(cq: DataFrame, qq: DataFrame, k: int) -> DataFrame:
-    """BLAS tier of :func:`quantized_topk`: query codes collected
-    driver-side (Q×dim ints — the broadcast fits-in-memory contract),
-    one int64 matmul per corpus batch, per-batch local top-k
-    (:func:`similarity._local_topk`), then the rank stage.  Integer
-    math — bit-identical to the SQL tier."""
     _, qids, qmat = _collect_queries(qq, "query_id", "q_codes", np.int64)
     schema = "query_id long, neighbor_id long, int_dot long"
 
@@ -348,7 +297,7 @@ def _quantized_topk_numpy(cq: DataFrame, qq: DataFrame, k: int) -> DataFrame:
         # integer bounded by dim·max|v|·max|q|, so route through
         # sgemm/dgemm when that bound is exactly representable
         # (2^24 / 2^53) — bit-identical, ~4× faster (same
-        # discipline as _pq_encode_numpy)
+        # discipline as _pq_encode_kernel)
         m_v = int(np.abs(v).max()) if v.size else 0
         m_q = int(np.abs(qmat).max()) if qmat.size else 0
         bound = v.shape[1] * max(m_v, 1) * max(m_q, 1)
@@ -381,10 +330,10 @@ def _quantized_topk_numpy(cq: DataFrame, qq: DataFrame, k: int) -> DataFrame:
 
 
 def _codebook_rows(codebooks: DataFrame):
-    """The codebook table collected driver-side — M×K rows, the same
-    fits-in-memory contract its broadcast join imposes.  Memoized on
-    the DataFrame OBJECT (r12): one codebook build feeds geometry,
-    the encode broadcast and the ADC lut, each of which used to
+    """The codebook table collected driver-side — M×K rows, bounded by
+    construction.  Memoized on the DataFrame OBJECT (r12): one
+    codebook build feeds geometry, the encode and the ADC lut, each of
+    which used to
     re-collect as its own serial Spark job; the cache dies with the
     DataFrame instance (fresh per query invocation — nothing persists
     across runs)."""
@@ -480,9 +429,7 @@ def pq_codebooks(
     """
     if method not in ("deterministic", "kmeans"):
         raise ValueError(f"unknown method {method!r}")
-    codes = quantize_embeddings(
-        corpus, vec_col, id_col, bits, scale, method="numpy"
-    ).filter(
+    codes = _quantize_numpy(corpus, vec_col, id_col, bits, scale).filter(
         F.col("codes").isNotNull()
     )
     # dim from the RAW vector column (a limit-1 scan job) — probing
@@ -587,20 +534,6 @@ def pq_codebooks(
     )
 
 
-def _sub_sqdist(a: F.Column, b: F.Column) -> F.Column:
-    """Exact integer squared L2 between two int-code subvectors."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("long") - y.cast("long"))
-            * (x.cast("long") - y.cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def pq_encode(
     df: DataFrame,
     codebooks: DataFrame,
@@ -608,86 +541,21 @@ def pq_encode(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: DataFrame | float | None = None,
-    method: str = "sql",
 ) -> DataFrame:
     """Encode vectors to PQ codes: ``(id, pq_codes: array<int>)`` —
-    per subspace, the codebook entry with minimum integer squared L2
-    (ties → smaller code, via struct-min: exact, engine-portable).
-
-    SQL plan: quantize (codegen) → ×M subspace fan-out (codegen, no
-    shuffle) → broadcast join against the M×K codebook → struct-min
-    per (id, subspace) (partial-aggregatable: the N×M×K scored rows
-    combine map-side, only N×M survivor rows shuffle) → one
-    reassembly agg per id.  At M=8/K=256 the storage result is 8
-    bytes a vector — the 32× compression that makes a 100 TB corpus
+    per subspace, the codebook entry with minimum integer squared L2,
+    ties → smaller code.  At M=8/K=256 the storage result is 8 bytes
+    a vector — the 32× compression that makes a 100 TB corpus
     scannable from memory.
 
-    ``method="numpy"`` (:func:`_pq_encode_numpy`) computes the same
-    argmin per Arrow batch with one einsum against the collected
-    M×K×sub_dim codebook — no fan-out, no shuffle at all, and BIT-
-    identical output (integer distances, argmin ties at the smaller
-    code in both tiers), so either tier can feed the oracle gate; the
-    interpreted N×M×K ``zip_with`` aggregates make the SQL tier ~10×
-    slower already at sf0.1."""
+    Per Arrow batch, the int codes reshape to (B, M, sub_dim) and
+    every subspace scores all K entries of the collected M×K×sub_dim
+    codebook with one GEMM (:func:`_pq_encode_kernel`) — no fan-out,
+    no shuffle."""
     n_sub, sub_dim = _codebook_geometry(codebooks)
-    codes = quantize_embeddings(
-        df, vec_col, id_col, bits, scale, method="numpy"
-    ).filter(F.col("codes").isNotNull())
-    if method == "numpy":
-        return _pq_encode_numpy(codes, codebooks, n_sub, sub_dim, id_col)
-    slices = _subspace_slices(codes, n_sub, sub_dim, id_col)
-    scored = slices.join(F.broadcast(codebooks), "subspace").select(
-        id_col,
-        "subspace",
-        F.struct(
-            _sub_sqdist(F.col("sub_codes"), F.col("c_codes")).alias("d"),
-            F.col("code"),
-        ).alias("_sc"),
+    codes = _quantize_numpy(df, vec_col, id_col, bits, scale).filter(
+        F.col("codes").isNotNull()
     )
-    best = scored.groupBy(id_col, "subspace").agg(
-        F.min("_sc")["code"].alias("code")
-    )
-    ordered = F.array_sort(
-        F.collect_list(F.struct("subspace", "code"))
-    )
-    return best.groupBy(id_col).agg(
-        F.transform(ordered, lambda s: s.code).alias("pq_codes")
-    )
-
-
-def _collect_codebooks(
-    codebooks: DataFrame, n_sub: int, sub_dim: int
-) -> np.ndarray:
-    """(M, K, sub_dim) int64 array off the codebook table — M×K rows,
-    the same fits-in-memory contract its broadcast join imposes."""
-    rows = _codebook_rows(codebooks)
-    n_codes = max(r["code"] for r in rows) + 1
-    books = np.zeros((n_sub, n_codes, sub_dim), dtype=np.int64)
-    for r in rows:
-        books[r["subspace"], r["code"]] = r["c_codes"]
-    return books
-
-
-def _pq_encode_numpy(
-    codes: DataFrame,
-    codebooks: DataFrame,
-    n_sub: int,
-    sub_dim: int,
-    id_col: str,
-) -> DataFrame:
-    """BLAS tier of :func:`pq_encode`: per Arrow batch, reshape the
-    int codes to (B, M, sub_dim) and score all K entries per subspace
-    with a real GEMM; ``np.argmin`` returns the FIRST minimum — the
-    smaller code, the same tie-break as the SQL struct-min — and the
-    distances are exact, so the tiers are bit-identical.
-
-    Exactness-under-float note: NumPy integer matmul/einsum never
-    hits BLAS (naive C loops — measured the 1M-vector encode at 243 s
-    in SCALECHECK before this), but every intermediate here is an
-    integer bounded by ``sub_dim·(2·qmax)²``, and floats represent
-    integers exactly up to 2^24 (f32) / 2^53 (f64) — so computing the
-    SAME integer arithmetic through sgemm/dgemm is bit-exact, ~4×
-    faster per batch, and the tier contract is untouched."""
     books = _collect_codebooks(codebooks, n_sub, sub_dim)
     bnorm = (books * books).sum(axis=2)  # (M, K)
     schema = T.StructType(
@@ -717,6 +585,18 @@ def _pq_encode_numpy(
     )
 
 
+def _collect_codebooks(
+    codebooks: DataFrame, n_sub: int, sub_dim: int
+) -> np.ndarray:
+    """(M, K, sub_dim) int64 array off the memoized codebook rows."""
+    rows = _codebook_rows(codebooks)
+    n_codes = max(r["code"] for r in rows) + 1
+    books = np.zeros((n_sub, n_codes, sub_dim), dtype=np.int64)
+    for r in rows:
+        books[r["subspace"], r["code"]] = r["c_codes"]
+    return books
+
+
 def _pq_encode_kernel(
     v: "np.ndarray",
     books: "np.ndarray",
@@ -724,13 +604,22 @@ def _pq_encode_kernel(
     n_sub: int,
     sub_dim: int,
 ) -> "np.ndarray":
-    """The per-batch argmin of :func:`_pq_encode_numpy`, extracted
-    (r12) so the fused assign+encode corpus pass in :func:`ivf_pq_topk`
-    runs the SAME arithmetic.  Per-row results are batch-independent:
-    the float-width pick is per batch, but every candidate dtype
-    represents the bounded integer distances exactly, so the argmin is
-    identical whichever width a batch lands on.  ``v`` is the (B, dim)
-    int64 scalar-code matrix; returns (B, M) int32 codebook codes."""
+    """The per-batch argmin of :func:`pq_encode`, shared with the
+    fused assign+encode corpus pass in :func:`ivf_pq_topk`.
+    ``np.argmin`` returns the FIRST minimum — ties go to the smaller
+    code.
+
+    Exactness under floats: NumPy integer matmul/einsum never hits
+    BLAS (naive C loops — measured the 1M-vector encode at 243 s in
+    SCALECHECK before this), but every intermediate here is an integer
+    bounded by ``sub_dim·(2·qmax)²``, and floats represent integers
+    exactly up to 2^24 (f32) / 2^53 (f64) — so computing the SAME
+    integer arithmetic through sgemm/dgemm is bit-exact and ~4× faster
+    per batch.  Per-row results are batch-independent: the float-width
+    pick is per batch, but every candidate dtype represents the
+    bounded integer distances exactly, so the argmin is identical
+    whichever width a batch lands on.  ``v`` is the (B, dim) int64
+    scalar-code matrix; returns (B, M) int32 codebook codes."""
     if v.shape[1] != n_sub * sub_dim:
         raise ValueError(
             f"pq: vector dim must be n_subspaces*sub_dim = "
@@ -784,8 +673,7 @@ def _assign_encode_numpy(
 ) -> DataFrame:
     """One corpus pass emitting ``(id, cell_id, pq_codes)`` — the
     fusion of :func:`similarity._assign_numpy` (nearest-cell argmax)
-    and :func:`pq_encode`'s numpy tier (quantize + per-subspace
-    argmin), sharing their exact per-batch kernels.  Zero-norm rows
+    and :func:`pq_encode` (quantize + per-subspace argmin), sharing their exact per-batch kernels.  Zero-norm rows
     get NULL ``pq_codes`` (they have no quantization), matching the
     standalone encode's NotNull filter."""
     from kafka_sparkstreaming_sbt_spark.operators.similarity import (
@@ -831,35 +719,6 @@ def _assign_encode_numpy(
     return corpus.select(id_col, vec_col).mapInPandas(run, schema)
 
 
-def _adc_lut(
-    queries: DataFrame,
-    codebooks: DataFrame,
-    n_sub: int,
-    sub_dim: int,
-    bits: int,
-    vec_col: str,
-    id_col: str,
-    scale: DataFrame | float | None,
-) -> DataFrame:
-    """Per-query ADC lookup table ``(query_id, subspace, code, d)``:
-    the query's int codes against every codebook entry — Q×M×K rows
-    of exact integer squared L2 (asymmetric: the query is NOT snapped
-    to a codebook entry, only to the scalar grid — the standard ADC
-    accuracy win over symmetric search)."""
-    qcodes = quantize_embeddings(
-        queries, vec_col, id_col, bits, scale, method="numpy"
-    ).filter(F.col("codes").isNotNull())
-    qslices = _subspace_slices(qcodes, n_sub, sub_dim, id_col).select(
-        F.col(id_col).alias("query_id"), "subspace", "sub_codes"
-    )
-    return qslices.join(F.broadcast(codebooks), "subspace").select(
-        "query_id",
-        "subspace",
-        "code",
-        _sub_sqdist(F.col("sub_codes"), F.col("c_codes")).alias("d"),
-    )
-
-
 def pq_topk(
     corpus_pq: DataFrame,
     queries: DataFrame,
@@ -869,179 +728,30 @@ def pq_topk(
     bits: int = 8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    method: str = "sql",
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ-encoded corpus rows:
     ``(query_id, neighbor_id, pq_dist, rank)``, distance ascending,
     ties → smaller neighbor id, self-matches excluded.
 
-    ADC: build the Q×M×K integer lookup table once
-    (:func:`_adc_lut`), then every corpus code row costs M table
-    lookups and an integer sum — the corpus's raw vectors are never
-    read.  ``pq_dist`` approximates ``Σ‖q_m − x_m‖²`` on the int
-    grid; integer SUM is order-free, so the grouped aggregation needs
-    no pivot/sequencing tricks and the DuckDB oracle replays it
-    exactly.
-
-    SQL tier plan: corpus codes fan out ×M (codegen), join the
-    broadcast lut on (subspace, code), partial-agg SUM per
-    (query, id) — the N×M×Q intermediate combines map-side, the
-    shuffle carries N×Q grouped rows pruned to Q×k map-side by the
-    rank stage.  ``method="numpy"`` skips the fan-out entirely: the
-    lut becomes a Q×M×K int64 array driver-side and each Arrow batch
-    scores B×Q via bulk fancy-indexing — the scan tier for large Q.
-    Both tiers are bit-identical (integer math)."""
+    ADC: build the Q×M×K integer lookup table once, driver-side
+    (:func:`_adc_lut_arrays`), then every corpus code row costs M
+    table lookups and an integer sum — the corpus's raw vectors are
+    never read.  ``pq_dist`` approximates ``Σ‖q_m − x_m‖²`` on the int
+    grid; integer SUM is order-free, so the DuckDB oracle replays it
+    exactly.  Each Arrow batch's (B, M) code matrix scores all queries
+    at once by bulk fancy-indexing, a local top-k per batch
+    (:func:`similarity._local_topk`) cuts it, then the rank stage."""
     n_sub, sub_dim = _codebook_geometry(codebooks)
-    corpus_scale = _scale_value(corpus_scale)
-    if method == "numpy":
-        # the lut is consumed driver-side anyway (_collect_lut):
-        # collect the bounded query table once and build the (Q,M,K)
-        # array directly — one job instead of a quantize+broadcast-
-        # join lineage, bit-identical integers (r12)
-        lut_arrays = _adc_lut_arrays(
-            queries.select(id_col, vec_col).collect(),
-            codebooks, n_sub, sub_dim, bits, corpus_scale,
-        )
-        return _pq_topk_numpy(corpus_pq, lut_arrays, n_sub, k, id_col)
-    lut = _adc_lut(
-        queries, codebooks, n_sub, sub_dim, bits, vec_col, id_col,
-        corpus_scale,
+    lut = _adc_lut_arrays(
+        queries.select(id_col, vec_col).collect(),
+        codebooks, n_sub, sub_dim, bits, corpus_scale,
     )
-    from kafka_sparkstreaming_sbt_spark.plans import parallelize_for_compute
-
-    exploded = parallelize_for_compute(corpus_pq).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.posexplode("pq_codes").alias("subspace", "code"),
-    )
-    scored = (
-        exploded.join(F.broadcast(lut), ["subspace", "code"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("pq_dist"))
-    )
-    return _ranked_topk_per_query(scored, k, "pq_dist", asc=True)
-
-
-def _adc_lut_arrays(
-    query_rows,
-    codebooks: DataFrame,
-    n_sub: int,
-    sub_dim: int,
-    bits: int,
-    scale: DataFrame | float,
-):
-    """Driver-side twin of :func:`_adc_lut` + :func:`_collect_lut`
-    over COLLECTED ``(id, vec)`` query rows (r12 — VERDICT r11 #3:
-    the query-side assign and the lut build were two separate Spark
-    jobs whose lineages each re-scanned the query table; both inputs
-    are bounded driver artifacts already, so build the (Q, M, K)
-    int64 table directly).  Bit-identical by construction: the
-    quantization runs :func:`_quantize_rows_kernel` (the same
-    arithmetic the Arrow tier runs per batch) and the squared-L2
-    entries are exact integer math either way.  Returns
-    ``(sorted query-id vector, (Q, M, K) int64 table)`` or None when
-    no query survives the zero-norm filter."""
-    if not query_rows:
-        return None
-    ids = np.array([r[0] for r in query_rows], dtype=np.int64)
-    v = np.array([r[1] for r in query_rows], dtype=np.float64)
-    codes, ok = _quantize_rows_kernel(v, _qmax(bits), _scale_value(scale))
-    ids, codes = ids[ok], codes[ok]
-    if not len(ids):
-        return None
-    if codes.shape[1] != n_sub * sub_dim:
-        raise ValueError(
-            f"pq: vector dim must be n_subspaces*sub_dim = "
-            f"{n_sub * sub_dim}, got {codes.shape[1]}"
-        )
-    order = np.argsort(ids, kind="stable")  # _collect_lut sorts qids
-    ids, codes = ids[order], codes[order]
-    sub = codes.reshape(len(ids), n_sub, sub_dim)
-    brows = _codebook_rows(codebooks)
-    if not brows:
-        return None
-    n_codes = max(r["code"] for r in brows) + 1
-    table = np.zeros((len(ids), n_sub, n_codes), dtype=np.int64)
-    for r in brows:
-        c = np.asarray(r["c_codes"], dtype=np.int64)
-        d = sub[:, r["subspace"], :] - c[None, :]
-        table[:, r["subspace"], r["code"]] = (d * d).sum(axis=1)
-    return ids, table
-
-
-def _collect_lut(lut, n_sub: int):
-    """ADC lut rows → (sorted query-id vector, (Q, M, K) int64 array);
-    Q×M×K×8 bytes driver-side — the same fits-in-memory contract the
-    lut's broadcast join imposes.  None when there are no queries.
-    A tuple (already-built arrays from :func:`_adc_lut_arrays`)
-    passes straight through."""
-    if lut is None or isinstance(lut, tuple):
-        return lut
-    lrows = lut.collect()
-    if not lrows:
-        return None
-    qids = sorted({r["query_id"] for r in lrows})
-    qpos = {q: i for i, q in enumerate(qids)}
-    n_codes = max(r["code"] for r in lrows) + 1
-    table = np.zeros((len(qids), n_sub, n_codes), dtype=np.int64)
-    for r in lrows:
-        table[qpos[r["query_id"]], r["subspace"], r["code"]] = r["d"]
-    return np.array(qids, dtype=np.int64), table
-
-
-def _pq_score_candidates_numpy(
-    cand_codes: DataFrame, lut: DataFrame, n_sub: int
-) -> DataFrame:
-    """ADC-score an EXPLICIT candidate-pair set — the IVF-restricted
-    scan tier: ``cand_codes`` is (query_id, neighbor_id, pq_codes)
-    after the cell-prune join, each Arrow batch scores its rows with
-    one bulk fancy-index into the (Q, M, K) lut.  Integer math —
-    bit-identical to the SQL explode+join+SUM, minus its N×M fan-out
-    exchange and interpreted aggregates."""
-    schema = "query_id long, neighbor_id long, pq_dist long"
-    collected = _collect_lut(lut, n_sub)
-    if collected is None:
-        return cand_codes.sparkSession.createDataFrame([], schema)
-    qarr, table = collected
-    qpos = {int(q): i for i, q in enumerate(qarr)}
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m_idx = np.arange(n_sub)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["pq_codes"].to_numpy()).astype(np.int64)
-            qi = pdf["query_id"].map(qpos).to_numpy(dtype=np.int64)
-            d = table[qi[:, None], m_idx[None, :], codes].sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "pq_dist": d,
-                }
-            )
-
-    return cand_codes.select(
-        "query_id", "neighbor_id", "pq_codes"
-    ).mapInPandas(score, schema)
-
-
-def _pq_topk_numpy(
-    corpus_pq: DataFrame, lut: DataFrame, n_sub: int, k: int, id_col: str
-) -> DataFrame:
-    """BLAS/bulk-index tier of :func:`pq_topk`: the lut collects to a
-    (Q, M, K) int64 array (Q×M×K×8 bytes — the same fits-in-memory
-    contract its broadcast imposes), each corpus batch's (B, M) code
-    matrix scores all queries at once via fancy indexing, local
-    top-k per batch (:func:`similarity._local_topk`), then the rank
-    stage.  Bit-identical to SQL."""
-    collected = _collect_lut(lut, n_sub)
-    if collected is None:
+    if lut is None:
         return corpus_pq.sparkSession.createDataFrame(
             [],
             "query_id long, neighbor_id long, pq_dist long, rank int",
         )
-    qarr, table = collected
+    qarr, table = lut
     schema = "query_id long, neighbor_id long, pq_dist long"
     m_idx = np.arange(n_sub)
 
@@ -1064,6 +774,89 @@ def _pq_topk_numpy(
 
     scored = parallelize_for_compute(corpus_pq).mapInPandas(score, schema)
     return _ranked_topk_per_query(scored, k, "pq_dist", asc=True)
+
+
+def _adc_lut_arrays(
+    query_rows,
+    codebooks: DataFrame,
+    n_sub: int,
+    sub_dim: int,
+    bits: int,
+    scale: DataFrame | float,
+):
+    """Per-query ADC lookup table over COLLECTED ``(id, vec)`` query
+    rows: each query's int codes against every codebook entry, exact
+    integer squared L2 (asymmetric: the query is NOT snapped to a
+    codebook entry, only to the scalar grid — the standard ADC
+    accuracy win over symmetric search).  Both inputs are bounded
+    driver artifacts, so the (Q, M, K) int64 table is built directly
+    — Q×M×K×8 bytes, the same fits-in-memory contract a broadcast of
+    the table would impose.  The quantization runs
+    :func:`_quantize_rows_kernel`, the arithmetic the Arrow encode
+    runs per batch.  Returns ``(sorted query-id vector, (Q, M, K)
+    int64 table)`` or None when no query survives the zero-norm
+    filter."""
+    if not query_rows:
+        return None
+    ids = np.array([r[0] for r in query_rows], dtype=np.int64)
+    v = np.array([r[1] for r in query_rows], dtype=np.float64)
+    codes, ok = _quantize_rows_kernel(v, _qmax(bits), _scale_value(scale))
+    ids, codes = ids[ok], codes[ok]
+    if not len(ids):
+        return None
+    if codes.shape[1] != n_sub * sub_dim:
+        raise ValueError(
+            f"pq: vector dim must be n_subspaces*sub_dim = "
+            f"{n_sub * sub_dim}, got {codes.shape[1]}"
+        )
+    order = np.argsort(ids, kind="stable")
+    ids, codes = ids[order], codes[order]
+    sub = codes.reshape(len(ids), n_sub, sub_dim)
+    brows = _codebook_rows(codebooks)
+    if not brows:
+        return None
+    n_codes = max(r["code"] for r in brows) + 1
+    table = np.zeros((len(ids), n_sub, n_codes), dtype=np.int64)
+    for r in brows:
+        c = np.asarray(r["c_codes"], dtype=np.int64)
+        d = sub[:, r["subspace"], :] - c[None, :]
+        table[:, r["subspace"], r["code"]] = (d * d).sum(axis=1)
+    return ids, table
+
+
+def _pq_score_candidates_numpy(
+    cand_codes: DataFrame, lut, n_sub: int
+) -> DataFrame:
+    """ADC-score an EXPLICIT candidate-pair set — the IVF-restricted
+    scan: ``cand_codes`` is (query_id, neighbor_id, pq_codes) after
+    the cell-prune join, ``lut`` is :func:`_adc_lut_arrays`' result,
+    and each Arrow batch scores its rows with one bulk fancy-index
+    into the (Q, M, K) table."""
+    schema = "query_id long, neighbor_id long, pq_dist long"
+    if lut is None:
+        return cand_codes.sparkSession.createDataFrame([], schema)
+    qarr, table = lut
+    qpos = {int(q): i for i, q in enumerate(qarr)}
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        m_idx = np.arange(n_sub)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            codes = np.stack(pdf["pq_codes"].to_numpy()).astype(np.int64)
+            qi = pdf["query_id"].map(qpos).to_numpy(dtype=np.int64)
+            d = table[qi[:, None], m_idx[None, :], codes].sum(axis=1)
+            yield pd.DataFrame(
+                {
+                    "query_id": pdf["query_id"].to_numpy(),
+                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
+                    "pq_dist": d,
+                }
+            )
+
+    return cand_codes.select(
+        "query_id", "neighbor_id", "pq_codes"
+    ).mapInPandas(score, schema)
 
 
 def pq_rerank(

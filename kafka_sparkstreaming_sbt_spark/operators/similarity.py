@@ -25,21 +25,22 @@ lives in two places shared with :mod:`quantize`: ``_local_topk``, the
 per-batch cut of every BLAS tier, and ``_ranked_topk_per_query``, the
 one rank stage.
 
-Two execution tiers (``method=`` / ``assign_method=`` / ``search_method=``)
----------------------------------------------------------------------------
+Two execution tiers (``method=`` / ``search_method=``)
+-----------------------------------------------------
 ``"sql"`` keeps every dot product in Catalyst with the left-to-right
 summation above — the tier oracle-hashed queries replay.  ``"numpy"``
 runs the same math as Arrow-batched BLAS matmuls (mapInPandas
 assignment and top-k scoring, per-group/cogroup applyInPandas pair
 scans) — identical rounding contract but library summation order, so
-an exact 6-dp tie could in principle round differently.  Defaults
-follow MEASUREMENT, not ideology: k-means assignment is always BLAS
-(434 s -> 12.3 s at 200 K x 64-dim — recall-gated, no oracle);
-brute top-k and IVF search default to SQL (faster at the 2 K-vector
-gate scale, and what the oracles hash) with the BLAS tier as the
-opt-in that wins at volume (top-k 46.1 s -> 9.3 s at Q=513/N=200 K;
-IVF search 125.4 s -> 15.2 s at 128 cells).  Parity between tiers
-is pinned by tests on the fixture corpus.
+an exact 6-dp tie could in principle round differently.  Brute top-k
+and IVF search default to SQL (faster at the 2 K-vector gate scale,
+and what the oracles hash) with the BLAS tier as the opt-in that wins
+at volume (top-k 46.1 s -> 9.3 s at Q=513/N=200 K; IVF search
+125.4 s -> 15.2 s at 128 cells).  Parity between tiers is pinned by
+tests on the fixture corpus.  K-means has one tier, the fused BLAS
+round (:func:`kmeans_centroids`, recall-gated, no oracle): its BLAS
+assignment measured 12.3 s against 434 s for ``zip_with`` at
+200 K x 64-dim.
 """
 
 from __future__ import annotations
@@ -1298,19 +1299,17 @@ def _kmeans_round_numpy(
     — 6-dp rounding, smaller-cell-id ties, NaN-as-greatest) and
     accumulates per-cell (count, vector-sum) partials in a running
     numpy buffer, emitting ONE row per non-empty cell per partition.
-    The shuffle then carries partitions x cells partial rows instead
-    of the unfused round's TWO full-corpus exchanges (the N-row
-    assignment join-back against the vector payload and the N x dim
-    ``posexplode``) — on local[32] at 200 K this times the same (the
-    scan dominates), but at cluster scale those exchanges are the
-    round's network cost and this deletes both; the per-task buffer
+    The shuffle then carries partitions x cells partial rows and no
+    full-corpus exchange (an N-row assignment join-back against the
+    vector payload, an N x dim ``posexplode``) — on local[32] at 200 K
+    both shapes time the same (the scan dominates), but at cluster
+    scale those exchanges are a round's network cost; the per-task buffer
     is cells x dim doubles, the same fits-in-memory contract the
     centroid broadcast already imposes.
 
-    Cell means become sum-of-partial-sums / count — same value as the
-    unfused per-member ``avg`` up to float summation order, which is
-    why this is the recall-gated tier's round and the ``"sql"`` tier
-    keeps the exact shape."""
+    Cell means become sum-of-partial-sums / count — the member mean
+    up to float summation order, which is why k-means is recall-gated,
+    not hash-gated."""
     ids, mat, cn = _centroid_arrays(centroids)
     n_cells, dim = mat.shape
     schema = T.StructType(
@@ -1482,7 +1481,6 @@ def kmeans_centroids(
     seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign_method: str = "numpy",
 ) -> DataFrame:
     """Seeded Lloyd k-means coarse quantizer, DataFrame-native — the
     production replacement for the trivial ``vec_id < n_cells``
@@ -1495,31 +1493,20 @@ def kmeans_centroids(
       (no RNG state, reproducible on any engine/partitioning), ranked
       into cell ids by the same scale-safe top-k used everywhere
       (TakeOrderedAndProject, no global window).
-    - **assign**: :func:`ivf_assign` — broadcast centroids, ``max_by``
-      partial aggregation, corpus never shuffled.
-    - **update**: element-wise member mean via ``posexplode`` ->
-      per-(cell, dim) partial->final avg -> regroup to arrays; the
-      shuffle carries cells x dim rows, not the corpus.
+    - **round**: :func:`_kmeans_round_numpy` — one BLAS scan both
+      assigns every vector (the :func:`ivf_assign` contract: 6-dp
+      cosine, smaller-cell-id ties) and pre-aggregates per-cell
+      partial sums, so each round shuffles partitions x cells rows,
+      not the corpus.  Measured at 200 K x 64-dim, 2 rounds: 434 s
+      with ``zip_with`` dot products -> 12.3 s with the BLAS assign.
     - **lineage**: ``localCheckpoint`` per round truncates the
       iterative plan (same discipline as ``graph.connected_
       components``); each checkpoint materializes only the tiny
       (cells x dim) centroid table.
 
     Cells that lose all members drop out (k can shrink) — standard
-    Lloyd behavior; callers probe whatever cells remain.
-
-    ``assign_method`` defaults to ``"numpy"`` — k-means is gated on
-    RECALL, not an exact-match oracle, so each round runs FUSED
-    (:func:`_kmeans_round_numpy`): one BLAS scan both assigns and
-    pre-aggregates per-cell partials, shuffling partitions x cells
-    rows per round instead of join-back + N x dim posexplode.
-    Measured at 200 K x 64-dim, 2 rounds: 434 s (zip_with) -> 12.3 s
-    (BLAS assign) — the fused round times the SAME locally (12.4 s:
-    on local[32] the deleted shuffles are cheap and the scan
-    dominates); its payoff is topological, two full-corpus exchanges
-    per round gone, which is what matters on a real cluster.  Pass
-    ``"sql"`` only when replaying the exact zip_with arithmetic is
-    the point.
+    Lloyd behavior; callers probe whatever cells remain.  K-means is
+    gated on RECALL, not an exact-match oracle.
     """
     from kafka_sparkstreaming_sbt_spark.operators.topk import topk_cut
     from kafka_sparkstreaming_sbt_spark.plans import parallelize_for_compute
@@ -1565,42 +1552,9 @@ def kmeans_centroids(
         F.col(id_col), F.col(vec_col)
     )
     for _ in range(n_iter):
-        if assign_method == "numpy":
-            # FUSED round: one corpus scan assigns AND pre-aggregates
-            # per-cell partials — no N-row join-back, no N x dim
-            # posexplode shuffle (see _kmeans_round_numpy)
-            cent = _kmeans_round_numpy(
-                body, cent, vec_col, id_col
-            ).localCheckpoint(eager=False)
-            continue
-        # scalar argmax (HashAggregate partial on skinny scored rows)
-        # + join-back of the N skinny assignment rows.  Measured
-        # FASTER than carrying the vector through a struct-valued
-        # max_by: struct ordering forces SortAggregate, which sorts
-        # the N x C scored rows with a 64-dim payload every round.
-        assigned = ivf_assign(
-            body, cent, vec_col, id_col, method=assign_method
-        )
-        members = body.join(assigned, id_col)
-        dims = members.select(
-            "cell_id", F.posexplode(vec_col).alias("pos", "x")
-        )
-        means = dims.groupBy("cell_id", "pos").agg(
-            F.avg(F.col("x").cast("double")).alias("m")
-        )
-        cent = (
-            means.groupBy("cell_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("pm")
-            )
-            .select(
-                "cell_id",
-                F.transform("pm", lambda s: s["m"]).alias("c_vec"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        cent = _kmeans_round_numpy(
+            body, cent, vec_col, id_col
+        ).localCheckpoint(eager=False)
     return cent
 
 

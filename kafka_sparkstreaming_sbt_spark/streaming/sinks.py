@@ -18,6 +18,7 @@
 from __future__ import annotations
 
 import logging
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -48,10 +49,27 @@ def start_foreach_batch_sink(
 
     writer = df.writeStream.foreachBatch(_wrapped).outputMode(output_mode)
     if checkpoint_location:
+        _sweep_state_temp_files(checkpoint_location)
         writer = writer.option("checkpointLocation", checkpoint_location)
     if query_name:
         writer = writer.queryName(query_name)
     return writer.start()
+
+
+def _sweep_state_temp_files(checkpoint_location: str) -> None:
+    """Delete the hidden temp files a re-run batch leaves under
+    ``<checkpoint>/state``.  When a batch re-runs after a crash, its
+    state files already exist; Spark's FileSystem checkpoint manager
+    keeps the first copy and leaves the re-run's
+    ``.<file>.<uuid>.tmp`` (and that file's ``.crc``) behind.  Spark
+    never reads them.  Called only before a query starts, when nothing
+    writes to the directory.  Local paths only: ``session.get_spark``
+    picks that manager only on a local master."""
+    root = os.path.join(checkpoint_location.removeprefix("file:"), "state")
+    for d, _, files in os.walk(root):
+        for f in files:
+            if f.startswith(".") and f.endswith((".tmp", ".tmp.crc")):
+                os.remove(os.path.join(d, f))
 
 
 def start_console_sink(

@@ -1400,9 +1400,7 @@ def run_quantized_search_check(
     t0 = time.perf_counter()
     sq = {
         (r["query_id"], r["neighbor_id"])
-        for r in quantized_topk(
-            emb, queries, k=10, method="numpy"
-        ).collect()
+        for r in quantized_topk(emb, queries, k=10).collect()
     }
     d["sq_wall_s"] = round(time.perf_counter() - t0, 2)
     d["sq_recall_at_10"] = round(len(brute & sq) / max(len(brute), 1), 4)
@@ -1421,19 +1419,16 @@ def run_quantized_search_check(
     d["pq_train_wall_s"] = round(time.perf_counter() - t0, 2)
     t0 = time.perf_counter()
     pq_path = f"{scratch}/pq_{n_vecs}"
-    # BLAS tier, like every other numpy-path run in this harness —
-    # the SQL encode tier is an oracle-determinism surface and its
-    # interpreted N x M x K fan-out measured 243 s here vs ~12 s
-    pq_encode(emb, books, scale=scale, method="numpy").write.mode(
-        "overwrite"
-    ).parquet(pq_path)
+    pq_encode(emb, books, scale=scale).write.mode("overwrite").parquet(
+        pq_path
+    )
     d["pq_encode_wall_s"] = round(time.perf_counter() - t0, 2)
     d["pq_bytes"] = _dir_bytes(pq_path)
     enc = spark.read.parquet(pq_path)
     t0 = time.perf_counter()
     pool = max(100, n_vecs // 1000)
     d["pq_pool"] = pool
-    cand = pq_topk(enc, queries, books, scale, k=pool, method="numpy")
+    cand = pq_topk(enc, queries, books, scale, k=pool)
     pq = {
         (r["query_id"], r["neighbor_id"])
         for r in pq_rerank(cand, emb, queries, k=10).collect()

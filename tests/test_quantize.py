@@ -1,6 +1,7 @@
 """Quantized / product-quantized search: exactness of the integer
-contract (SQL tier == NumPy tier bit-for-bit), recall gates vs the
-float brute-force tier, and the PQ→re-rank economics."""
+contract (each operator equals an exact integer brute force, and the
+two scalar encodes agree bit for bit), recall gates vs the float
+brute-force tier, and the PQ→re-rank economics."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_sparkstreaming_sbt_spark.operators.quantize import (
+    _quantize_numpy,
     ivf_pq_topk,
     pq_codebooks,
     pq_encode,
@@ -20,13 +22,14 @@ from kafka_sparkstreaming_sbt_spark.operators.quantize import (
     quantized_topk,
 )
 from kafka_sparkstreaming_sbt_spark.operators.similarity import cosine_topk
+from kafka_sparkstreaming_sbt_spark.sources.batch import read_table
 
 SF = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    return read_table(spark, SF, "embeddings").cache()
 
 
 @pytest.fixture(scope="module")
@@ -41,6 +44,42 @@ def _assert_smallest_tied(rows, tied) -> None:
     for q in tied.query_ids:
         got = [n for _, n in sorted((r[3], r[1]) for r in rows if r[0] == q)]
         assert got == tied.smallest(q, 2)
+
+
+def _codes(df, scale, bits=8) -> dict:
+    """id -> scalar codes from the SQL encode (zero vectors dropped)."""
+    out = quantize_embeddings(df, bits=bits, scale=scale).collect()
+    return {r[0]: r[1] for r in out if r[1] is not None}
+
+
+def _sqdist(a, b) -> int:
+    return sum((x - y) ** 2 for x, y in zip(a, b))
+
+
+def _books(codebooks) -> dict:
+    return {(r.subspace, r.code): r.c_codes for r in codebooks.collect()}
+
+
+def _pq_dist(books: dict, qv, pq_codes) -> int:
+    """Integer ADC distance of scalar codes ``qv`` to a PQ code row."""
+    d = len(qv) // len(pq_codes)
+    return sum(
+        _sqdist(qv[m * d:(m + 1) * d], books[m, c])
+        for m, c in enumerate(pq_codes)
+    )
+
+
+def _brute_topk(queries: dict, corpus: dict, score, k: int, asc: bool):
+    """Exact integer top-k as sorted (query, neighbor, score, rank)
+    rows: self-matches excluded, ties on the smaller neighbor id."""
+    sign = 1 if asc else -1
+    rows = []
+    for q, qv in queries.items():
+        ranked = sorted(
+            (sign * score(qv, v), n) for n, v in corpus.items() if n != q
+        )[:k]
+        rows += [(q, n, sign * d, r) for r, (d, n) in enumerate(ranked, 1)]
+    return sorted(rows)
 
 
 def _recall(approx_df, exact_df) -> float:
@@ -86,36 +125,33 @@ def test_query_side_clamps_to_corpus_grid(spark, emb):
     assert max(out["codes"]) == 127
 
 
-def test_quantized_topk_sql_numpy_bit_identical(
+def test_quantized_topk_matches_integer_brute_force(
     emb, queries, tied_vectors
 ):
-    """Both tiers agree bit for bit on the fixture corpus and on the
-    exact-tie input at k=2 in 4-row Arrow batches, where tied copies
-    come back as the smallest ids."""
+    """Equal to an exact integer brute force over the SQL encode on the
+    fixture corpus and on the exact-tie input at k=2 in 4-row Arrow
+    batches, where tied copies come back as the smallest ids."""
     tied = tied_vectors
     for corpus, qs, k, batches in (
         (emb, queries, 10, nullcontext()),
         (tied.df, tied.queries, 2, tied.small_batches()),
     ):
+        scale = quantization_scale(corpus)
+        want = _brute_topk(
+            _codes(qs, scale), _codes(corpus, scale),
+            lambda a, b: sum(x * y for x, y in zip(a, b)), k, asc=False,
+        )
         with batches:
-            a = sorted(
+            got = sorted(
                 map(tuple, quantized_topk(corpus, qs, k=k).collect())
             )
-            b = sorted(
-                map(
-                    tuple,
-                    quantized_topk(
-                        corpus, qs, k=k, method="numpy"
-                    ).collect(),
-                )
-            )
-        assert a == b  # integer arithmetic: no float-tie caveat
-    _assert_smallest_tied(a, tied)
+        assert got == want
+    _assert_smallest_tied(got, tied)
 
 
 def test_quantized_topk_recall_vs_float(emb, queries):
     exact = cosine_topk(emb, queries, k=10, method="numpy")
-    approx = quantized_topk(emb, queries, k=10, method="numpy")
+    approx = quantized_topk(emb, queries, k=10)
     assert _recall(approx, exact) >= 0.9  # measured 0.975 at sf0.1
 
 
@@ -129,47 +165,54 @@ def test_pq_encode_codes_in_range(emb):
         assert all(0 <= c < 16 for c in r["pq_codes"])
 
 
-def test_pq_encode_sql_numpy_bit_identical(emb):
-    books = pq_codebooks(emb, n_subspaces=4, n_codes=16)
-    a = sorted(
-        (r["vec_id"], tuple(r["pq_codes"]))
-        for r in pq_encode(emb, books).collect()
-    )
-    b = sorted(
-        (r["vec_id"], tuple(r["pq_codes"]))
-        for r in pq_encode(emb, books, method="numpy").collect()
-    )
-    assert a == b  # int argmin, same smaller-code tie-break
+def test_pq_encode_matches_integer_brute_force(emb):
+    """Per subspace the nearest codebook entry by integer squared L2,
+    ties on the smaller code; ``bits=16`` pushes the distance bound
+    past the f32-exact window, so the GEMM must fall through to f64
+    (or int64) and stay exact."""
+    scale = quantization_scale(emb)
+    for bits in (8, 16):
+        cb = pq_codebooks(emb, n_subspaces=4, n_codes=16, bits=bits)
+        books = _books(cb)
+
+        def nearest(sub, m):
+            return min(range(16), key=lambda c: _sqdist(sub, books[m, c]))
+
+        want = sorted(
+            (i, tuple(nearest(v[16 * m:16 * m + 16], m) for m in range(4)))
+            for i, v in _codes(emb, scale, bits).items()
+        )
+        got = sorted(
+            (r["vec_id"], tuple(r["pq_codes"]))
+            for r in pq_encode(emb, cb, bits=bits).collect()
+        )
+        assert got == want
 
 
-def test_pq_topk_sql_numpy_bit_identical(emb, queries, tied_vectors):
-    """Both tiers agree bit for bit on the fixture corpus and on the
-    exact-tie input at k=2 in 4-row Arrow batches, where tied copies
-    come back as the smallest ids."""
+def test_pq_topk_matches_integer_brute_force(emb, queries, tied_vectors):
+    """Equal to exact integer ADC distances over the encoded corpus on
+    the fixture corpus and on the exact-tie input at k=2 in 4-row
+    Arrow batches, where tied copies come back as the smallest ids."""
     tied = tied_vectors
     for corpus, qs, k, batches in (
         (emb, queries, 10, nullcontext()),
         (tied.df, tied.queries, 2, tied.small_batches()),
     ):
-        books = pq_codebooks(corpus, n_subspaces=4, n_codes=16)
+        cb = pq_codebooks(corpus, n_subspaces=4, n_codes=16)
         scale = quantization_scale(corpus)
-        enc = pq_encode(corpus, books)
+        enc = pq_encode(corpus, cb)
+        books = _books(cb)
+        want = _brute_topk(
+            _codes(qs, scale),
+            {r["vec_id"]: r["pq_codes"] for r in enc.collect()},
+            lambda qv, pq: _pq_dist(books, qv, pq), k, asc=True,
+        )
         with batches:
-            a = sorted(
-                map(
-                    tuple, pq_topk(enc, qs, books, scale, k=k).collect()
-                )
+            got = sorted(
+                map(tuple, pq_topk(enc, qs, cb, scale, k=k).collect())
             )
-            b = sorted(
-                map(
-                    tuple,
-                    pq_topk(
-                        enc, qs, books, scale, k=k, method="numpy"
-                    ).collect(),
-                )
-            )
-        assert a == b
-    _assert_smallest_tied(a, tied)
+        assert got == want
+    _assert_smallest_tied(got, tied)
 
 
 def test_kmeans_books_beat_deterministic_on_candidate_recall(emb, queries):
@@ -183,7 +226,7 @@ def test_kmeans_books_beat_deterministic_on_candidate_recall(emb, queries):
             emb, n_subspaces=8, n_codes=64, method=method
         )
         enc = pq_encode(emb, books)
-        c = pq_topk(enc, queries, books, scale, k=100, method="numpy")
+        c = pq_topk(enc, queries, books, scale, k=100)
         return _recall(c, exact)
 
     km, det = cand_recall("kmeans"), cand_recall("deterministic")
@@ -198,8 +241,8 @@ def test_pq_rerank_recovers_float_recall(emb, queries):
     books = pq_codebooks(emb, n_subspaces=8, n_codes=64, method="kmeans")
     scale = quantization_scale(emb)
     enc = pq_encode(emb, books)
-    raw = pq_topk(enc, queries, books, scale, k=10, method="numpy")
-    cand = pq_topk(enc, queries, books, scale, k=100, method="numpy")
+    raw = pq_topk(enc, queries, books, scale, k=10)
+    cand = pq_topk(enc, queries, books, scale, k=100)
     refined = pq_rerank(cand, emb, queries, k=10)
     r_raw, r_ref = _recall(raw, exact), _recall(refined, exact)
     assert r_ref >= r_raw
@@ -244,7 +287,7 @@ def test_zero_vector_quantizes_to_null_and_is_dropped(spark, emb):
 
 
 def test_quantize_sql_numpy_bit_identical(spark, emb):
-    """The Arrow tier's per-dimension sequential norm must reproduce
+    """The Arrow encode's per-dimension sequential norm must reproduce
     the SQL fold exactly — including the zero-vector NULL contract."""
     z = spark.createDataFrame(
         [(99998, [0.0] * 64)], "vec_id long, embedding array<float>"
@@ -263,23 +306,24 @@ def test_quantize_sql_numpy_bit_identical(spark, emb):
         )
 
     a = norm(quantize_embeddings(both, scale=scale))
-    b = norm(quantize_embeddings(both, scale=scale, method="numpy"))
+    b = norm(_quantize_numpy(both, "embedding", "vec_id", 8, scale))
     assert a == b
 
 
-def test_pq_encode_wide_grid_still_bit_identical(emb):
-    """bits=16 pushes the distance bound past the f32-exact window:
-    the GEMM dispatch must fall through to f64 (or int64) and stay
-    bit-identical to the SQL struct-min argmin."""
-    books16 = pq_codebooks(emb, n_subspaces=4, n_codes=16, bits=16)
-    a = sorted(
-        (r["vec_id"], tuple(r["pq_codes"]))
-        for r in pq_encode(emb, books16, bits=16).collect()
+def test_removed_tier_keywords_raise(emb):
+    """The integer operators have one path; a tier keyword is an
+    error, not silently ignored."""
+    from kafka_sparkstreaming_sbt_spark.operators.similarity import (
+        kmeans_centroids,
     )
-    b = sorted(
-        (r["vec_id"], tuple(r["pq_codes"]))
-        for r in pq_encode(
-            emb, books16, bits=16, method="numpy"
-        ).collect()
-    )
-    assert a == b
+
+    for call in (
+        lambda: quantization_scale(emb, method="sql"),
+        lambda: quantize_embeddings(emb, method="numpy"),
+        lambda: quantized_topk(emb, emb, method="sql"),
+        lambda: pq_encode(emb, None, method="sql"),
+        lambda: pq_topk(emb, emb, None, 1.0, method="sql"),
+        lambda: kmeans_centroids(emb, assign_method="sql"),
+    ):
+        with pytest.raises(TypeError):
+            call()

@@ -425,7 +425,21 @@ def test_restart_reruns_uncommitted_batch_with_exact_totals(
         q.processAllAvailable()
     finally:
         q.stop()
+    # the re-run of batch N found its state files written and left its
+    # own as hidden temp files; the next start sweeps them
+    q = start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    orphans = [
+        os.path.join(d, f)
+        for d, _, files in os.walk(os.path.join(ckpt, "state"))
+        for f in files
+        if f.startswith(".") and f.endswith(".tmp")
+    ]
     shutil.rmtree(ckpt, ignore_errors=True)
+    assert orphans == []
     assert sink.runs[n] == 2
     assert sink.totals() == {"1": 10.45, "2": 27.50, "3": 99.99}
 
