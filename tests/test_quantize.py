@@ -165,28 +165,36 @@ def test_pq_encode_codes_in_range(emb):
         assert all(0 <= c < 16 for c in r["pq_codes"])
 
 
-def test_pq_encode_matches_integer_brute_force(emb):
-    """Per subspace the nearest codebook entry by integer squared L2,
-    ties on the smaller code; ``bits=16`` pushes the distance bound
-    past the f32-exact window, so the GEMM must fall through to f64
-    (or int64) and stay exact."""
+def _assert_pq_encode_is_integer_argmin(emb, bits) -> None:
+    """``pq_encode`` (NumPy GEMM argmin) equals, per subspace, the
+    nearest codebook entry by integer squared L2 over the SQL encode's
+    codes, ties on the smaller code."""
     scale = quantization_scale(emb)
-    for bits in (8, 16):
-        cb = pq_codebooks(emb, n_subspaces=4, n_codes=16, bits=bits)
-        books = _books(cb)
+    cb = pq_codebooks(emb, n_subspaces=4, n_codes=16, bits=bits)
+    books = _books(cb)
 
-        def nearest(sub, m):
-            return min(range(16), key=lambda c: _sqdist(sub, books[m, c]))
+    def nearest(sub, m):
+        return min(range(16), key=lambda c: _sqdist(sub, books[m, c]))
 
-        want = sorted(
-            (i, tuple(nearest(v[16 * m:16 * m + 16], m) for m in range(4)))
-            for i, v in _codes(emb, scale, bits).items()
-        )
-        got = sorted(
-            (r["vec_id"], tuple(r["pq_codes"]))
-            for r in pq_encode(emb, cb, bits=bits).collect()
-        )
-        assert got == want
+    want = sorted(
+        (i, tuple(nearest(v[16 * m:16 * m + 16], m) for m in range(4)))
+        for i, v in _codes(emb, scale, bits).items()
+    )
+    got = sorted(
+        (r["vec_id"], tuple(r["pq_codes"]))
+        for r in pq_encode(emb, cb, bits=bits).collect()
+    )
+    assert got == want
+
+
+def test_pq_encode_sql_numpy_bit_identical(emb):
+    _assert_pq_encode_is_integer_argmin(emb, bits=8)
+
+
+def test_pq_encode_wide_grid_still_bit_identical(emb):
+    """``bits=16`` pushes the distance bound past the f32-exact window,
+    so the GEMM must fall through to f64 (or int64) and stay exact."""
+    _assert_pq_encode_is_integer_argmin(emb, bits=16)
 
 
 def test_pq_topk_matches_integer_brute_force(emb, queries, tied_vectors):
